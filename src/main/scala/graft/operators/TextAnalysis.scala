@@ -959,8 +959,9 @@ object TextAnalysis {
         array_join(slice(col("w"), col("st"), lit(8)), " ").as("btxt"))
     // Re-grain to one row per (source, btxt, doc_id) — `bis` packs that
     // doc's occurrence indices of the block text (bounded by document
-    // size). countDistinct(doc_id) per block is then a plain row count
-    // over `occ`, and the occurrence stream is restored by exploding
+    // size). countDistinct(doc_id) per block is then a count of non-NULL
+    // doc_ids over `occ` (a NULL doc_id is no document, as in the oracle's
+    // COUNT(DISTINCT)), and the occurrence stream is restored by exploding
     // `bis` after the join — so BOTH the frequency aggregate and the
     // join side consume the same (source, btxt, doc_id) exchange (AQE
     // reuse) instead of tokenizing the corpus twice. The anchor filter
@@ -971,7 +972,7 @@ object TextAnalysis {
       .agg(collect_list(col("bi")).as("bis"))
       .filter(size(col("bis")) >= 1)
     val freq = occ.groupBy(col("source"), col("btxt"))
-      .agg(count(lit(1)).as("ndocs"))
+      .agg(count(col("doc_id")).as("ndocs"))
     occ.join(freq, Seq("source", "btxt"))
       .select(col("doc_id"), col("source"),
         explode(col("bis")).as("bi"), col("btxt"),

@@ -126,37 +126,56 @@ object Events {
       |GROUP BY 1, 2""".stripMargin))
 
   /** Sketch aggregates (HLL distinct, approx quantiles) next to their exact
-    * counterparts. Raw sketch estimates are engine-specific (HLL++ /
-    * Greenwald-Khanna internals), so instead of emitting unverifiable raw
-    * values the query emits its exact columns PLUS the sketches' documented
-    * error-bound CLAIMS as booleans (|approx−exact| within 5% for HLL
-    * distinct, 2% for the accuracy-10000 median) — deterministic for fixed
-    * data, so the oracle checks the exact columns and that every bound
+    * counterparts. Raw sketch estimates are engine-specific (DataSketches
+    * HLL / Greenwald-Khanna internals), so instead of emitting unverifiable
+    * raw values the query emits its exact columns PLUS the sketches'
+    * documented error-bound CLAIMS as booleans (|approx−exact| within 5% for
+    * HLL distinct, 2% for the accuracy-10000 median) — deterministic for
+    * fixed data, so the oracle checks the exact columns and that every bound
     * holds (`TRUE` literals on the oracle side): the deterministic half is
     * hash-checked and only the raw sketch values stay outside the oracle
-    * (EventsSpec pins those at sf0.001). */
+    * (EventsSpec pins those at sf0.001 and sf0.01). */
   val q19Sketches: Q = Q(
     "q19_events_sketches",
-    (s, dir) => Tables(s, dir, "events")
-      .groupBy(col("event_type"))
-      .agg(
-        countDistinct(col("user_id")).as("exact_users"),
-        count(lit(1)).as("event_count"),
-        // rsd 0.01: the 5% flag is then ~5 standard errors — the DEFAULT
-        // rsd (0.05) measured -6.7% deviation at sf0.1 and tripped it
-        // (graft.tools.SketchDev prints the deviations per sf)
-        approx_count_distinct(col("user_id"), 0.01).as("approx_users"),
-        percentile_approx(col("value"), lit(0.5), lit(10000)).as("approx_median"),
-        expr("percentile(value, 0.5)").as("exact_median"))
-      .select(col("event_type"), col("exact_users"), col("event_count"),
-        (abs(col("approx_users") - col("exact_users")).cast("double") <=
-          col("exact_users") * 0.05).as("approx_users_ok"),
-        (abs(col("approx_median") - col("exact_median")) <=
-          abs(col("exact_median")) * 0.02 + 1e-9).as("approx_median_ok")),
+    (s, dir) => sketches(Tables(s, dir, "events")),
     Some("""SELECT event_type, COUNT(DISTINCT user_id) AS exact_users,
       |  COUNT(*) AS event_count,
       |  TRUE AS approx_users_ok, TRUE AS approx_median_ok
       |FROM events GROUP BY event_type""".stripMargin))
+
+  /** q19 over any (event_type, user_id, value) frame. */
+  def sketches(ev: DataFrame): DataFrame =
+    sketchEstimates(ev)
+      .select(col("event_type"), col("exact_users"), col("event_count"),
+        (abs(col("approx_users") - col("exact_users")).cast("double") <=
+          col("exact_users") * 0.05).as("approx_users_ok"),
+        (abs(col("approx_median") - col("exact_median")) <=
+          abs(col("exact_median")) * 0.02 + 1e-9).as("approx_median_ok"))
+
+  /** Per event_type: exact and DataSketches-HLL distinct users, event
+    * count, approximate and exact median value — q19's raw estimates. */
+  def sketchEstimates(ev: DataFrame): DataFrame = {
+    // Two branches joined on the type, not one aggregate: a countDistinct
+    // next to the other functions makes Spark carry every sketch buffer at
+    // (event_type, user_id) grain, and approx_count_distinct(rsd 0.01) is
+    // HLL++ with 1,639 long buffer columns per group. The distinct users
+    // get their own branch, where an HLL sketch (insert-dedup-invariant)
+    // over the distinct pairs equals the sketch over all events.
+    // lgConfigK 14 puts the RSE near 0.8%, so the 5% flag is ~6 standard
+    // errors out; HLL++ at its default rsd 0.05 measured -6.7% at sf0.1
+    // and tripped it.
+    val users = ev.select(col("event_type"), col("user_id")).distinct()
+      .groupBy(col("event_type"))
+      .agg(
+        count(col("user_id")).as("exact_users"),
+        hll_sketch_estimate(hll_sketch_agg(col("user_id"), 14)).as("approx_users"))
+    val values = ev.groupBy(col("event_type").as("vt"))
+      .agg(
+        count(lit(1)).as("event_count"),
+        percentile_approx(col("value"), lit(0.5), lit(10000)).as("approx_median"),
+        expr("percentile(value, 0.5)").as("exact_median"))
+    users.join(values, col("event_type") <=> col("vt")).drop("vt")
+  }
 
   /** Mergeable HLL sketches (Apache DataSketches built-ins): per-type
     * sketches estimated locally, then UNIONED into a global estimate — the

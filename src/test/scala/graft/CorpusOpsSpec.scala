@@ -158,6 +158,29 @@ class CorpusOpsSpec extends AnyFunSuite {
       array_join(split(trim(col("text")), "\\s+"), " ")).count() == 0)
   }
 
+  test("q108: a NULL doc_id is not a document when counting boilerplate docs") {
+    // the oracle counts COUNT(DISTINCT doc_id), which skips NULL: a header
+    // shared by docs 1, 2 and a NULL-id doc sits in 2 documents (< 3), so it
+    // stays; a third real doc makes it boilerplate, in the NULL doc too
+    val header = (1 to 8).map(i => s"nav$i").mkString(" ")
+    def tail(tag: String) = (1 to 8).map(i => s"$tag$i").mkString(" ")
+    val two = Seq[(Option[Long], String, String)](
+      (Some(1L), "src_a", s"$header ${tail("x")}"),
+      (Some(2L), "src_a", s"$header ${tail("y")}"),
+      (None, "src_a", s"$header ${tail("n")}"))
+    def strip(docs: Seq[(Option[Long], String, String)]) =
+      TextAnalysis.stripBoilerplate(docs.toDF("doc_id", "source", "text"))
+        .collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) ->
+          (r.getLong(3), r.getString(4))).toMap
+    val kept = strip(two)
+    assert(kept.keySet == Set(Some(1L), Some(2L), None))
+    assert(kept.values.forall(_._1 == 0L), s"header counted the NULL doc: $kept")
+    assert(kept(None) == ((0L, s"$header ${tail("n")}")))
+    val dropped = strip(two :+ ((Some(3L), "src_a", s"$header ${tail("z")}")))
+    assert(dropped.values.forall(_._1 == 1L), s"header not stripped: $dropped")
+    assert(dropped(None)._2 == tail("n"))
+  }
+
   test("q110: all unordered source pairs present, tv bounded, degenerate self-distance zero") {
     val out = Curation.q110SourceSimilarity.run(spark, dir).cache()
     val sources = graft.sources.Tables(spark, dir, "documents")

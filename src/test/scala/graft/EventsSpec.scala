@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Events
@@ -42,6 +43,64 @@ class EventsSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(2)))
     assert(rows.exists(_._1 == "__all__"))
     rows.foreach { case (t, _, ok) => assert(ok, s"$t: hll bound violated") }
+  }
+
+  /** q19 as one aggregate (the formulation the two-branch query replaced):
+    * the reference its output must equal, flags included. */
+  private def q19SingleAggregate(ev: DataFrame): DataFrame = ev
+    .groupBy(col("event_type"))
+    .agg(
+      countDistinct(col("user_id")).as("exact_users"),
+      count(lit(1)).as("event_count"),
+      approx_count_distinct(col("user_id"), 0.01).as("approx_users"),
+      percentile_approx(col("value"), lit(0.5), lit(10000)).as("approx_median"),
+      expr("percentile(value, 0.5)").as("exact_median"))
+    .select(col("event_type"), col("exact_users"), col("event_count"),
+      (abs(col("approx_users") - col("exact_users")).cast("double") <=
+        col("exact_users") * 0.05).as("approx_users_ok"),
+      (abs(col("approx_median") - col("exact_median")) <=
+        abs(col("exact_median")) * 0.02 + 1e-9).as("approx_median_ok"))
+
+  test("q19 two-branch plan equals the single-aggregate form on NULL/NaN/duplicate edge cases") {
+    val ev = Seq[(Option[String], Option[Long], Option[Double])](
+      (Some("click"), Some(1L), Some(1.0)),
+      (Some("click"), Some(1L), Some(1.0)),            // duplicate row
+      (Some("click"), Some(2L), Some(5.0)),
+      (Some("click"), None, Some(2.0)),                // NULL user
+      (Some("zero"), Some(3L), Some(0.0)),
+      (Some("zero"), Some(4L), Some(-0.0)),
+      (Some("zero"), Some(4L), Some(-0.0)),
+      (Some("nan"), Some(5L), Some(Double.NaN)),
+      (Some("nan"), Some(6L), Some(7.0)),
+      (Some("nan"), Some(6L), Some(Double.NaN)),
+      (Some("ghost"), None, Some(3.0)),                // every user NULL
+      (Some("ghost"), None, Some(4.0)),
+      (Some("novalue"), Some(7L), None),               // every value NULL
+      (None, Some(8L), Some(1.5)),                     // NULL event_type
+      (None, Some(8L), Some(2.5)),
+      (None, None, Some(3.5)))
+      .toDF("event_type", "user_id", "value")
+    val got = Events.sketches(ev).collect()
+    val want = q19SingleAggregate(ev).collect()
+    assert(got.map(_.toSeq).toSet == want.map(_.toSeq).toSet)
+    assert(got.length == 6 && got.count(_.isNullAt(0)) == 1)
+    val byType = got.map(r => Option(r.getString(0)) -> r).toMap
+    assert(byType(Some("ghost")).getLong(1) == 0L && byType(Some("ghost")).getBoolean(3))
+    assert(byType(None).getLong(1) == 1L && byType(None).getLong(2) == 3L)
+    assert(byType(Some("click")).getLong(1) == 2L && byType(Some("click")).getLong(2) == 4L)
+  }
+
+  test("q19 raw DataSketches HLL estimates stay within 5% of exact distinct users") {
+    for (dir <- Seq(TestSpark.sf0001, TestSpark.sf001)) {
+      val raw = Events.sketchEstimates(graft.sources.Tables(spark, dir, "events"))
+        .select(col("event_type"), col("exact_users"), col("approx_users"))
+        .as[(String, Long, Long)].collect()
+      assert(raw.nonEmpty)
+      raw.foreach { case (t, exact, approx) =>
+        assert(exact > 0 && math.abs(approx - exact).toDouble / exact <= 0.05,
+          s"$dir $t: exact=$exact approx=$approx")
+      }
+    }
   }
 
   test("stratified sample respects per-stratum fractions") {

@@ -15,7 +15,7 @@ class PlanAuditSpec extends AnyFunSuite {
   /** Queries whose nested-loop stage is the documented point of the plan:
     * all-pairs oracle ground truths (q34), corpus×broadcast(tiny) probes
     * (q35 brute-force baseline, q37's 8×10 centroid probe, q65's ADC
-    * codebook, q84's one-row stats relation, q19/q49/q51-style 1-row
+    * codebook, q84's one-row stats relation, q49/q51-style 1-row
     * summary cross joins). */
   private val deliberate: Set[String] = Set(
     "q34_dedup_embedding",   // all-pairs cosine ground truth (scale path: q36/q38)
@@ -26,7 +26,6 @@ class PlanAuditSpec extends AnyFunSuite {
     "q87_vocab_report",      // one-row summary broadcast
     "q89_domain_mixture",    // 20-row rate table cross onto per-source agg
     "q95_heavy_hitters",     // one-row N total broadcast
-    "q19_events_sketches",   // one-row exact-totals cross for error flags
     "q49_hll_union",         // one-row overall-union cross
     "q61_contamination",     // broadcast benchmark-shingle probe set
     "q45_profile",           // one-row table-totals cross

@@ -62,11 +62,13 @@ class ReuseShapeSpec extends AnyFunSuite {
     "q67_curation_pipeline" -> 3, // was 5: quality+fingerprint+spine fused
     "q102_bigram_lm" -> 2,     // was 3: notNull bigram keys unify the count copies
     "q103_dsir_weights" -> 2,  // was 3: same
-    // r19 (OPTIMIZATION_r19.md):
+    // r19 (CHANGES.md):
     "q108_boilerplate_strip" -> 1, // was 2: (source,btxt,doc_id) occurrence-pack
                                    // aggregate read by both freq and the join
-    "q100_chi2_terms" -> 1)    // was 2: class totals = the null-term sentinel
+    "q100_chi2_terms" -> 1,    // was 2: class totals = the null-term sentinel
                                // group of the one term-keyed aggregate
+    "q19_events_sketches" -> 2) // one pruned events scan per branch
+                                // (distinct users | values), joined on type
 
   for ((name, cap) <- maxScans.toSeq.sortBy(_._1)) {
     test(s"$name executed plan holds its deduplicated scan count (<= $cap)") {
