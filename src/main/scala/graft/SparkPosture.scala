@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Cluster-posture session settings shared by the harness mains
-  * (Verify/Bench/TimeQ/VerifyOne/ExplainExec).
+  * (Verify/Bench and the `graft.tools` mains, via `session`).
   *
   * `spark.io.compression.codec=zstd`: the sf100 decade showed the
   * single-disk shuffle path is BYTES-bound, not CPU-bound — q74's 600M-row
@@ -36,8 +36,8 @@ object SparkPosture {
   private val settings: Seq[(String, String)] = Seq(
     "spark.io.compression.codec" -> "zstd",
     "spark.shuffle.file.buffer" -> "1m",
-    // Janino compile cache sized to the workload (r19, measured with
-    // tools/CodegenCensus at sf0.1): one full registry pass compiles ~870
+    // Janino compile cache sized to the workload (r19, measured at sf0.1;
+    // PLANS.md "Codegen census"): one full registry pass compiles ~870
     // distinct generated classes (WholeStageCodegen units + unsafe
     // projections/orderings/predicates, mean ~12-16 ms each), so Spark's
     // default 100-entry LRU thrashes completely — EVERY warm pass
@@ -82,4 +82,17 @@ object SparkPosture {
 
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     effective.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The one way a harness main builds its session: the posture,
+    * `local[cpus]`, `shuffle` partitions, session time zone UTC (matches
+    * the oracle and Verify) and no UI. Callers set their own log level. */
+  def session(cpus: String, shuffle: String): SparkSession =
+    apply(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shuffle)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
+  def session(cpus: String): SparkSession = session(cpus, cpus)
 }

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -26,12 +26,7 @@ object Verify {
     // at ANY shuffle.partitions (a cluster runs thousands, the gate runs
     // cpus). Default stays cpus — the driver contract is unchanged.
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkPosture(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkPosture.session(cpus, shuffle)
     // ERROR: the registry's bounded global windows WARN once per query and
     // the spam buries the real signal — [verify] failure lines go through
     // System.err directly and are unaffected by the log level.
@@ -99,7 +94,7 @@ object Verify {
           val (m, d) = (memSpill.getAndSet(0L), diskSpill.getAndSet(0L))
           println(f"[spill] $name mem_mb=${m / 1e6}%.1f disk_mb=${d / 1e6}%.1f")
         }
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

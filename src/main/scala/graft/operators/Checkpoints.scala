@@ -1,6 +1,7 @@
 package graft.operators
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -66,7 +67,7 @@ object Checkpoints {
   /** Unpersist ONE superseded checkpoint now (loop-iterate eviction). */
   def drop(df: DataFrame): Unit = rddOf(df).foreach { r =>
     live.remove((df.sparkSession, r.id))
-    try r.unpersist(blocking = false) catch { case _: Throwable => () }
+    try r.unpersist(blocking = false) catch { case NonFatal(_) => () }
   }
 
   /** Unpersist every checkpoint still tracked for `spark` and drop its
@@ -74,11 +75,11 @@ object Checkpoints {
   def release(spark: SparkSession): Unit = {
     live.keys.filter(_._1 eq spark).foreach { k =>
       live.remove(k).foreach(r =>
-        try r.unpersist(blocking = false) catch { case _: Throwable => () })
+        try r.unpersist(blocking = false) catch { case NonFatal(_) => () })
     }
     hooked.remove(spark).foreach { l =>
       try spark.sparkContext.removeSparkListener(l) catch {
-        case _: Throwable => ()
+        case NonFatal(_) => ()
       }
     }
   }

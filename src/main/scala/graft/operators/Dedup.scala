@@ -1,6 +1,7 @@
 package graft.operators
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -100,12 +101,12 @@ object Dedup {
   def releaseCaches(spark: SparkSession): Unit = {
     memoCache.keys.filter(_._1 eq spark).foreach { k =>
       memoCache.remove(k).foreach(df => try df.unpersist(blocking = false) catch {
-        case _: Throwable => () // session already stopped: nothing to free
+        case NonFatal(_) => () // session already stopped: nothing to free
       })
     }
     hookedSessions.remove(spark).foreach { l =>
       try spark.sparkContext.removeSparkListener(l) catch {
-        case _: Throwable => () // context already stopped: nothing to remove
+        case NonFatal(_) => () // context already stopped: nothing to remove
       }
     }
     // the iterative operators' localCheckpoint blocks (final CC/PageRank/BPE
@@ -123,7 +124,7 @@ object Dedup {
   def releaseCachesFor(spark: SparkSession, dir: String): Unit =
     memoCache.keys.filter(k => (k._1 eq spark) && k._2 == dir).foreach { k =>
       memoCache.remove(k).foreach(df => try df.unpersist(blocking = false) catch {
-        case _: Throwable => () // session already stopped: nothing to free
+        case NonFatal(_) => () // session already stopped: nothing to free
       })
     }
 

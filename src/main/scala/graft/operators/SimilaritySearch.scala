@@ -993,8 +993,8 @@ object SimilaritySearch {
     semdedupPrune(sampleTrainedAssignment(s, dir, iters, sampleCap), tau)
 
   /** The bounded md5-rank training sample (q88's carve-out mechanism) —
-    * ONE definition shared by `sampleTrainedAssignment` and
-    * SemdedupTrainProbe so the measured rung is the shipped rung.
+    * ONE definition, so the rung measured in PLANS.md ("SemDeDup training
+    * rung") is the shipped rung.
     * Repartition after the sort-LIMIT: the limit emits the sample as ONE
     * partition, and without the exchange every Lloyd iteration over it
     * runs single-threaded — measured SLOWER than full-corpus training at

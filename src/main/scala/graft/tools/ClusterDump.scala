@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkPosture
 
 /** Dump the PRODUCTION embedding-cluster form at arbitrary settings in
@@ -29,11 +28,7 @@ object ClusterDump {
     val bits = if (args.length > 3) args(3).toInt else 8
     val thr = if (args.length > 4) args(4).toDouble else 0.9
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkPosture(SparkSession.builder()).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkPosture.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     graft.operators.SimilaritySearch

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkPosture
 
 /** Dump `SimilaritySearch.lshPairs` at an arbitrary (bands, bits,
@@ -17,12 +16,7 @@ object DumpLshPairs {
     val Array(sfDir, outDir, bands, bits, thr) = args.take(5)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkPosture(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkPosture.session(cpus, shuffle)
     spark.sparkContext.setLogLevel("WARN")
     graft.operators.SimilaritySearch
       .lshPairs(spark, sfDir, bands.toInt, bits.toInt, thr.toDouble)

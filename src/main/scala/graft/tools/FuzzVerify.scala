@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import scala.util.Random
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -386,12 +387,7 @@ object FuzzVerify {
     val n = args.lift(2).map(_.toInt).getOrElse(50)
     val seed0 = args.lift(3).map(_.toLong).getOrElse(42L)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkPosture.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     val insts = instances(seed0, n)
@@ -400,7 +396,7 @@ object FuzzVerify {
       try {
         val df = inst.run(spark, sfDir)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         failed += 1
         System.err.println(s"[fuzz] $name failed: ${e.getMessage}")
       }

@@ -39,12 +39,7 @@ object MlDedupBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkPosture.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     def timed[A](tag: String)(f: => A): A = {
@@ -54,8 +49,8 @@ object MlDedupBench {
       r
     }
 
-    // JVM/codegen warmup, as graft.Bench does
-    try graft.SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    // JVM/codegen warm-up, as graft.Bench does
+    graft.Bench.materialize(graft.SparkEntry.entry(spark))
 
     val ml = timed("spark.ml MinHashLSH (8 tables)") {
       mlPairs(spark, dir, 0.5).count()

@@ -3,26 +3,16 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.OlistPipeline
-import graft.operators.Curation
 
-/** End-to-end flagship bench (VERDICT r7 item 4): times the two E2E paths
-  * that were spec-tested but never timed —
+/** Olist-shaped CSV corpus generator for the paper's pipeline
+  * (`OlistPipeline`): the `olist_etl_5k` benchmark workload and
+  * `OlistPipelineSpec` read what `generate` writes.
   *
-  *  1. `OlistPipeline.runPipeline` (raw CSV load → dim_locations →
-  *     master_table) over a generated Olist-shaped corpus at real-dataset
-  *     scale (~100k orders) and at 8×, plus the master build's executed
-  *     plan (broadcast dims, one order_id shuffle family);
-  *  2. `Curation.exportEpoch` (curation survivors → epoch shuffle →
-  *     token-budget shard packing → partitioned write) at sf0.1 and the 8×
-  *     probe corpus.
-  *
-  * The CSV generator is fully deterministic (id-hash-derived columns, no
+  * The generator is fully deterministic (id-hash-derived columns, no
   * RNG) and distribution-shaped like the real Olist dump: ~1.1 items and
   * ~1.04 payments per order, 1 review per order, 1 customer row per order,
   * sellers ≈ orders/30, products ≈ orders/3, geolocation ≈ 10× orders
   * (the dim build's dedup dominates, as it does on the real data).
-  *
-  * Usage: bash tools/run.sh graft.tools.PipelineBench <workDir> [scale8=1]
   */
 object PipelineBench {
 
@@ -153,66 +143,5 @@ object PipelineBench {
       categories.map(c => (c, c.replace('_', ' '))))
       .toDF("product_category_name", "product_category_name_english"),
       dir, "product_category_name_translation.csv")
-  }
-
-  private def time[A](label: String)(f: => A): A = {
-    System.gc()
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[pipeline-bench] $label t=${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
-  }
-
-  def main(args: Array[String]): Unit = {
-    val work = args.headOption.getOrElse("/tmp/plbench")
-    val scales: Seq[(String, Long)] =
-      if (args.length > 1 && args(1) == "0") Seq(("1x", 100000L))
-      else Seq(("1x", 100000L), ("8x", 800000L))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    scales.foreach { case (tag, n) =>
-      val src = s"$work/src_$tag"; val lake = s"$work/lake_$tag"
-      generate(spark, src, n)
-      time(s"runPipeline $tag ($n orders)") {
-        OlistPipeline.runPipeline(spark, src, lake)
-      }
-      val master = spark.read.parquet(s"$lake/master_table.parquet")
-      println(s"[pipeline-bench] master rows $tag = ${master.count()}")
-    }
-
-    // Master build executed plan (1x): evidence of broadcast dims + the
-    // single order_id shuffle family.
-    val lake1 = s"$work/lake_1x"
-    def read(t: String) = spark.read.parquet(s"$lake1/$t.parquet")
-    val masterDf = OlistPipeline.buildMaster(
-      read("orders"), read("order_items"), read("order_payments"),
-      read("order_reviews"), read("products"),
-      read("product_category_name_translation"),
-      read("customers"), read("sellers"), read("dim_locations"))
-    masterDf.collect()
-    val plan = masterDf.queryExecution.executedPlan.toString()
-    val lines = plan.linesIterator.filter { l =>
-      l.contains("Exchange") || l.contains("Join") || l.contains("Aggregate")
-    }.map(_.replaceAll("#\\d+L?", "").take(150)).take(40).mkString("\n")
-    println(s"[pipeline-bench] master executed-plan skeleton (1x):\n$lines")
-
-    Seq("sf0.1" -> "/root/testdata/sf0.1", "8x" -> "/tmp/sfbig").foreach {
-      case (tag, dir) =>
-        if (new java.io.File(dir).exists()) {
-          val out = time(s"exportEpoch $tag") {
-            Curation.exportEpoch(spark, dir, s"$work/epoch_$tag", epoch = 1)
-          }
-          println(s"[pipeline-bench] epoch rows $tag = ${out.count()}, " +
-            s"shards = ${out.select("shard_id").distinct().count()}")
-        }
-    }
-    spark.stop()
   }
 }

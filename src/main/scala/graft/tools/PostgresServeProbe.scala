@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Spark side of the real-Postgres serving round-trip (closes the r14
   * "missing #2" carry as far as this sandbox allows). The reference serves
   * Superset from Postgres via pandas `to_sql` (docker-compose.yml:21-47,
@@ -31,12 +29,7 @@ object PostgresServeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/pg_serve")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkPosture.session("8")
     spark.sparkContext.setLogLevel("ERROR")
 
     val m = graft.operators.Master(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Ranks
 
@@ -30,11 +29,7 @@ object RanksWidthProbe {
     val mode = args.headOption.getOrElse("thinned")
     val parts = args.lift(1).map(_.toInt).getOrElse(1024)
     val nRows = args.lift(2).map(_.toLong).getOrElse(2000000L)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkPosture.session("8", parts.toString)
     spark.sparkContext.setLogLevel("WARN")
 
     val n = nRows

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Long-lived-driver soak (follows the r15 checkpoint-leak fix): a serving
   * driver that runs the dedup/similarity family per request must hold ZERO
@@ -27,12 +27,7 @@ object SessionSoak {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val rounds = args.lift(1).map(_.toInt).getOrElse(5)
-    val root = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val root = graft.SparkPosture.session("8")
     root.sparkContext.setLogLevel("ERROR")
 
     // --- serve-loop fixtures (built once; per-cycle work reads them) ---
@@ -131,7 +126,7 @@ object SessionSoak {
       if (java.nio.file.Files.exists(p))
         java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
           .foreach(f => try java.nio.file.Files.delete(f)
-                        catch { case _: Throwable => () })
+                        catch { case NonFatal(_) => () })
     }
     rmTree(lakeDir); rmTree(streamDir)
     if (failed || !heapOk) sys.exit(1)

@@ -1,17 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{SparkEntry, SparkPosture}
 
 /** Flagship smoke for tools/gate.sh: the driver's rows>0 check, runnable
   * locally so a round can never snapshot a build that fails it. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkPosture.session("4")
     spark.sparkContext.setLogLevel("WARN")
     val n = SparkEntry.entry(spark).count()
     spark.stop()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.operators.TextAnalysis
@@ -32,12 +31,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val runSecs = args.headOption.map(_.toInt).getOrElse(30)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkPosture.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -2,8 +2,8 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
+import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -56,14 +56,9 @@ object StreamScaleBench {
     val joinType = args.lift(2).getOrElse("inner")
     val workDir = args.lift(3).getOrElse("/tmp/stream_scale")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // one progress record per micro-batch must survive to the end
-      .config("spark.sql.streaming.numRecentProgressUpdates", (chunks + 16).toString)
-      .getOrCreate()
+    val spark = graft.SparkPosture.session(cpus)
+    // one progress record per micro-batch must survive to the end
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", (chunks + 16).toString)
     spark.sparkContext.setLogLevel("ERROR")
 
     // --- phase A: corpus → ts-ordered chunk files -----------------------
@@ -137,7 +132,7 @@ object StreamScaleBench {
               ()
           }.start()
         val err = try { started.awaitTermination(); None }
-          catch { case e: Throwable => Some(e) }
+          catch { case NonFatal(e) => Some(e) }
         val wall = (System.nanoTime() - a0) / 1e9
         val startup = firstBatchNs.get() match {
           case -1L => wall

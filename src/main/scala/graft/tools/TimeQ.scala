@@ -1,11 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkPosture
 import graft.SparkEntry
 
-/** Time individual registry queries under driver bench conditions
-  * (local[N], shuffle.partitions=N). Usage:
+/** Quick `count()` timing of individual registry queries in the harness
+  * session (local[N], shuffle.partitions=N); `graft.Bench` times the
+  * materialized result. Usage:
   *   runMain graft.tools.TimeQ <sfDir> <qname> [<qname> ...]
   * Repeats the LIST order given — pass a query twice to see warm timings. */
 object TimeQ {
@@ -18,14 +18,9 @@ object TimeQ {
     // spill. Set SPARK_GRAFT_SHUFFLE above the core count and let AQE
     // coalesce small stages back down; the driver-gate default stays cpus.
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkPosture(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC") // match driver/Verify
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkPosture.session(cpus, shuffle)
     spark.sparkContext.setLogLevel("WARN")
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    SparkEntry.entry(spark).count() // untimed JVM/codegen warm-up
     names.foreach { name =>
       System.gc()
       val t0 = System.nanoTime()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.SparkPosture
 import graft.SparkEntry
 
@@ -16,12 +15,7 @@ object VerifyOne {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     // sf>=10 probes want more reduce partitions than cores (see TimeQ)
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkPosture(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkPosture.session(cpus, shuffle)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>

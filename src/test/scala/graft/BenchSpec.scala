@@ -1,0 +1,59 @@
+package graft
+
+import java.nio.file.Files
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Drives `Bench.sweep`/`Bench.report` with a tiny registry: a query is
+  * timed by materializing every column, a failure is a status and an exit
+  * code (never a sample), and a clean query gets one sample per pass. */
+class BenchSpec extends AnyFunSuite {
+  private val spark = TestSpark.spark
+
+  // The non-key column throws when evaluated; count() never evaluates it.
+  private val poisoned: Bench.Query = (s, _) =>
+    s.range(100).select(col("id"),
+      when(col("id") >= 0, raise_error(lit("poisoned column evaluated"))).as("payload"))
+  private val throwing: Bench.Query = (_, _) =>
+    throw new IllegalStateException("query construction failed")
+  private val clean: Bench.Query = (s, _) => s.range(10).toDF()
+
+  test("a query whose non-key column throws is failed, although count() passes") {
+    assert(poisoned(spark, "").count() == 100)
+    val run = Bench.sweep(spark, "", Seq("q_poisoned" -> poisoned), passes = 2)
+    assert(run.status("q_poisoned").startsWith("failed: "))
+    assert(run.status("q_poisoned").contains("poisoned column evaluated"))
+    assert(!run.samples.contains("q_poisoned"))
+    assert(run.failed == 1)
+  }
+
+  test("a throwing query is failed, contributes no sample and signals a non-zero exit") {
+    val run = Bench.sweep(spark, "",
+      Seq("q_clean" -> clean, "q_throwing" -> throwing), passes = 2)
+    assert(run.status("q_throwing") ==
+      "failed: java.lang.IllegalStateException: query construction failed")
+    assert(!run.samples.contains("q_throwing"))
+    assert(run.exitCode != 0)
+    val out = Files.createTempDirectory("bench-spec").resolve("bench.json")
+    val line = Bench.report(run, "sfX", "4", 2, out.toString)
+    assert(line.contains("\"failed\":1,"))
+    val artifact = Files.readString(out)
+    Files.delete(out); Files.delete(out.getParent)
+    assert(artifact.contains(
+      "\"q_throwing\":{\"status\":\"failed: java.lang.IllegalStateException"))
+    assert(artifact.contains("\"q_clean\":{\"status\":\"ok\",\"samples\":["))
+    // the total is the clean query's median alone
+    val total = "\"value\":([0-9.]+)".r.findFirstMatchIn(line).get.group(1).toDouble
+    val cleanMed = "\"queries\":\\{\"q_clean\":([0-9.]+)\\}".r
+      .findFirstMatchIn(artifact).get.group(1).toDouble
+    assert(total == cleanMed)
+  }
+
+  test("a clean query gets one sample per pass and status ok") {
+    val run = Bench.sweep(spark, "", Seq("q_clean" -> clean), passes = 3)
+    assert(run.status("q_clean") == "ok")
+    assert(run.samples("q_clean").length == 3)
+    assert(run.samples("q_clean").forall(_ > 0))
+    assert(run.failed == 0 && run.exitCode == 0)
+  }
+}
