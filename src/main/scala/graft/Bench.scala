@@ -6,7 +6,10 @@ import scala.collection.mutable
 import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Registry bench: a materialized sweep over `SparkEntry.queries`.
+/** Registry bench: a materialized sweep over `SparkEntry.queries`, or over
+  * the queries named as arguments (an unknown name fails before anything
+  * runs):
+  *   `bash tools/run.sh graft.Bench [qname ...]`
   *
   * Each query is timed as a `noop` write — every column of every row is
   * computed, which is what a user of the result waits for (`count()`
@@ -68,6 +71,18 @@ object Bench {
     def failed: Int = failures.size
     def exitCode: Int = if (failed > 0) 1 else 0
   }
+
+  /** The queries to sweep: the whole `registry` in name order when `names`
+    * is empty, else exactly `names` in the given order (repeats dropped).
+    * Throws `IllegalArgumentException` naming every unknown query. */
+  private[graft] def select(registry: Map[String, Query],
+      names: Seq[String]): Seq[(String, Query)] =
+    if (names.isEmpty) registry.toSeq.sortBy(_._1)
+    else {
+      val unknown = names.filterNot(registry.contains)
+      require(unknown.isEmpty, s"unknown query: ${unknown.mkString(", ")}")
+      names.distinct.map(n => n -> registry(n))
+    }
 
   /** Compute every column of every row of `df` and discard the result:
     * the bench's timed unit. */
@@ -156,6 +171,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    val named = select(SparkEntry.queries, args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt.max(1)
@@ -172,7 +188,7 @@ object Bench {
     try materialize(SparkEntry.entry(spark)) catch { case NonFatal(e) =>
       System.err.println(s"[bench] warm-up failed: ${e.getMessage}")
     }
-    val run = sweep(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1), passes)
+    val run = sweep(spark, sfDir, named, passes)
     graft.operators.Dedup.releaseCaches(spark) // free memoized persists
     println(report(run, sfDir, cpus, passes, outPath))
     spark.stop()

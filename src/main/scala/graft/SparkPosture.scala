@@ -20,13 +20,9 @@ import org.apache.spark.sql.SparkSession
   * which is None over raw parquet scans, so a forced filter at 100×
   * corpus saturates its default 1M-item bitmap (FPP→1, all cost no
   * pruning — measured at sf100: bloom alone bought 21%, zstd 5-7×).
-  * Catalog-stats mode (sources.Tables.statsMode) supplies real
-  * rowCounts — and the round-12 probes showed table-level stats are
-  * STILL not enough for sized blooms (rowCount dies at the first
-  * unpriced Filter; column stats are the mechanism, `full` mode), while
-  * the default bloom caps (maxNumItems 4M / 64M bits) bound what sizing
-  * can buy at 25M-key creation sides regardless. Probes can still
-  * enable/raise everything per-run via GRAFT_SPARK_OPTS.
+  * The default bloom caps (maxNumItems 4M / 64M bits) bound what sizing
+  * can buy at 25M-key creation sides regardless (PLANS.md "Round-12: catalog-stats mode").
+  * Probes can still enable/raise everything per-run via GRAFT_SPARK_OPTS.
   *
   * Every setting yields to an explicit `-Dspark.*` system property
   * (GRAFT_SPARK_OPTS in tools/run.sh) so probes can A/B alternatives
@@ -65,14 +61,7 @@ object SparkPosture {
     // At cluster scale reducer counts are in the thousands, so bypass
     // never applied there anyway — this only changes constrained/local
     // wide-shuffle behavior from OOM to spill.
-    "spark.shuffle.sort.bypassMergeThreshold" -> "32") ++
-    // Catalog-stats mode (sources.Tables.statsMode): leaf rowCounts only
-    // reach the optimizer's Statistics visitor — and thus runtime
-    // bloom-filter sizing — when plan stats are on; keep the flag tied to
-    // the mode so the default path-scan posture is unchanged.
-    (if (graft.sources.Tables.statsMode)
-      Seq("spark.sql.cbo.planStats.enabled" -> "true")
-    else Nil)
+    "spark.shuffle.sort.bypassMergeThreshold" -> "32")
 
   /** The pairs `apply` will set: the posture minus any key the launcher
     * already pinned with -Dspark.* (SparkConf loads system properties, and

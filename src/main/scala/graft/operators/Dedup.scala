@@ -53,21 +53,15 @@ object Dedup {
     * at 2 GiB passed. Serialized blocks are byte-exact accounted and ~4×
     * smaller (the same finding that moved the CC edge checkpoint to SER at
     * sf100, r12), so small heaps trade per-reuse deserialization CPU for
-    * survival. Auto: SER below a 6 GiB max heap; `GRAFT_MEMO_SER`=1/0
-    * forces either side for probes. */
-  /** Pure selection logic, split out so the spec can pin every branch
-    * without forking a JVM per heap size (MemoLevelSpec). */
-  private[graft] def memoLevelFor(forced: Option[String],
-      maxHeapBytes: Long): StorageLevel = forced match {
-    case Some("1") => StorageLevel.MEMORY_AND_DISK_SER
-    case Some("0") => StorageLevel.MEMORY_AND_DISK
-    case _ =>
-      if (maxHeapBytes < (6L << 30)) StorageLevel.MEMORY_AND_DISK_SER
-      else StorageLevel.MEMORY_AND_DISK
-  }
+    * survival: SER below a 6 GiB max heap. A pure function of the heap
+    * size, so the spec can pin both sides without forking a JVM per heap
+    * size (MemoLevelSpec). */
+  private[graft] def memoLevelFor(maxHeapBytes: Long): StorageLevel =
+    if (maxHeapBytes < (6L << 30)) StorageLevel.MEMORY_AND_DISK_SER
+    else StorageLevel.MEMORY_AND_DISK
 
   private[operators] val memoLevel: StorageLevel =
-    memoLevelFor(sys.env.get("GRAFT_MEMO_SER"), Runtime.getRuntime.maxMemory)
+    memoLevelFor(Runtime.getRuntime.maxMemory)
 
   private val memoCache = TrieMap.empty[(SparkSession, String, String), DataFrame]
   private val hookedSessions =

@@ -219,22 +219,17 @@ object Learn {
     * web-scale corpus yields 10⁸–10¹⁰ distinct bigrams (tens of GB), and
     * Spark hard-fails any broadcast above 8 GB, so an unconditionally
     * forced `broadcast()` hint is a scale-killer at the 100 TB design
-    * point. memoLevel-style (Dedup.scala) pure decision + env override:
-    * hint the broadcast only while the documents corpus's ON-DISK
-    * footprint — one filesystem metadata call, valid on HDFS/S3 via the
-    * Hadoop FS API, and a hard upper bound on the LM's distinct-bigram
+    * point. memoLevel-style (Dedup.scala) pure decision: hint the
+    * broadcast only while the documents corpus's ON-DISK footprint — one
+    * filesystem metadata call, valid on HDFS/S3 via the Hadoop FS API, and a hard upper bound on the LM's distinct-bigram
     * row count since the aggregate can't outgrow its input's occurrences —
     * stays under the cap. Above the cap the join is left UNHINTED: it
     * plans as a shuffle join, and AQE may still upgrade it to a broadcast
     * at runtime from the MEASURED post-aggregate size (the decision we
     * actually want on a cluster — LmJoinGuardSpec pins both directions
     * and the un-hinted path's hash-exactness). */
-  private[graft] def lmBroadcastFor(forced: Option[String],
-      corpusBytes: Long, capBytes: Long): Boolean = forced match {
-    case Some("1") => true
-    case Some("0") => false
-    case _ => corpusBytes > 0 && corpusBytes <= capBytes
-  }
+  private[graft] def lmBroadcastFor(corpusBytes: Long, capBytes: Long): Boolean =
+    corpusBytes > 0 && corpusBytes <= capBytes
 
   /** Test hook (LmJoinGuardSpec's planted large-vocab fixture): lets one
     * JVM exercise both sides of the cap without env forks. Production
@@ -245,8 +240,7 @@ object Learn {
     * (sf100's documents ≈ 0.6 GB) with the forced-hint plan the sf10/sf100
     * adjudications certified, while any real multi-TB corpus degrades to
     * the shuffle join. */
-  private[graft] def lmBroadcastCap: Long = lmBroadcastCapOverride.getOrElse(
-    sys.env.get("GRAFT_LM_BROADCAST_CAP").map(_.toLong).getOrElse(1L << 30))
+  private[graft] def lmBroadcastCap: Long = lmBroadcastCapOverride.getOrElse(1L << 30)
 
   private[graft] def corpusBytes(
       s: org.apache.spark.sql.SparkSession, dir: String): Long = {
@@ -257,8 +251,7 @@ object Learn {
 
   private def lmHinted(s: org.apache.spark.sql.SparkSession, dir: String,
       lm: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (lmBroadcastFor(sys.env.get("GRAFT_LM_BROADCAST"),
-        corpusBytes(s, dir), lmBroadcastCap)) broadcast(lm)
+    if (lmBroadcastFor(corpusBytes(s, dir), lmBroadcastCap)) broadcast(lm)
     else lm
 
   /** q102 — bigram language-model fluency scoring (the KenLM-style

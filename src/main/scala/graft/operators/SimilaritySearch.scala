@@ -440,20 +440,6 @@ object SimilaritySearch {
       bitsPerBand: Int, threshold: Double): DataFrame =
     withClusterSizes(clusterLabels(spark, dir, bands, bitsPerBand, threshold))
 
-  /** Cluster stage over an ALREADY-MATERIALIZED pair relation
-    * (vec_a, vec_b, cosine) — the exact composition `embeddingClusters`
-    * applies after `lshPairs`, exposed separately for the restart/audit
-    * path a production pipeline actually has: candidate pairs are the
-    * expensive stage and get persisted (and independently verified —
-    * tools/check_lsh_sampled.py), so clustering re-runs from the stored
-    * relation instead of re-deriving ~N·bands shuffle rows. Same
-    * connectedComponents + size-window body as the registry q111, so the
-    * two can't drift. */
-  def clustersFromPairs(pairs: DataFrame, threshold: Double): DataFrame =
-    withClusterSizes(Dedup.connectedComponents(
-      pairs.filter(col("cosine") >= threshold)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))))
-
   /** lshPairs edges → min-label component labels (doc_id, cluster_rep) —
     * the single body both the probe form and the memoized registry entry
     * compose, so the two can't drift. */

@@ -36,11 +36,6 @@ object Tables {
     new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Catalog-stats mode bypasses the memo: the catalog table is already
-    // session-cached by name, and specs flip statsModeOverride inside one
-    // session — a memoized path-scan plan would silently outlive the flip
-    // (caught by PlanAuditSpec's dual-posture audit).
-    if (statsMode) return build(spark, dir, name)
     val bySession = memo.synchronized {
       var m = memo.get(spark)
       if (m == null) {
@@ -73,102 +68,8 @@ object Tables {
       read(spark, dir, name)
     }
 
-  /** Path scan, or the ANALYZEd catalog table in stats mode. */
   private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (statsMode) analyzedTable(spark, dir, name)
-    else spark.read.parquet(s"$dir/$name.parquet")
-
-  /** Catalog-stats mode (`GRAFT_CATALOG_STATS=1`): route table reads
-    * through external catalog tables with COMPUTEd statistics instead of
-    * bare path scans.
-    *
-    * Why: a path-based parquet scan has NO rowCount statistic — only a
-    * byte size — so (a) Catalyst's runtime bloom filters fall back to the
-    * 1M-item `expectedNumItems` default, which saturates (FPP→1) against
-    * the 25M-key creation sides of a 100× corpus (measured at sf100:
-    * forced bloom on q74 bought 21% where a sized one should prune most
-    * of the probe side), and (b) CBO/plan-stats estimates degrade to
-    * size-only guesses. A production deployment reads through a catalog
-    * (metastore/Unity/Glue) where ANALYZE-maintained rowCounts exist;
-    * this mode reproduces that posture for the file-only harness. Pair
-    * with `spark.sql.cbo.planStats.enabled=true` (set it in
-    * [[graft.SparkPosture]] via GRAFT_SPARK_OPTS or the same env) so
-    * leaf rowCounts actually reach the optimizer's Statistics visitor.
-    *
-    * Registration is session-idempotent and dir-distinct (table name
-    * carries a hash of the path); ANALYZE's COUNT(*) is footer-cheap
-    * over parquet. Results are identical to the path scan — the full
-    * registry is oracle-swept in this mode (see PLANS.md). */
-  /** Test hook: lets a single-JVM spec exercise BOTH catalog-stats
-    * postures (PlanAuditSpec's executed-plan audit) — the env var can't
-    * change after fork. Production mains never set it. The overriding
-    * spec must also set `spark.sql.cbo.planStats.enabled` itself:
-    * SparkPosture only reads the mode at session build time. */
-  @volatile private[graft] var statsModeOverride: Option[String] = None
-
-  def statsMode: Boolean = statsModeOverride match {
-    case Some(v) => v == "1" || v == "full"
-    case None =>
-      sys.env.get("GRAFT_CATALOG_STATS").exists(v => v == "1" || v == "full")
-  }
-
-  /** `GRAFT_CATALOG_STATS=full` additionally computes COLUMN statistics
-    * (ndv/min/max per column). Table-level rowCount alone dies at the
-    * first Filter above the scan: FilterEstimation cannot price a
-    * predicate without column stats, so the post-filter rowCount reverts
-    * to None and the runtime bloom falls back to its 1M default anyway —
-    * observed on the q74 date window at sf10. Column stats cost one extra
-    * aggregate pass per table at registration; a metastore deployment
-    * would maintain them incrementally. */
-  private def fullStats: Boolean = statsModeOverride match {
-    case Some(v) => v == "full"
-    case None => sys.env.get("GRAFT_CATALOG_STATS").contains("full")
-  }
-
-  /** Stats are computed ONCE per (session, dir, table) at first
-    * registration — the catalog-deployment contract, where ANALYZE runs
-    * on ingest, not per query. If the parquet at the location is
-    * rewritten IN PLACE mid-session, rowCount/column stats go silently
-    * stale: results are unaffected (stats feed only the optimizer) but
-    * blooms/estimates are mis-sized until `ANALYZE` reruns or the session
-    * restarts. The engine's own writers never rewrite a read-registered
-    * location in place (staged-swap writes go to fresh paths), so this is
-    * only reachable by out-of-band rewrites. The tableExists→CREATE
-    * sequence is racy under concurrent first reads of one table, but
-    * CREATE IF NOT EXISTS makes the loser a no-op. */
-  private def analyzedTable(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val tbl = s"graft_${name}_${Integer.toHexString(s"$dir/$name".hashCode)}"
-    if (!spark.catalog.tableExists(tbl)) {
-      // Escape single quotes so a hostile/unusual dir can't break out of
-      // the LOCATION string literal.
-      val loc = s"$dir/$name.parquet".replace("'", "''")
-      spark.sql(s"CREATE TABLE IF NOT EXISTS $tbl USING parquet " +
-        s"LOCATION '$loc'")
-      // ANALYZE FOR COLUMNS rejects nested types (ARRAY/STRUCT/MAP).
-      // TIMESTAMP_NTZ columns are deliberately excluded too: Spark 4.1's
-      // FilterEstimation.evaluateBinary has no TimestampNTZType case, so a
-      // RANGE PREDICATE over an NTZ column WITH column stats MatchErrors
-      // inside the optimizer once spark.sql.cbo.enabled is on — the whole
-      // query dies with INTERNAL_ERROR (reproduced on q74's date window;
-      // see CatalogStatsSpec). No stats → no estimation attempt → the
-      // query plans fine, just without a selectivity estimate there.
-      val cols = if (fullStats) statColumns(spark.table(tbl).schema) else Nil
-      spark.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS" +
-        (if (cols.nonEmpty) cols.map(c => s"`$c`").mkString(" FOR COLUMNS ", ", ", "")
-        else ""))
-    }
-    spark.table(tbl)
-  }
-
-  /** The columns `full` stats mode ANALYZEs (see comment at the call
-    * site for the TIMESTAMP_NTZ exclusion). */
-  private[graft] def statColumns(schema: StructType): Seq[String] =
-    schema.fields.toSeq.collect {
-      case f if !f.dataType.isInstanceOf[ArrayType] &&
-        !f.dataType.isInstanceOf[MapType] &&
-        !f.dataType.isInstanceOf[StructType] &&
-        f.dataType != TimestampNTZType => f.name
-    }
+    spark.read.parquet(s"$dir/$name.parquet")
 
   /** CSV scan with explicit schema (reference S1, main.py:44-49, but with
     * deterministic types instead of inference). header=true matches the

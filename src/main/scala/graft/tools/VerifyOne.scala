@@ -1,8 +1,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import graft.SparkPosture
-import graft.SparkEntry
+import graft.{SparkEntry, SparkPosture, Verify}
 
 /** Verify-style dump for a SUBSET of registry queries — self-check an
   * oracle against DuckDB without paying for the full 110-query sweep.
@@ -13,7 +12,9 @@ object VerifyOne {
     val outDir = args(1)
     val names = args.drop(2).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // sf>=10 probes want more reduce partitions than cores (see TimeQ)
+    // sf>=10 dumps want more reduce partitions than cores: at 600M-row
+    // shuffles, 32 partitions are ~2 GB each and spill (AQE coalesces
+    // small stages back down)
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     val spark = SparkPosture.session(cpus, shuffle)
     spark.sparkContext.setLogLevel("WARN")
@@ -35,18 +36,10 @@ object VerifyOne {
         Files.writeString(Paths.get(s"$outDir/$name.sql"), sql))
     }
     // subset oracle_sql.json so tools/selfcheck.py runs directly on outDir
-    def esc(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val subset = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      subset.map { case (k, v) => s"${esc(k)}: ${esc(v)}" }.mkString("{", ",", "}"))
+      subset.map { case (k, v) => s"${Verify.jsonStr(k)}: ${Verify.jsonStr(v)}" }
+        .mkString("{", ",", "}"))
     graft.operators.Dedup.releaseCaches(spark)
     spark.stop()
   }

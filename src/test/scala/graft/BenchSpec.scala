@@ -4,9 +4,10 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Drives `Bench.sweep`/`Bench.report` with a tiny registry: a query is
-  * timed by materializing every column, a failure is a status and an exit
-  * code (never a sample), and a clean query gets one sample per pass. */
+/** Drives `Bench.select`/`Bench.sweep`/`Bench.report` with a tiny
+  * registry: named queries pick the sweep, a query is timed by
+  * materializing every column, a failure is a status and an exit code
+  * (never a sample), and a clean query gets one sample per pass. */
 class BenchSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
@@ -55,5 +56,24 @@ class BenchSpec extends AnyFunSuite {
     assert(run.samples("q_clean").length == 3)
     assert(run.samples("q_clean").forall(_ > 0))
     assert(run.failed == 0 && run.exitCode == 0)
+  }
+
+  private val registry = Map("q_b" -> clean, "q_a" -> clean, "q_c" -> throwing)
+
+  test("no names selects the whole registry in name order") {
+    assert(Bench.select(registry, Nil).map(_._1) == Seq("q_a", "q_b", "q_c"))
+  }
+
+  test("names select exactly those queries, in the given order") {
+    val picked = Bench.select(registry, Seq("q_c", "q_a", "q_c"))
+    assert(picked.map(_._1) == Seq("q_c", "q_a"))
+    assert(picked.head._2 eq throwing)
+  }
+
+  test("an unknown name fails selection and the error names it") {
+    val e = intercept[IllegalArgumentException](
+      Bench.select(registry, Seq("q_a", "q_nope")))
+    assert(e.getMessage.contains("q_nope"))
+    assert(!e.getMessage.contains("q_a"))
   }
 }

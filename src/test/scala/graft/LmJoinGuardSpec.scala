@@ -23,16 +23,13 @@ import graft.operators.Learn
 class LmJoinGuardSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
-  test("lmBroadcastFor: forced override wins, else the corpus-bytes cap decides") {
-    // forced on/off ignores sizes entirely
-    assert(Learn.lmBroadcastFor(Some("1"), corpusBytes = Long.MaxValue, capBytes = 1L))
-    assert(!Learn.lmBroadcastFor(Some("0"), corpusBytes = 1L, capBytes = Long.MaxValue))
-    // unforced: broadcast iff 0 < corpusBytes <= cap
-    assert(Learn.lmBroadcastFor(None, 1L << 20, 1L << 30))
-    assert(Learn.lmBroadcastFor(None, 1L << 30, 1L << 30)) // boundary inclusive
-    assert(!Learn.lmBroadcastFor(None, (1L << 30) + 1, 1L << 30))
+  test("lmBroadcastFor: the corpus-bytes cap decides") {
+    // broadcast iff 0 < corpusBytes <= cap
+    assert(Learn.lmBroadcastFor(1L << 20, 1L << 30))
+    assert(Learn.lmBroadcastFor(1L << 30, 1L << 30)) // boundary inclusive
+    assert(!Learn.lmBroadcastFor((1L << 30) + 1, 1L << 30))
     // unknown/missing corpus (0 bytes) must NOT claim broadcast-safe
-    assert(!Learn.lmBroadcastFor(None, 0L, 1L << 30))
+    assert(!Learn.lmBroadcastFor(0L, 1L << 30))
   }
 
   /** Planted large-vocab corpus: 400 docs × 40 words drawn from a ~4k-word
@@ -70,8 +67,6 @@ class LmJoinGuardSpec extends AnyFunSuite {
 
   test("planted large-vocab fixture: over-cap corpus degrades the LM join " +
       "to a shuffle join with identical results") {
-    assume(sys.env.get("GRAFT_LM_BROADCAST").isEmpty,
-      "env forces the LM hint; the cap branch is not reachable")
     val dir = plantFixture()
     val onDisk = Learn.corpusBytes(spark, dir)
     assert(onDisk > 0, "fixture produced no bytes")

@@ -20,35 +20,18 @@ import graft.operators.Dedup
   */
 class MemoLevelSpec extends AnyFunSuite {
 
-  test("GRAFT_MEMO_SER=1 forces serialized persistence") {
-    assert(Dedup.memoLevelFor(Some("1"), Long.MaxValue) ==
-      StorageLevel.MEMORY_AND_DISK_SER)
-  }
-
-  test("GRAFT_MEMO_SER=0 forces deserialized persistence") {
-    assert(Dedup.memoLevelFor(Some("0"), 1L << 30) ==
-      StorageLevel.MEMORY_AND_DISK)
-  }
-
   test("auto: serialized below a 6 GiB max heap, deserialized at/above") {
     // the r15 constrained probes ran at 2 and 4 GiB — both must auto-SER
-    assert(Dedup.memoLevelFor(None, 2L << 30) ==
+    assert(Dedup.memoLevelFor(2L << 30) ==
       StorageLevel.MEMORY_AND_DISK_SER)
-    assert(Dedup.memoLevelFor(None, 4L << 30) ==
+    assert(Dedup.memoLevelFor(4L << 30) ==
       StorageLevel.MEMORY_AND_DISK_SER)
-    assert(Dedup.memoLevelFor(None, (6L << 30) - 1) ==
+    assert(Dedup.memoLevelFor((6L << 30) - 1) ==
       StorageLevel.MEMORY_AND_DISK_SER)
     // the boundary itself and roomy heaps keep deserialized reuse speed
-    assert(Dedup.memoLevelFor(None, 6L << 30) ==
+    assert(Dedup.memoLevelFor(6L << 30) ==
       StorageLevel.MEMORY_AND_DISK)
-    assert(Dedup.memoLevelFor(None, 128L << 30) ==
-      StorageLevel.MEMORY_AND_DISK)
-  }
-
-  test("unrecognized GRAFT_MEMO_SER values fall back to the heap heuristic") {
-    assert(Dedup.memoLevelFor(Some("yes"), 2L << 30) ==
-      StorageLevel.MEMORY_AND_DISK_SER)
-    assert(Dedup.memoLevelFor(Some(""), 64L << 30) ==
+    assert(Dedup.memoLevelFor(128L << 30) ==
       StorageLevel.MEMORY_AND_DISK)
   }
 }

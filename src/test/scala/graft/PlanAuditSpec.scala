@@ -81,79 +81,37 @@ class PlanAuditSpec extends AnyFunSuite {
       s"data-scale unpartitioned window (single-partition global sort) in: $offenders")
   }
 
-  /** The six queries whose INITIAL plan demotes BroadcastHashJoin →
-    * SortMergeJoin under catalog stats (`spark.sql.cbo.planStats.enabled`
-    * prices derived-aggregate join inputs more conservatively than raw
-    * size propagation — PLANS.md round-12 catalog-stats A/B), plus
-    * q74_star_join whose fifth dimension join does the same at sf10. The
-    * registry-wide A/B showed AQE reverses every demotion at RUNTIME, so
-    * the executed plan broadcasts in both postures. This test pins that
-    * executed-plan contract in CI: a Spark upgrade or config drift that
-    * lands an un-rescued SortMergeJoin on these shapes fails here, not in
-    * a cluster profile. (r12 VERDICT item 4.)
+  /** The six queries whose INITIAL plan demoted BroadcastHashJoin →
+    * SortMergeJoin under catalog statistics (PLANS.md round-12
+    * catalog-stats A/B: planStats prices derived-aggregate join inputs
+    * more conservatively than raw size propagation), plus q74_star_join
+    * whose fifth dimension join did the same at sf10. AQE reversed every
+    * demotion at runtime. This test pins the executed-plan contract in
+    * CI: a Spark upgrade or config drift that lands an un-rescued
+    * SortMergeJoin on these shapes fails here, not in a cluster profile.
     */
   private val statsFlipFamily = Seq(
     "q03_join_agg", "q41_semi_anti", "q59_nullsafe_join",
     "q70_salted_join", "q74_star_join",
     "q93_conversion_join", "q94_conversion_outer")
 
-  test("stats-flip family: executed plans broadcast in BOTH catalog-stats postures") {
+  test("stats-flip family: executed plans broadcast with no SortMergeJoin") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    // (mode override, human label). None = default path-scan posture;
-    // Some("full") = catalog tables + column stats + planStats pricing —
-    // the posture under which the initial-plan demotions were observed.
-    val postures = Seq(None -> "path-scan", Some("full") -> "catalog-stats")
-    val failures = postures.flatMap { case (mode, label) =>
-      graft.sources.Tables.statsModeOverride = mode
-      if (mode.isDefined) {
-        spark.conf.set("spark.sql.cbo.planStats.enabled", "true")
-        // ADVICE r13: registration is once-per-session, so this posture
-        // used to be FULL-stats only because this test happened to
-        // register the sf0.1 tables first — any earlier registrar under a
-        // weaker posture would silently downgrade what's being audited.
-        // Drop every graft_* catalog table so re-registration below
-        // happens under THIS posture; the stats assertions further down
-        // then verify (not assume) that the catalog actually carries them.
-        spark.catalog.listTables().collect()
-          .filter(_.name.startsWith("graft_"))
-          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
+    val failures = statsFlipFamily.flatMap { name =>
+      val df = SparkEntry.queries(name)(spark, TestSpark.sf01)
+      // Execute THIS plan's own physical tree so AQE finalizes THIS
+      // AdaptiveSparkPlanExec. df.count()/df.foreach() both build a NEW
+      // QueryExecution (foreach goes through df.rdd's re-plan) and would
+      // leave this plan un-finalized — its a.executedPlan would still be
+      // the initial plan.
+      df.queryExecution.executedPlan.execute().count()
+      val s = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+        case p => p.toString
       }
-      try {
-        statsFlipFamily.flatMap { name =>
-          val df = SparkEntry.queries(name)(spark, TestSpark.sf01)
-          if (mode.isDefined) {
-            // Verify the audited posture: every catalog-table leaf of the
-            // optimized plan must price with a rowCount and column stats.
-            import org.apache.spark.sql.execution.datasources.LogicalRelation
-            val catLeaves = df.queryExecution.optimizedPlan.collectLeaves()
-              .collect { case l: LogicalRelation if l.catalogTable.isDefined => l }
-            assert(catLeaves.nonEmpty,
-              s"$name[$label]: no catalog-table leaves — posture not in effect")
-            val unpriced = catLeaves.filter(l =>
-              l.stats.rowCount.isEmpty || l.stats.attributeStats.isEmpty)
-            assert(unpriced.isEmpty,
-              s"$name[$label]: catalog leaves without rowCount/column stats: " +
-                unpriced.map(_.catalogTable.get.identifier.table))
-          }
-          // Execute THIS plan's own physical tree so AQE finalizes THIS
-          // AdaptiveSparkPlanExec. df.count()/df.foreach() both build a NEW
-          // QueryExecution (foreach goes through df.rdd's re-plan) and would
-          // leave this plan un-finalized — its a.executedPlan would still be
-          // the initial (possibly SMJ-demoted) plan.
-          df.queryExecution.executedPlan.execute().count()
-          val s = df.queryExecution.executedPlan match {
-            case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-            case p => p.toString
-          }
-          val smj = s.contains("SortMergeJoin")
-          val bhj = s.contains("BroadcastHashJoin")
-          if (smj || !bhj)
-            Some(s"$name[$label]: smj=$smj bhj=$bhj") else None
-        }
-      } finally {
-        graft.sources.Tables.statsModeOverride = None
-        if (mode.isDefined) spark.conf.unset("spark.sql.cbo.planStats.enabled")
-      }
+      val smj = s.contains("SortMergeJoin")
+      val bhj = s.contains("BroadcastHashJoin")
+      if (smj || !bhj) Some(s"$name: smj=$smj bhj=$bhj") else None
     }
     graft.operators.Dedup.releaseCaches(spark)
     assert(failures.isEmpty,

@@ -12,7 +12,7 @@ symlinked from sf0.1.
 
 Usage:
   python3 tools/scale_probe.py [outdir=/tmp/sfbig]
-  SPARK_GRAFT_CPUS=4 bash tools/run.sh graft.tools.TimeQ /tmp/sfbig \
+  SPARK_GRAFT_SF_DIR=/tmp/sfbig bash tools/run.sh graft.Bench \
       q31_dedup_ngram_jaccard q33_dedup_simhash q79_simhash_scale
 """
 import os
