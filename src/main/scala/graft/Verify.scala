@@ -32,29 +32,6 @@ object Verify {
     // System.err directly and are unaffected by the log level.
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
-    // GRAFT_SPILL_LOG=1 (VERDICT r14 item 1): per-query execution-spill
-    // accounting for the constrained-memory robustness run — at 100 TB
-    // per-executor memory is always tight, and "green with 128 GiB of
-    // headroom" proves nothing about graceful degradation. A task-end
-    // listener accumulates memory/disk spill between queries; a query that
-    // SPILLS and stays correct is the desired behavior under pressure, a
-    // query that dies is a bug. Listener delivery is async, so each query
-    // drains with a short sleep before reading — good enough for a
-    // diagnostic (per-query attribution slop of one late task is fine).
-    val spillLog = sys.env.get("GRAFT_SPILL_LOG").contains("1")
-    val memSpill = new java.util.concurrent.atomic.AtomicLong
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    if (spillLog) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) {
-            memSpill.addAndGet(m.memoryBytesSpilled)
-            diskSpill.addAndGet(m.diskBytesSpilled)
-          }
-        }
-      })
     // Scale affordances for the out-of-gate decade sweeps (r17, sf10+).
     // Both default OFF so the driver contract is byte-identical:
     //  - GRAFT_VERIFY_RESUME=1: skip queries whose output dir already has
@@ -88,11 +65,6 @@ object Verify {
           (if (single) df.coalesce(1) else df).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           Files.writeString(stampPath(name), stamp)
-        }
-        if (spillLog) {
-          Thread.sleep(200) // let straggler task-end events drain
-          val (m, d) = (memSpill.getAndSet(0L), diskSpill.getAndSet(0L))
-          println(f"[spill] $name mem_mb=${m / 1e6}%.1f disk_mb=${d / 1e6}%.1f")
         }
       } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Misra-Gries heavy-hitters summary as a custom Catalyst
   * `TypedImperativeAggregate` — the (b)-rung aggregate counterpart of the
-  * scalar DotProduct/CosineSimilarity expressions, and the mergeable-sketch
+  * scalar DotProduct expression, and the mergeable-sketch
   * shape a 100 TB frequency query wants: each partition keeps at most `k`
   * counters (constant memory, no per-term shuffle), partial summaries merge
   * associatively (Agarwal et al. 2012, "Mergeable Summaries"), and the
@@ -122,4 +122,13 @@ case class HeavyHitters(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): HeavyHitters =
     copy(child = newChild)
+}
+
+object HeavyHitters {
+  /** Column wrapper for DataFrame call sites (batch q95 and the streaming
+    * window aggregate build the same sketch through it). */
+  def of(c: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =
+    org.apache.spark.sql.graftbridge.Bridge.column(
+      HeavyHitters(org.apache.spark.sql.graftbridge.Bridge.expression(c), k)
+        .toAggregateExpression())
 }

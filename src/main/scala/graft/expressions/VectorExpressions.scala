@@ -39,8 +39,8 @@ case class DotProduct(left: Expression, right: Expression)
 
   /** Exactly the HOF `aggregate(zip_with(a,b,(x,y)->x*y),0.0,(s,v)->s+v)`
     * semantics — including NULL on ragged lengths (zip_with null-pads) and
-    * NULL on any null element (null poisons the running add). Required for
-    * the RewriteHofVectorOps rule to be a bit-exact substitution. */
+    * NULL on any null element (null poisons the running add) — so `dot`
+    * stays bit-identical to its reference `Similarity.dotHof`. */
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
@@ -195,56 +195,4 @@ case class LshBandCodes(child: Expression, planes: Seq[Array[Double]], bits: Int
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** One-pass cosine similarity: accumulates x·y, x·x, y·y in a single loop,
-  * then dot/(sqrt(xx)*sqrt(yy)) — the same grouping as the oracle SQL, so
-  * doubles match bitwise. Prefer this when norms aren't precomputed. */
-case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(left, right).forall(_.dataType match { case ArrayType(DoubleType, _) => true; case _ => false }))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<double> inputs")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_cosine"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var xy = 0.0; var xx = 0.0; var yy = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = x.getDouble(i); val yi = y.getDouble(i)
-      xy += xi * yi; xx += xi * xi; yy += yi * yi
-      i += 1
-    }
-    xy / (math.sqrt(xx) * math.sqrt(yy))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val xy = ctx.freshName("xy")
-      val xx = ctx.freshName("xx")
-      val yy = ctx.freshName("yy")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $xy = 0.0; double $xx = 0.0; double $yy = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xi = $a.getDouble($i); double $yi = $b.getDouble($i);
-         |  $xy += $xi * $yi; $xx += $xi * $xi; $yy += $yi * $yi;
-         |}
-         |${ev.value} = $xy / (java.lang.Math.sqrt($xx) * java.lang.Math.sqrt($yy));
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

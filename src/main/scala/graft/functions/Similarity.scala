@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
-import graft.expressions.{CosineSimilarity, DotProduct, LshBandCodes}
+import graft.expressions.{DotProduct, LshBandCodes}
 
 /** Vector similarity primitives over ArrayType columns (SURVEY.md §2.10/§2.11
   * extension surface).
@@ -34,11 +34,6 @@ object Similarity {
 
   /** L2 norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** One-pass compiled cosine (dot and both norms in a single loop; same
-    * final grouping dot/(sqrt*sqrt) as the oracle SQL → bitwise equal). */
-  def cosine(a: Column, b: Column): Column =
-    Bridge.column(CosineSimilarity(Bridge.expression(a), Bridge.expression(b)))
 
   /** Cosine given precomputed norms (compute each row's norm once, not once
     * per pair — at 100 TB the norm column is materialized with the vector). */

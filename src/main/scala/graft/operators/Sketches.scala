@@ -177,13 +177,11 @@ object Sketches {
   val q95HeavyHitters: Q = Q(
     "q95_heavy_hitters",
     (s, dir) => {
-      import org.apache.spark.sql.graftbridge.Bridge
       val k = 32
       val terms = Tables(s, dir, "documents")
         .select(explode(TextAnalysis.words(col("text"))).as("term"))
       val hh = terms
-        .agg(Bridge.column(graft.expressions.HeavyHitters(
-          Bridge.expression(col("term")), k).toAggregateExpression()).as("hh"))
+        .agg(graft.expressions.HeavyHitters.of(col("term"), k).as("hh"))
         .select(explode(col("hh")).as("e"))
         .select(col("e.term").as("term"), col("e.est").as("est"))
       val exact = terms.groupBy(col("term")).agg(count(lit(1)).as("cnt"))

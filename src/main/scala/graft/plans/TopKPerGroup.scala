@@ -12,8 +12,9 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Whole-operator custom plan: top-k rows per group — SURVEY.md §7.3 ladder
-  * step (c): LogicalPlan + SparkStrategy + SparkPlan, registered through
-  * SparkSessionExtensions (or spark.experimental.extraStrategies).
+  * step (c): LogicalPlan + SparkStrategy + SparkPlan; `TopK.perGroup` adds
+  * the strategy to the session's `experimental.extraStrategies` through
+  * `TopK.register`.
   *
   * Why a physical operator: the declarative formulation
   * (row_number over a window, then filter rank <= k) must SORT every

@@ -371,7 +371,7 @@ object Events {
   }
 
   /** Streaming heavy hitters: per tumbling 1-hour window, a top-k term
-    * summary via the custom MERGEABLE `graft_heavy_hitters` aggregate —
+    * summary via the custom MERGEABLE `HeavyHitters` aggregate —
     * the TypedImperativeAggregate buffer serializes into the streaming
     * state store, so the same Misra-Gries sketch that powers q95 in batch
     * is maintained incrementally across micro-batches under a watermark
@@ -380,13 +380,12 @@ object Events {
     * bit-for-bit; below that the ±n/k guarantee carries over. */
   def streamingHeavyHitters(spark: SparkSession, dir: String, k: Int = 4)
       : DataFrame = {
-    graft.expressions.GraftExtensions.register(spark)
     spark.readStream
       .schema(Tables.schemas("events"))
       .parquet(dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
-      .agg(expr(s"graft_heavy_hitters(event_type, $k)").as("top_terms"))
+      .agg(graft.expressions.HeavyHitters.of(col("event_type"), k).as("top_terms"))
       .select(col("window.start").as("window_start"), col("top_terms"))
   }
 

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import graft.{SparkEntry, SparkPosture, Verify}
 
 /** Verify-style dump for a SUBSET of registry queries — self-check an
-  * oracle against DuckDB without paying for the full 110-query sweep.
+  * oracle against DuckDB without paying for the full 113-query sweep.
   * Usage: runMain graft.tools.VerifyOne <sfDir> <outDir> <qname> [...] */
 object VerifyOne {
   def main(args: Array[String]): Unit = {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.expressions.{GraftExtensions, Md5Prefix}
+import graft.expressions.Md5Prefix
 
 /** Value-parity of the native md5-prefix long against the
   * `conv(substring(md5(x), 1, n), 16, 10)` composite it replaces — the
@@ -62,15 +62,5 @@ class Md5PrefixSpec extends AnyFunSuite {
     assert(wide.agg(max("h")).first().getLong(0) > 0)
     val plan = wide.queryExecution.executedPlan.toString
     assert("""\*\(\d+\) Project \[.*graft_md5_prefix""".r.findFirstIn(plan).isDefined, plan)
-  }
-
-  test("SQL function registration matches the DataFrame form") {
-    GraftExtensions.register(spark)
-    samples.toDF("s").createOrReplaceTempView("md5_prefix_probe")
-    val rows = spark.sql(
-      """SELECT graft_md5_prefix(cast(s AS binary), 15) AS a,
-        |       cast(conv(substring(md5(cast(s AS binary)), 1, 15), 16, 10) AS bigint) AS b
-        |FROM md5_prefix_probe""".stripMargin).collect()
-    rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 }

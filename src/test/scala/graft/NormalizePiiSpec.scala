@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.expressions.{GraftExtensions, NormalizeText}
+import graft.expressions.NormalizeText
 import graft.operators.TextAnalysis
 
 /** The round-6 text-canonicalization surface: the native `graft_normalize`
@@ -15,10 +15,8 @@ class NormalizePiiSpec extends AnyFunSuite {
   import spark.implicits._
   private val dir = TestSpark.sf0001
 
-  private def norm(s: String, mode: String): String = {
-    GraftExtensions.register(spark)
-    spark.sql(s"SELECT graft_normalize('$s', '$mode')").as[String].head()
-  }
+  private def norm(s: String, mode: String): String =
+    spark.range(1).select(TextAnalysis.normalizeText(lit(s), mode)).as[String].head()
 
   test("graft_normalize: NFC composes, NFKC folds compatibility forms, strip de-accents") {
     // decomposed a + U+0301 composes to one precomposed code point
@@ -33,10 +31,12 @@ class NormalizePiiSpec extends AnyFunSuite {
   }
 
   test("graft_normalize: null propagates and non-string input is rejected") {
-    GraftExtensions.register(spark)
-    assert(spark.sql("SELECT graft_normalize(CAST(NULL AS STRING), 'nfc')")
+    assert(spark.range(1)
+      .select(TextAnalysis.normalizeText(lit(null).cast("string"), "nfc"))
       .collect()(0).isNullAt(0))
-    intercept[Exception] { spark.sql("SELECT graft_normalize(1, 'nfc')").collect() }
+    intercept[Exception] {
+      spark.range(1).select(TextAnalysis.normalizeText(lit(1), "nfc")).collect()
+    }
     intercept[Exception] {
       TextAnalysis.normalizeText(lit("x"), "bogus-mode")
     }

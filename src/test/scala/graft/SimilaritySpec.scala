@@ -14,8 +14,9 @@ class SimilaritySpec extends AnyFunSuite {
       (Array(1.0f, 0.0f), Array(1.0f, 0.0f)),
       (Array(1.0f, 0.0f), Array(0.0f, 1.0f)),
       (Array(1.0f, 0.0f), Array(-1.0f, 0.0f))).toDF("a", "b")
-    val out = df.select(Similarity.cosine(
-        Similarity.toDoubleArray(col("a")), Similarity.toDoubleArray(col("b"))).as("c"))
+    val (a, b) = (Similarity.toDoubleArray(col("a")), Similarity.toDoubleArray(col("b")))
+    val out = df.select(Similarity.cosinePre(
+        Similarity.dot(a, b), Similarity.norm(a), Similarity.norm(b)).as("c"))
       .as[Double].collect()
     assert(out(0) === 1.0)
     assert(out(1) === 0.0)
@@ -38,7 +39,8 @@ class SimilaritySpec extends AnyFunSuite {
       .select(
         Similarity.dot(col("va"), col("vb")).as("native"),
         Similarity.dotHof(col("va"), col("vb")).as("hof"),
-        Similarity.cosine(col("va"), col("vb")).as("cos_native"),
+        Similarity.cosinePre(Similarity.dot(col("va"), col("vb")),
+          Similarity.norm(col("va")), Similarity.norm(col("vb"))).as("cos_native"),
         (Similarity.dotHof(col("va"), col("vb")) /
           (sqrt(Similarity.dotHof(col("va"), col("va"))) *
            sqrt(Similarity.dotHof(col("vb"), col("vb"))))).as("cos_hof"))
@@ -390,27 +392,6 @@ class SimilaritySpec extends AnyFunSuite {
     out.unpersist()
   }
 
-  test("optimizer rule rewrites the HOF dot pattern to the native expression, bit-exact") {
-    val prev = spark.experimental.extraOptimizations
-    // a real scan, so constant folding can't pre-evaluate the projection
-    def query() = graft.sources.Tables(spark, TestSpark.sf0001, "embeddings")
-      .limit(20)
-      .select(col("vec_id"),
-        Similarity.dotHof(
-          Similarity.toDoubleArray(col("embedding")),
-          Similarity.toDoubleArray(col("embedding"))).as("d"))
-    spark.experimental.extraOptimizations = prev :+ graft.plans.RewriteHofVectorOps
-    val (rewrittenPlan, rewritten) =
-      try {
-        val df = query()
-        (df.queryExecution.optimizedPlan.toString,
-          df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq.sorted)
-      } finally spark.experimental.extraOptimizations = prev
-    assert(rewrittenPlan.contains("graft_dot"), s"HOF pattern not rewritten:\n$rewrittenPlan")
-    val interpreted = query().collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq.sorted
-    assert(rewritten == interpreted)
-  }
-
   test("DotProduct reproduces HOF NULL semantics on ragged and null-element arrays") {
     val df = Seq(
       (Array[java.lang.Double](1.0, 2.0), Array[java.lang.Double](1.0)),        // ragged
@@ -445,13 +426,5 @@ class SimilaritySpec extends AnyFunSuite {
     val got = edge.select(col("id"), TextAnalysis.countTerm(col("w"), "a").as("c"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
     assert(got == Map(1L -> 2L, 2L -> 0L, 3L -> 2L, 4L -> -1L))
-  }
-
-  test("graft_dot / graft_cosine are SQL-callable after extension registration") {
-    graft.expressions.GraftExtensions.register(spark)
-    val out = spark.sql(
-      "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d, " +
-      "graft_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c").head()
-    assert(out.getDouble(0) == 11.0 && out.getDouble(1) == 1.0)
   }
 }

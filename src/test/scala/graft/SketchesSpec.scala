@@ -46,11 +46,10 @@ class SketchesSpec extends AnyFunSuite {
     val hot = Seq.fill(500)("hot1") ++ Seq.fill(300)("hot2") ++ Seq.fill(200)("hot3")
     val tail = (1 to 400).map(i => s"tail$i")
     val k = 8
-    graft.expressions.GraftExtensions.register(spark)
     val df = scala.util.Random.shuffle(hot ++ tail).toDF("term").repartition(16)
     val n = (hot ++ tail).size.toLong
     val bound = n / (k + 1)
-    val est = df.agg(expr(s"graft_heavy_hitters(term, $k)").as("hh"))
+    val est = df.agg(graft.expressions.HeavyHitters.of(col("term"), k).as("hh"))
       .select(explode(col("hh")).as("e"))
       .select(col("e.term"), col("e.est"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

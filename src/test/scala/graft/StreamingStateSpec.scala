@@ -236,10 +236,9 @@ class StreamingStateSpec extends AnyFunSuite {
       .coalesce(1).write.mode("append").parquet(dir)
     q.processAllAvailable()
     q.stop()
-    graft.expressions.GraftExtensions.register(spark)
     val batch = spark.read.parquet(dir)
       .filter(col("ts") < lit("2024-01-01 01:00:00").cast("timestamp"))
-      .agg(expr("graft_heavy_hitters(event_type, 4)").as("top_terms"))
+      .agg(graft.expressions.HeavyHitters.of(col("event_type"), 4).as("top_terms"))
       .select(col("top_terms")).collect()(0).getSeq[Any](0)
     val streamed = spark.table("shh_test")
       .filter(col("window_start") === lit("2024-01-01 00:00:00").cast("timestamp"))
