@@ -32,39 +32,27 @@ object AsofJoin {
       left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String,
-      payloadCols: Seq[String], asofColName: String = "asof"): DataFrame = {
-
-    val leftStruct = StructType(left.schema.fields.map(f => StructField(f.name, f.dataType, nullable = true)))
-    val payloadStruct = StructType(payloadCols.map(c => right.schema(c)).map(f => f.copy(nullable = true)))
-
-    val lpart = left.select(
-      col(leftKey).as("__k"), col(leftTime).as("__t"), lit(0).as("__is_r"),
-      lit(null).cast(payloadStruct).as("__p"),
-      struct(left.columns.map(col).toIndexedSeq: _*).as("__l"))
-    val rpart = right.select(
-      col(rightKey).as("__k"), col(rightTime).as("__t"), lit(1).as("__is_r"),
-      struct(payloadCols.map(col).toIndexedSeq: _*).cast(payloadStruct).as("__p"),
-      lit(null).cast(leftStruct).as("__l"))
-
-    val w = Window.partitionBy(col("__k"))
-      .orderBy(col("__t").asc, col("__is_r").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    lpart.unionByName(rpart)
-      .withColumn("__asof", last(col("__p"), ignoreNulls = true).over(w))
-      .filter(col("__is_r") === 0)
-      .select(col("__l.*"), col("__asof").as(asofColName))
-  }
+      payloadCols: Seq[String], asofColName: String = "asof"): DataFrame =
+    asof(left, right, leftKey, rightKey, leftTime, rightTime, payloadCols, asofColName, forward = false)
 
   /** Forward as-of: for each left row, the single right row with the
-    * SMALLEST rightTime >= leftTime for the same key (inclusive). Same
-    * single-shuffle union-window form, with the window running backwards
-    * (first following right payload). */
+    * SMALLEST rightTime >= leftTime for the same key (inclusive). */
   def asofForward(
       left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String,
-      payloadCols: Seq[String], asofColName: String = "asof"): DataFrame = {
+      payloadCols: Seq[String], asofColName: String = "asof"): DataFrame =
+    asof(left, right, leftKey, rightKey, leftTime, rightTime, payloadCols, asofColName, forward = true)
+
+  /** The one builder. `forward` picks the tie order at equal timestamps
+    * (right rows BEFORE left rows backward, AFTER them forward, so an
+    * exactly-simultaneous right row is visible either way), the frame
+    * (running preceding vs following) and last vs first non-null payload. */
+  private def asof(
+      left: DataFrame, right: DataFrame,
+      leftKey: String, rightKey: String,
+      leftTime: String, rightTime: String,
+      payloadCols: Seq[String], asofColName: String, forward: Boolean): DataFrame = {
 
     val leftStruct = StructType(left.schema.fields.map(f => StructField(f.name, f.dataType, nullable = true)))
     val payloadStruct = StructType(payloadCols.map(c => right.schema(c)).map(f => f.copy(nullable = true)))
@@ -78,15 +66,16 @@ object AsofJoin {
       struct(payloadCols.map(col).toIndexedSeq: _*).cast(payloadStruct).as("__p"),
       lit(null).cast(leftStruct).as("__l"))
 
-    // right rows AFTER left rows at equal timestamps (so an exactly-
-    // simultaneous right row is still "at or after" the left row), then take
-    // the first right payload in the forward-looking frame
-    val w = Window.partitionBy(col("__k"))
-      .orderBy(col("__t").asc, col("__is_r").asc)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    val ordered = Window.partitionBy(col("__k"))
+      .orderBy(col("__t").asc, if (forward) col("__is_r").asc else col("__is_r").desc)
+    val carried =
+      if (forward) first(col("__p"), ignoreNulls = true)
+        .over(ordered.rowsBetween(Window.currentRow, Window.unboundedFollowing))
+      else last(col("__p"), ignoreNulls = true)
+        .over(ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow))
 
     lpart.unionByName(rpart)
-      .withColumn("__asof", first(col("__p"), ignoreNulls = true).over(w))
+      .withColumn("__asof", carried)
       .filter(col("__is_r") === 0)
       .select(col("__l.*"), col("__asof").as(asofColName))
   }

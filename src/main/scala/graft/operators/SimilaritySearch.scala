@@ -916,67 +916,15 @@ object SimilaritySearch {
   }
 
   /** End-to-end TRAINED SemDeDup — the composition a real run uses
-    * (VERDICT r6 item 6): train k ≈ √N coarse centroids with
-    * `kmeansIterateOn` (init = the k lowest-vec_id embeddings —
-    * deterministic, no RNG), then prune with the trained model. k ∝ √N
-    * keeps expected within-cluster pair count near-linear in N — the
-    * method's point. Only k×d centroid doubles ever reach the driver
-    * (model state); the corpus stays distributed.
-    *
-    * Assignment picks its physical shape by k: plan-literal score columns
-    * up to k=16 (zero shuffle; see literalPathMaxK), the broadcast centroid-table argmin above
-    * (plan size O(1) in k — real √N̅ cluster counts). The two paths are
-    * bit-identical (`SimilaritySpec`), which also pins survivor-set
-    * determinism at two corpus sizes. */
+    * (VERDICT r6 item 6): train k ≈ √N coarse centroids on a bounded
+    * sample, then prune with the trained model. k ∝ √N keeps expected
+    * within-cluster pair count near-linear in N — the method's point.
+    * `SimilaritySpec` pins survivor-set determinism at two corpus sizes and
+    * with a sample smaller than the corpus. */
   def semdedupTrained(s: org.apache.spark.sql.SparkSession, dir: String,
-      iters: Int = 3, tau: Double = 0.3): org.apache.spark.sql.DataFrame =
-    semdedupPrune(trainedAssignment(s, dir, iters), tau)
-
-  /** The √N̅-cluster Lloyd-trained assignment shared by `semdedupTrained`
-    * and `clusterCardsTrained`: train k ≈ √N coarse centroids with
-    * `kmeansIterateOn` (init = the k lowest-vec_id embeddings —
-    * deterministic, no RNG), then assign every embedding to its argmin
-    * centroid. Only k×d centroid doubles ever reach the driver (model
-    * state); the corpus stays distributed. Assignment picks its physical
-    * shape by k: plan-literal score columns up to k=16 (zero shuffle; see literalPathMaxK), the
-    * broadcast centroid-table argmin above (plan size O(1) in k — real √N̅
-    * cluster counts). The two paths are bit-identical (SimilaritySpec). */
-  private[graft] def trainedAssignment(s: org.apache.spark.sql.SparkSession,
-      dir: String, iters: Int = 3): org.apache.spark.sql.DataFrame = {
-    val e = embWithNorm(s, dir)
-    val n = e.count()
-    val k = math.max(2, math.round(math.sqrt(n.toDouble)).toInt)
-    val init = e.orderBy(col("vec_id")).limit(k)
-      .select(col("emb")).collect().map(_.getSeq[Double](0).toArray).toSeq
-    val (centroids, _) = kmeansIterateOn(e.select(col("emb")), iters, init)
-    if (centroids.length <= literalPathMaxK) assignLiteral(e, centroids)
-    else assignByTable(s, e, centroids)
-  }
-
-  /** SAMPLE-trained SemDeDup — the production training rung (VERDICT r12
-    * item 2). `semdedupTrained` runs Lloyd over the FULL corpus, which made
-    * the sf100 point hours-long before the prune even started (2M×32
-    * vectors against ~1.4k centroids × iters): training cost N·k·d·iters
-    * carries the corpus factor N. Production SemDeDup trains the coarse
-    * codebook on a bounded sample and only ASSIGNS the full corpus — one
-    * map pass — so this rung removes the N factor from training entirely:
-    * sample cost is `sampleCap`·k·d·iters (k = √N̄ still grows with the
-    * corpus, but k is model size, not data size).
-    *
-    * The sample is the q88 carve-out mechanism: the `sampleCap` vectors
-    * with the lowest md5(vec_id) rank — value-derived (never
-    * partition-derived; the round-7 rank lesson), retry-stable, uniform in
-    * expectation, reproducible from the data alone, and computed by a
-    * sort-LIMIT (TakeOrderedAndProject: per-partition top-S heaps, no full
-    * sort). Init = the k lowest-vec_id embeddings OF THE SAMPLE, so when
-    * `sampleCap >= N` the whole rung is bit-identical to
-    * `semdedupTrained` (SimilaritySpec pins this). Assignment and prune
-    * reuse the existing paths unchanged (literal ≤16 / broadcast table,
-    * cid-bucketed pair search). */
-  def semdedupSampleTrained(s: org.apache.spark.sql.SparkSession, dir: String,
       iters: Int = 3, tau: Double = 0.3,
       sampleCap: Int = 65536): org.apache.spark.sql.DataFrame =
-    semdedupPrune(sampleTrainedAssignment(s, dir, iters, sampleCap), tau)
+    semdedupPrune(trainedAssignment(s, dir, iters, sampleCap), tau)
 
   /** The bounded md5-rank training sample (q88's carve-out mechanism) —
     * ONE definition, so the rung measured in PLANS.md ("SemDeDup training
@@ -996,7 +944,23 @@ object SimilaritySearch {
       col("vec_id")).limit(sampleCap)
       .repartition(s.sparkContext.defaultParallelism)
 
-  private[graft] def sampleTrainedAssignment(s: org.apache.spark.sql.SparkSession,
+  /** The √N̅-cluster Lloyd-trained assignment shared by `semdedupTrained`
+    * and `clusterCardsTrained` (VERDICT r12 item 2). Lloyd runs over a
+    * bounded sample and only the ASSIGNMENT touches the full corpus — one
+    * map pass — so training cost is `sampleCap`·k·d·iters, not N·k·d·iters
+    * (full-corpus training made the sf100 point hours-long before the prune
+    * started). k = √N̄ still grows with the corpus, but k is model size.
+    *
+    * The sample is `md5Sample`: value-derived (never partition-derived; the
+    * round-7 rank lesson), retry-stable and reproducible from the data
+    * alone. When n ≤ `sampleCap` it is the whole corpus. Init = the k
+    * lowest-vec_id embeddings of the sample — deterministic, no RNG. Only
+    * k×d centroid doubles ever reach the driver. Assignment picks its
+    * physical shape by k: plan-literal score columns up to k=16 (zero
+    * shuffle; see literalPathMaxK), the broadcast centroid-table argmin
+    * above (plan size O(1) in k). The two paths are bit-identical
+    * (SimilaritySpec). */
+  private[graft] def trainedAssignment(s: org.apache.spark.sql.SparkSession,
       dir: String, iters: Int = 3, sampleCap: Int = 65536): org.apache.spark.sql.DataFrame = {
     val e = embWithNorm(s, dir)
     val n = e.count()

@@ -58,6 +58,17 @@ class BenchSpec extends AnyFunSuite {
     assert(run.failed == 0 && run.exitCode == 0)
   }
 
+  test("the median is warm: pass 1 is reported as cold, not sampled into the median") {
+    val run = Bench.Sweep(Seq("q_x"), Map("q_x" -> Vector(10.0, 1.0, 2.0)), Map.empty)
+    val out = Files.createTempDirectory("bench-spec").resolve("bench.json")
+    val line = Bench.report(run, "sfX", "4", 3, out.toString)
+    val artifact = Files.readString(out)
+    Files.delete(out); Files.delete(out.getParent)
+    assert(line.contains("\"value\":1.5,"))
+    assert(artifact.contains("\"median\":1.5,\"cold\":10.0"))
+    assert(artifact.contains("\"queries\":{\"q_x\":1.5}"))
+  }
+
   private val registry = Map("q_b" -> clean, "q_a" -> clean, "q_c" -> throwing)
 
   test("no names selects the whole registry in name order") {

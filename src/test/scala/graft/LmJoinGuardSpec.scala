@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -100,11 +100,7 @@ class LmJoinGuardSpec extends AnyFunSuite {
           s"$name: over-cap corpus must plan a shuffle LM join (bhj=$bhjBig)")
         val df = SparkEntry.queries(name)(spark, dir)
         val got = df.collect().map(_.toString).sorted
-        val exec = df.queryExecution.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-          case p => p.toString
-        }
-        assert(!exec.contains("BroadcastHashJoin"),
+        assert(!TestPlans.nodes(df).exists(_.isInstanceOf[BroadcastHashJoinExec]),
           s"$name: executed over-cap plan still broadcasts")
         assert(got.sameElements(expected),
           s"$name: shuffle-path rows differ from broadcast-path rows")

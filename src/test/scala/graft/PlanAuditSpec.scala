@@ -46,7 +46,6 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("no unpartitioned window over an unreduced data-scale scan") {
     import org.apache.spark.sql.execution._
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.window.WindowExec
 
@@ -62,16 +61,10 @@ class PlanAuditSpec extends AnyFunSuite {
       // threshold / broadcast OOM guard) — never data-scale.
       case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => false
       case _: FileSourceScanExec => true
-      case a: AdaptiveSparkPlanExec => unreducedScan(a.executedPlan)
-      case other => other.children.exists(unreducedScan)
-    }
-    def unwrap(p: SparkPlan): SparkPlan = p match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case other => other
+      case other => TestPlans.children(other).exists(unreducedScan)
     }
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val plan = unwrap(fn(spark, TestSpark.sf0001).queryExecution.executedPlan)
-      val bad = plan.collect {
+      val bad = TestPlans.nodes(fn(spark, TestSpark.sf0001)).collect {
         case w: WindowExec if w.partitionSpec.isEmpty && unreducedScan(w.child) => w
       }
       if (bad.nonEmpty && !tinyWindowAllowlist(name)) Some(name) else None
@@ -96,7 +89,7 @@ class PlanAuditSpec extends AnyFunSuite {
     "q93_conversion_join", "q94_conversion_outer")
 
   test("stats-flip family: executed plans broadcast with no SortMergeJoin") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
     val failures = statsFlipFamily.flatMap { name =>
       val df = SparkEntry.queries(name)(spark, TestSpark.sf01)
       // Execute THIS plan's own physical tree so AQE finalizes THIS
@@ -105,12 +98,9 @@ class PlanAuditSpec extends AnyFunSuite {
       // leave this plan un-finalized — its a.executedPlan would still be
       // the initial plan.
       df.queryExecution.executedPlan.execute().count()
-      val s = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-        case p => p.toString
-      }
-      val smj = s.contains("SortMergeJoin")
-      val bhj = s.contains("BroadcastHashJoin")
+      val nodes = TestPlans.nodes(df)
+      val smj = nodes.exists(_.isInstanceOf[SortMergeJoinExec])
+      val bhj = nodes.exists(_.isInstanceOf[BroadcastHashJoinExec])
       if (smj || !bhj) Some(s"$name: smj=$smj bhj=$bhj") else None
     }
     graft.operators.Dedup.releaseCaches(spark)
@@ -119,10 +109,12 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("no unplanned cartesian/nested-loop stage anywhere in the full registry") {
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val plan = fn(spark, TestSpark.sf0001).queryExecution.executedPlan.toString
-      val nested = plan.contains("CartesianProduct") ||
-        plan.contains("BroadcastNestedLoopJoin")
+      val nested = TestPlans.nodes(fn(spark, TestSpark.sf0001)).exists {
+        case _: CartesianProductExec | _: BroadcastNestedLoopJoinExec => true
+        case _ => false
+      }
       if (nested && !deliberate(name)) Some(name) else None
     }
     graft.operators.Dedup.releaseCaches(spark)

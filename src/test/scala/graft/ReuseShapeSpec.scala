@@ -1,8 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.FileSourceScanLike
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
@@ -23,30 +21,9 @@ class ReuseShapeSpec extends AnyFunSuite {
   private def shape(name: String): (Int, Int) = {
     val df = SparkEntry.queries(name)(spark, TestSpark.sf0001)
     df.collect()
-    def finalPlan(p: SparkPlan): SparkPlan = p match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case other => other
-    }
-    var scans = 0
-    var reused = 0
-    // AQE materializes stages as LEAF QueryStageExec nodes whose executed
-    // subtree hangs off a field, not `children` — a plain foreach sees
-    // none of the scans/reuses. Recurse through stages explicitly.
-    def walk(p: SparkPlan): Unit = {
-      val fp = finalPlan(p)
-      fp.foreach {
-        case _: FileSourceScanLike => scans += 1
-        case r: ReusedExchangeExec => reused += 1
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(q.plan)
-        case a: AdaptiveSparkPlanExec => walk(a) // nested adaptive (subquery)
-        case _ => ()
-      }
-      // subqueries carry their own adaptive plans
-      fp.subqueriesAll.foreach(walk)
-    }
-    walk(df.queryExecution.executedPlan)
-    (scans, reused)
+    val nodes = TestPlans.nodes(df)
+    (nodes.count(_.isInstanceOf[FileSourceScanLike]),
+      nodes.count(_.isInstanceOf[ReusedExchangeExec]))
   }
 
   /** query -> max allowed FileSourceScan nodes in the final plan. */

@@ -298,22 +298,12 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("sample-trained SemDeDup: full-sample parity and bounded-sample determinism") {
+  test("sample-trained SemDeDup: bounded-sample determinism") {
     import graft.operators.SimilaritySearch
-    // sampleCap >= N: the sample IS the corpus and the init is the same k
-    // lowest-vec_id embeddings, so the rung must be bit-identical to the
-    // full-corpus semdedupTrained — including the double-valued max cosine.
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("vec_id"), col("cid"), col("pruned"), col("max_cos_lower"))
-      .as[(Long, Long, Boolean, Option[Double])].collect().sortBy(_._1).toSeq
-    val full = rows(SimilaritySearch.semdedupTrained(spark, TestSpark.sf0001, iters = 2))
-    val parity = rows(SimilaritySearch.semdedupSampleTrained(
-      spark, TestSpark.sf0001, iters = 2, sampleCap = 1 << 20))
-    assert(parity == full, "sampleCap >= N must degenerate to the full-corpus rung")
     // bounded sample (cap < N, the production shape): survivor set is
     // deterministic across re-runs, nonempty, and the k≈√N model still
     // spreads assignments (table path: k=45 > literalPathMaxK at sf0.1)
-    def survivors() = SimilaritySearch.semdedupSampleTrained(
+    def survivors() = SimilaritySearch.semdedupTrained(
         spark, TestSpark.sf01, iters = 2, sampleCap = 256)
       .filter(!col("pruned")).select(col("vec_id"))
       .as[Long].collect().sorted.toSeq
@@ -321,7 +311,7 @@ class SimilaritySpec extends AnyFunSuite {
     val s2 = survivors()
     assert(s1 == s2, "nondeterministic sample-trained survivor set")
     assert(s1.nonEmpty)
-    val out = SimilaritySearch.semdedupSampleTrained(
+    val out = SimilaritySearch.semdedupTrained(
       spark, TestSpark.sf01, iters = 2, sampleCap = 256).cache()
     // keep-first invariant holds regardless of where the model trained:
     // lowest vec_id of every cluster has no lower-id partner → survives
@@ -335,9 +325,9 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("literal-column and broadcast-table centroid assignment are bit-identical") {
-    // semdedupTrained switches physical shapes at k=64; the answer must not
-    // depend on which one ran (same distances in the same operand order,
-    // same lowest-cid tie break)
+    // trainedAssignment switches physical shapes above literalPathMaxK
+    // (16); the answer must not depend on which one ran (same distances in
+    // the same operand order, same lowest-cid tie break)
     val e = SimilaritySearch.embWithNorm(spark, TestSpark.sf0001)
     val centroids = {
       val (c, _) = SimilaritySearch.kmeansIterateOn(

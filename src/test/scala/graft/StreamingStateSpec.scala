@@ -115,6 +115,50 @@ class StreamingStateSpec extends AnyFunSuite {
     assert(rows == Set((1L, 2L), (3L, -1L))) // unmatched click emitted with NULLs
   }
 
+  test("watermark-bounded state: conversion-join state stays far below the stream") {
+    import java.nio.file.StandardCopyOption
+    import java.nio.file.attribute.FileTime
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.Trigger
+    // The corpus as ts-ordered chunk files with increasing mtimes (the file
+    // source admits its backlog in mtime order), replayed one file per
+    // micro-batch: the watermark advances the way it would in production,
+    // so the interval join evicts rows older than watermark − 30 min and
+    // state holds the trailing window, not the stream.
+    val chunks = 16
+    val work = Files.createTempDirectory("graft-state-bound")
+    val feed = Files.createDirectory(work.resolve("feed"))
+    val ev = graft.sources.Tables(spark, TestSpark.sf0001, "events")
+    val rowsIn = ev.count()
+    ev.repartitionByRange(chunks, col("ts")).sortWithinPartitions(col("ts"))
+      .write.parquet(work.resolve("staging").toString)
+    val listing = Files.list(work.resolve("staging"))
+    val parts = try listing.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toList
+        .sortBy(_.getFileName.toString)
+      finally listing.close()
+    parts.zipWithIndex.foreach { case (p, i) =>
+      val dst = Files.move(p, feed.resolve(f"chunk_$i%05d.parquet"),
+        StandardCopyOption.ATOMIC_MOVE)
+      Files.setLastModifiedTime(dst, FileTime.fromMillis(1000000000000L + i * 60000L))
+    }
+
+    val q = graft.streaming.Events.streamingConversions(spark, feed.toString,
+        readerOptions = Map("maxFilesPerTrigger" -> "1"))
+      .writeStream.format("noop").outputMode("append")
+      .option("checkpointLocation", work.resolve("ckpt").toString)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val progress = q.recentProgress.filter(_.numInputRows > 0)
+    assert(progress.length >= parts.length, "one micro-batch per chunk file")
+
+    val watermarks = progress.flatMap(p => Option(p.eventTime.get("watermark"))).distinct
+    assert(watermarks.length > 1, s"watermark never advanced: ${watermarks.mkString(", ")}")
+    val peak = progress.map(_.stateOperators.map(_.numRowsTotal).sum).max
+    assert(peak <= 0.25 * rowsIn,
+      s"peak join state $peak rows is not O(watermark window) against $rowsIn rows in")
+  }
+
   test("checkpointed parquet sink recovers exactly-once across query restarts") {
     val src = Files.createTempDirectory("graft-ck-src").toFile.getAbsolutePath
     val sink = Files.createTempDirectory("graft-ck-sink").toFile.getAbsolutePath
