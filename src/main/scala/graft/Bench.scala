@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 import scala.collection.mutable
 import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -164,13 +163,7 @@ object Bench {
       s""""cpus":"$cpus","passes":$passes,"stat":"median",""" +
       s""""failed":${run.failed},"cold_total":$coldTotal,"families":$fams,""" +
       s""""anchors":$anchors,"queries":$qs,"detail":$detail}"""
-    val p = Paths.get(outPath)
-    Option(p.getParent).foreach(Files.createDirectories(_))
-    // atomic: a kill mid-write must never leave truncated JSON at outPath
-    val tmp = Paths.get(outPath + ".tmp")
-    Files.write(tmp, full.getBytes(UTF_8))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Verify.writeAtomically(Paths.get(outPath), full)
     line
   }
 

@@ -15,7 +15,8 @@ object OlistMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: OlistMain <csvSrcDir> <lakeDir> [master]")
     val Array(src, lake) = args.take(2)
-    val spark = SparkSession.builder()
+    // The posture e2ebench measures this pipeline under (SparkPosture).
+    val spark = graft.SparkPosture(SparkSession.builder())
       .master(if (args.length > 2) args(2) else "local[*]")
       .appName("olist-pipeline")
       .config("spark.sql.session.timeZone", "UTC")

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TempDirs.withTempDir
 
 /** Drives `Bench.select`/`Bench.sweep`/`Bench.report` with a tiny
   * registry: named queries pick the sweep, a query is timed by
@@ -35,11 +36,11 @@ class BenchSpec extends AnyFunSuite {
       "failed: java.lang.IllegalStateException: query construction failed")
     assert(!run.samples.contains("q_throwing"))
     assert(run.exitCode != 0)
-    val out = Files.createTempDirectory("bench-spec").resolve("bench.json")
-    val line = Bench.report(run, "sfX", "4", 2, out.toString)
+    val (line, artifact) = withTempDir { dir =>
+      val out = dir.resolve("bench.json")
+      (Bench.report(run, "sfX", "4", 2, out.toString), Files.readString(out))
+    }
     assert(line.contains("\"failed\":1,"))
-    val artifact = Files.readString(out)
-    Files.delete(out); Files.delete(out.getParent)
     assert(artifact.contains(
       "\"q_throwing\":{\"status\":\"failed: java.lang.IllegalStateException"))
     assert(artifact.contains("\"q_clean\":{\"status\":\"ok\",\"samples\":["))
@@ -60,10 +61,10 @@ class BenchSpec extends AnyFunSuite {
 
   test("the median is warm: pass 1 is reported as cold, not sampled into the median") {
     val run = Bench.Sweep(Seq("q_x"), Map("q_x" -> Vector(10.0, 1.0, 2.0)), Map.empty)
-    val out = Files.createTempDirectory("bench-spec").resolve("bench.json")
-    val line = Bench.report(run, "sfX", "4", 3, out.toString)
-    val artifact = Files.readString(out)
-    Files.delete(out); Files.delete(out.getParent)
+    val (line, artifact) = withTempDir { dir =>
+      val out = dir.resolve("bench.json")
+      (Bench.report(run, "sfX", "4", 3, out.toString), Files.readString(out))
+    }
     assert(line.contains("\"value\":1.5,"))
     assert(artifact.contains("\"median\":1.5,\"cold\":10.0"))
     assert(artifact.contains("\"queries\":{\"q_x\":1.5}"))

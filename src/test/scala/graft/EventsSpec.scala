@@ -1,9 +1,9 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TempDirs.withTempDir
 import graft.streaming.Events
 
 /** Session-window semantics + the true Structured Streaming path. */
@@ -117,27 +117,29 @@ class EventsSpec extends AnyFunSuite {
   }
 
   test("streaming tumbling agg (readStream + watermark) matches batch result") {
-    val dir = Files.createTempDirectory("graft-stream").toFile
-    val data = Seq(
-      (1L, "2024-01-01 00:01:00", 10L, "click", 1.5, """{"k":1}"""),
-      (2L, "2024-01-01 00:04:00", 11L, "click", 2.5, """{"k":2}"""),
-      (3L, "2024-01-01 00:12:00", 10L, "view", 4.0, """{"k":3}"""))
-      .toDF("event_id", "ts_s", "user_id", "event_type", "value", "props")
-      .select(col("event_id"), col("ts_s").cast("timestamp").as("ts"),
-        col("user_id"), col("event_type"), col("value"), col("props"))
-    data.write.mode("overwrite").parquet(dir.getAbsolutePath)
+    withTempDir { tmp =>
+      val dir = tmp.resolve("events").toFile
+      val data = Seq(
+        (1L, "2024-01-01 00:01:00", 10L, "click", 1.5, """{"k":1}"""),
+        (2L, "2024-01-01 00:04:00", 11L, "click", 2.5, """{"k":2}"""),
+        (3L, "2024-01-01 00:12:00", 10L, "view", 4.0, """{"k":3}"""))
+        .toDF("event_id", "ts_s", "user_id", "event_type", "value", "props")
+        .select(col("event_id"), col("ts_s").cast("timestamp").as("ts"),
+          col("user_id"), col("event_type"), col("value"), col("props"))
+      data.write.mode("overwrite").parquet(dir.getAbsolutePath)
 
-    val q = Events.streamingTumbling(spark, dir.getAbsolutePath)
-      .writeStream.format("memory").queryName("tumbling_test")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
+      val q = Events.streamingTumbling(spark, dir.getAbsolutePath)
+        .writeStream.format("memory").queryName("tumbling_test")
+        .outputMode("complete").start()
+      try q.processAllAvailable() finally q.stop()
 
-    val got = spark.table("tumbling_test")
-      .select("bucket_start", "event_type", "event_count", "value_sum")
-      .orderBy("bucket_start", "event_type")
-      .collect().map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3)))
-    assert(got.toSeq == Seq(
-      ("2024-01-01 00:00:00.0", "click", 2L, 4.0),
-      ("2024-01-01 00:10:00.0", "view", 1L, 4.0)))
+      val got = spark.table("tumbling_test")
+        .select("bucket_start", "event_type", "event_count", "value_sum")
+        .orderBy("bucket_start", "event_type")
+        .collect().map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3)))
+      assert(got.toSeq == Seq(
+        ("2024-01-01 00:00:00.0", "click", 2L, 4.0),
+        ("2024-01-01 00:10:00.0", "view", 1L, 4.0)))
+    }
   }
 }

@@ -11,19 +11,19 @@ import graft.tools.FuzzVerify
 class FuzzVerifySpec extends AnyFunSuite {
 
   test("instances are deterministic in (seed0, n)") {
-    val a = FuzzVerify.instances(42L, 30).map { case (n, i) => (n, i.sql) }
-    val b = FuzzVerify.instances(42L, 30).map { case (n, i) => (n, i.sql) }
+    val a = FuzzVerify.instances(42L, 30).map(q => (q.name, q.oracle.get))
+    val b = FuzzVerify.instances(42L, 30).map(q => (q.name, q.oracle.get))
     assert(a == b)
   }
 
   test("different seeds draw different parameters") {
-    val a = FuzzVerify.instances(42L, 10).map(_._2.sql)
-    val c = FuzzVerify.instances(43L, 10).map(_._2.sql)
+    val a = FuzzVerify.instances(42L, 10).map(_.oracle.get)
+    val c = FuzzVerify.instances(43L, 10).map(_.oracle.get)
     assert(a != c, "seed must influence drawn parameters")
   }
 
   test("a 50-instance run covers all templates near-evenly") {
-    val names = FuzzVerify.instances(42L, 50).map(_._1)
+    val names = FuzzVerify.instances(42L, 50).map(_.name)
     val byTemplate = names.groupBy(_.take(4))
     assert(byTemplate.size == FuzzVerify.templates.length)
     val sizes = byTemplate.values.map(_.size)
@@ -40,14 +40,16 @@ class FuzzVerifySpec extends AnyFunSuite {
     // regenerate empty instances fails CI, not a fuzz batch.
     val insts = FuzzVerify.instances(0L, 600)
     val lshT = "b\\.nrm\\) >= (0\\.[0-9]+)".r
-    insts.filter(_._1.contains("lsh_thresh")).foreach { case (n, i) =>
-      val ts = lshT.findAllMatchIn(i.sql).map(_.group(1).toDouble).toSeq
+    insts.filter(_.name.contains("lsh_thresh")).foreach { q =>
+      val n = q.name
+      val ts = lshT.findAllMatchIn(q.oracle.get).map(_.group(1).toDouble).toSeq
       assert(ts.nonEmpty, s"$n: no threshold literal in SQL")
       ts.foreach(t => assert(t >= 0.249 && t <= 0.401, s"$n: threshold $t"))
     }
     val qgT = "avg_word_len <= ([0-9.]+)".r
-    insts.filter(_._1.contains("qual_gate")).foreach { case (n, i) =>
-      val t = qgT.findFirstMatchIn(i.sql).map(_.group(1).toDouble)
+    insts.filter(_.name.contains("qual_gate")).foreach { q =>
+      val n = q.name
+      val t = qgT.findFirstMatchIn(q.oracle.get).map(_.group(1).toDouble)
       assert(t.exists(v => v >= 4.49 && v <= 9.01), s"$n: maxAvg $t")
     }
   }
@@ -55,8 +57,8 @@ class FuzzVerifySpec extends AnyFunSuite {
   test("every template emits SQL that names at least one base table") {
     val tables = Seq("lineitem", "orders", "part", "customer", "documents",
       "embeddings")
-    FuzzVerify.instances(42L, 10).foreach { case (n, i) =>
-      assert(tables.exists(i.sql.contains), s"$n sql references no table")
+    FuzzVerify.instances(42L, 10).foreach { q =>
+      assert(tables.exists(q.oracle.get.contains), s"${q.name} sql references no table")
     }
   }
 }

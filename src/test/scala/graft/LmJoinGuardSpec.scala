@@ -1,12 +1,14 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.Path
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec,
+  SortMergeJoinExec}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs.withTempDir
 import graft.operators.Learn
 
 /** VERDICT r17 item 2: the q102/q103 corpus-LM join must not FORCE a
@@ -36,9 +38,7 @@ class LmJoinGuardSpec extends AnyFunSuite {
     * vocabulary with doc-dependent stride, so nearly every bigram is
     * distinct — the "LM grows with the corpus" regime the guard exists
     * for. Deterministic (index arithmetic, no RNG). */
-  private def plantFixture(): String = {
-    val dir = Files.createTempDirectory("lmguard").toFile
-    dir.deleteOnExit()
+  private def plantFixture(dir: Path): String = {
     val rows = (0 until 400).map { d =>
       val words = (0 until 40)
         .map(j => s"w${(d * 37 + j * (d % 13 + 1)) % 4096}")
@@ -53,61 +53,62 @@ class LmJoinGuardSpec extends AnyFunSuite {
     spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 2), schema)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir.getAbsolutePath
+    dir.toString
   }
 
   private def lmJoinKinds(name: String, dir: String): (Boolean, Boolean) = {
-    val plan = SparkEntry.queries(name)(spark, dir)
-      .queryExecution.sparkPlan.toString
+    val nodes = TestPlans.nodes(SparkEntry.queries(name)(spark, dir).queryExecution.sparkPlan)
     // the LM join is the only equi-join in q102/q103, so plan-wide
     // presence checks identify its strategy unambiguously.
-    (plan.contains("BroadcastHashJoin"),
-      plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"))
+    (nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      nodes.exists(n => n.isInstanceOf[SortMergeJoinExec] || n.isInstanceOf[ShuffledHashJoinExec]))
   }
 
   test("planted large-vocab fixture: over-cap corpus degrades the LM join " +
       "to a shuffle join with identical results") {
-    val dir = plantFixture()
-    val onDisk = Learn.corpusBytes(spark, dir)
-    assert(onDisk > 0, "fixture produced no bytes")
-    for (name <- Seq("q102_bigram_lm", "q103_dsir_weights")) {
-      // Posture A — under the default 1 GiB cap: hinted broadcast plan.
-      val (bhjSmall, _) = lmJoinKinds(name, dir)
-      assert(bhjSmall, s"$name: under-cap corpus should plan a broadcast LM join")
-      val expected = SparkEntry.queries(name)(spark, dir)
-        .collect().map(_.toString).sorted
+    withTempDir { tmp =>
+      val dir = plantFixture(tmp)
+      val onDisk = Learn.corpusBytes(spark, dir)
+      assert(onDisk > 0, "fixture produced no bytes")
+      for (name <- Seq("q102_bigram_lm", "q103_dsir_weights")) {
+        // Posture A — under the default 1 GiB cap: hinted broadcast plan.
+        val (bhjSmall, _) = lmJoinKinds(name, dir)
+        assert(bhjSmall, s"$name: under-cap corpus should plan a broadcast LM join")
+        val expected = SparkEntry.queries(name)(spark, dir)
+          .collect().map(_.toString).sorted
 
-      // "LM exceeds the broadcast threshold" simulated the way the planner
-      // would see it on a 10 GB LM: size estimates above the threshold ⇒
-      // no estimate-based BHJ. autoBroadcastJoinThreshold=-1 (both static
-      // and AQE) is the planner's stand-in for that, set BEFORE planning.
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        // Posture B — contrast leg: with the hint still FORCED (under-cap),
-        // the threshold is ignored and the plan broadcasts anyway. This is
-        // exactly the 8 GB-hard-fail hazard the guard exists to remove.
-        val (bhjForced, _) = lmJoinKinds(name, dir)
-        assert(bhjForced,
-          s"$name: hinted plan should ignore the threshold (guard is load-bearing)")
+        // "LM exceeds the broadcast threshold" simulated the way the planner
+        // would see it on a 10 GB LM: size estimates above the threshold ⇒
+        // no estimate-based BHJ. autoBroadcastJoinThreshold=-1 (both static
+        // and AQE) is the planner's stand-in for that, set BEFORE planning.
+        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try {
+          // Posture B — contrast leg: with the hint still FORCED (under-cap),
+          // the threshold is ignored and the plan broadcasts anyway. This is
+          // exactly the 8 GB-hard-fail hazard the guard exists to remove.
+          val (bhjForced, _) = lmJoinKinds(name, dir)
+          assert(bhjForced,
+            s"$name: hinted plan should ignore the threshold (guard is load-bearing)")
 
-        // Posture C — over-cap: the guard drops the hint, the plan MUST
-        // degrade to a shuffle join, and the executed shuffle path must be
-        // row-identical to the broadcast path.
-        Learn.lmBroadcastCapOverride = Some(onDisk - 1)
-        val (bhjBig, shuffleBig) = lmJoinKinds(name, dir)
-        assert(!bhjBig && shuffleBig,
-          s"$name: over-cap corpus must plan a shuffle LM join (bhj=$bhjBig)")
-        val df = SparkEntry.queries(name)(spark, dir)
-        val got = df.collect().map(_.toString).sorted
-        assert(!TestPlans.nodes(df).exists(_.isInstanceOf[BroadcastHashJoinExec]),
-          s"$name: executed over-cap plan still broadcasts")
-        assert(got.sameElements(expected),
-          s"$name: shuffle-path rows differ from broadcast-path rows")
-      } finally {
-        Learn.lmBroadcastCapOverride = None
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+          // Posture C — over-cap: the guard drops the hint, the plan MUST
+          // degrade to a shuffle join, and the executed shuffle path must be
+          // row-identical to the broadcast path.
+          Learn.lmBroadcastCapOverride = Some(onDisk - 1)
+          val (bhjBig, shuffleBig) = lmJoinKinds(name, dir)
+          assert(!bhjBig && shuffleBig,
+            s"$name: over-cap corpus must plan a shuffle LM join (bhj=$bhjBig)")
+          val df = SparkEntry.queries(name)(spark, dir)
+          val got = df.collect().map(_.toString).sorted
+          assert(!TestPlans.nodes(df).exists(_.isInstanceOf[BroadcastHashJoinExec]),
+            s"$name: executed over-cap plan still broadcasts")
+          assert(got.sameElements(expected),
+            s"$name: shuffle-path rows differ from broadcast-path rows")
+        } finally {
+          Learn.lmBroadcastCapOverride = None
+          spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+          spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        }
       }
     }
   }

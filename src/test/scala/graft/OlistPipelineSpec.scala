@@ -3,18 +3,21 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TempDirs.withTempDir
 import graft.pipeline.OlistPipeline
 
 /** End-to-end parity spec for the reference pipeline on Olist-shaped
   * fixtures (FIXTURES.md §3): CSV raw load → dim_locations → master_table.
   */
-class OlistPipelineSpec extends AnyFunSuite {
+class OlistPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val spark = TestSpark.spark
   import spark.implicits._
 
   /** Write fixture CSVs exactly as the reference would read them from S3. */
   private def writeFixtures(dir: String): Unit = {
+    Files.createDirectories(java.nio.file.Paths.get(dir))
     def w(name: String, header: String, rows: Seq[String]): Unit =
       Files.write(java.nio.file.Paths.get(s"$dir/$name"),
         (header +: rows).mkString("\n").getBytes("UTF-8"))
@@ -70,9 +73,14 @@ class OlistPipelineSpec extends AnyFunSuite {
       Seq("informatica_acessorios,computers_accessories"))
   }
 
+  /** The suite's shared source CSVs and lake, removed after the last test. */
+  private val root = Files.createTempDirectory("graft-spec")
+  override def afterAll(): Unit =
+    try TempDirs.deleteRecursively(root) finally super.afterAll()
+
   private lazy val lake: String = {
-    val src = Files.createTempDirectory("olist-src").toString
-    val lakeDir = Files.createTempDirectory("olist-lake").toString
+    val src = s"$root/src"
+    val lakeDir = s"$root/lake"
     writeFixtures(src)
     OlistPipeline.runPipeline(spark, src, lakeDir)
     lakeDir
@@ -82,13 +90,15 @@ class OlistPipelineSpec extends AnyFunSuite {
   private lazy val dim = spark.read.parquet(s"$lake/dim_locations.parquet").cache()
 
   test("inferred-schema CSV read (main.py:49 fidelity) types numerics and keeps strings") {
-    val src = Files.createTempDirectory("olist-infer").toString
-    writeFixtures(src)
-    val df = graft.sources.Tables.csvInferred(spark, s"$src/olist_order_items_dataset.csv")
-    val types = df.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
-    assert(types("price") == "double" && types("order_item_id") == "int")
-    assert(types("order_id") == "string")
-    assert(df.count() == 3)
+    withTempDir { dir =>
+      val src = dir.toString
+      writeFixtures(src)
+      val df = graft.sources.Tables.csvInferred(spark, s"$src/olist_order_items_dataset.csv")
+      val types = df.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
+      assert(types("price") == "double" && types("order_item_id") == "int")
+      assert(types("order_id") == "string")
+      assert(df.count() == 3)
+    }
   }
 
   test("serving publish lands the built tables in a JDBC database (main.py last mile)") {
@@ -110,25 +120,27 @@ class OlistPipelineSpec extends AnyFunSuite {
     // item 7). 2 000 orders: every 10th gets a 2nd item, every 100th a 3rd
     // -> master grain (order_id, order_item_id) must land on exactly
     // 2000 + 200 + 20 rows.
-    val base = Files.createTempDirectory("graft-genolist").toString
-    graft.tools.PipelineBench.generate(spark, s"$base/src", nOrders = 2000L)
-    OlistPipeline.runPipeline(spark, s"$base/src", s"$base/lake")
-    val m = spark.read.parquet(s"$base/lake/master_table.parquet")
-    assert(m.count() == 2220L)
-    assert(spark.read.parquet(s"$base/lake/dim_locations.parquet").count() > 0)
-    // the generator is a pure function of (dir, nOrders): a second corpus
-    // is byte-identical (no RNG anywhere — the bench is reproducible)
-    graft.tools.PipelineBench.generate(spark, s"$base/src2", nOrders = 2000L)
-    def ordersOf(d: String) = graft.sources.Tables
-      .csvInferred(spark, s"$d/olist_orders_dataset.csv")
-      .collect().map(_.toString).sorted.toSeq
-    assert(ordersOf(s"$base/src") == ordersOf(s"$base/src2"))
+    withTempDir { dir =>
+      val base = dir.toString
+      graft.tools.PipelineBench.generate(spark, s"$base/src", nOrders = 2000L)
+      OlistPipeline.runPipeline(spark, s"$base/src", s"$base/lake")
+      val m = spark.read.parquet(s"$base/lake/master_table.parquet")
+      assert(m.count() == 2220L)
+      assert(spark.read.parquet(s"$base/lake/dim_locations.parquet").count() > 0)
+      // the generator is a pure function of (dir, nOrders): a second corpus
+      // is byte-identical (no RNG anywhere — the bench is reproducible)
+      graft.tools.PipelineBench.generate(spark, s"$base/src2", nOrders = 2000L)
+      def ordersOf(d: String) = graft.sources.Tables
+        .csvInferred(spark, s"$d/olist_orders_dataset.csv")
+        .collect().map(_.toString).sorted.toSeq
+      assert(ordersOf(s"$base/src") == ordersOf(s"$base/src2"))
+    }
   }
 
   test("pipeline re-run is idempotent (the reference's if_exists='replace' parity)") {
     val before = master.orderBy("order_id", "order_item_id").collect().map(_.toString).toSeq
     // second full run over the same lake dir must overwrite to identical state
-    val src2 = Files.createTempDirectory("olist-src2").toString
+    val src2 = s"$root/src2"
     writeFixtures(src2)
     OlistPipeline.runPipeline(spark, src2, lake)
     val after = spark.read.parquet(s"$lake/master_table.parquet")

@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
+import graft.TempDirs.withTempDir
 
 /** Production-threshold embedding dedup, pinned in CI (r12 VERDICT item 6
   * / "What's missing" #3): the driver corpora have no cosine pairs above
@@ -92,28 +91,30 @@ class PlantedClusterSpec extends AnyFunSuite {
   }
 
   test("embeddingClusters at the production threshold 0.9 matches all-pairs truth on planted dups") {
-    val vecs = plantedVectors(seed = 2026L)
-    val dir = Files.createTempDirectory("graft-planted").toString
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val rows = vecs.zipWithIndex.map { case (v, i) =>
-      Row(i.toLong, v.toSeq, 0)
+    withTempDir { tmp =>
+      val vecs = plantedVectors(seed = 2026L)
+      val dir = tmp.toString
+      val schema = StructType(Seq(
+        StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)),
+        StructField("label", IntegerType)))
+      val rows = vecs.zipWithIndex.map { case (v, i) =>
+        Row(i.toLong, v.toSeq, 0)
+      }
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.toSeq, 2), schema)
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+
+      val expected = truthClusters(vecs, 0.9)
+      assert(expected.nonEmpty, "planted corpus produced no >=0.9 components — generator broken")
+      // multiple component SIZES must occur or the transitivity claim is vacuous
+      assert(expected.map(_._3).size > 1, s"degenerate plant: all components one size")
+
+      val got = graft.operators.SimilaritySearch
+        .embeddingClusters(spark, dir, bands = 16, bitsPerBand = 4, threshold = 0.9)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == expected,
+        s"production-threshold clusters drifted: extra=${got.diff(expected)} missing=${expected.diff(got)}")
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 2), schema)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-
-    val expected = truthClusters(vecs, 0.9)
-    assert(expected.nonEmpty, "planted corpus produced no >=0.9 components — generator broken")
-    // multiple component SIZES must occur or the transitivity claim is vacuous
-    assert(expected.map(_._3).size > 1, s"degenerate plant: all components one size")
-
-    val got = graft.operators.SimilaritySearch
-      .embeddingClusters(spark, dir, bands = 16, bitsPerBand = 4, threshold = 0.9)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == expected,
-      s"production-threshold clusters drifted: extra=${got.diff(expected)} missing=${expected.diff(got)}")
   }
 }

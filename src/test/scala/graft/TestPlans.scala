@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanLike, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** The one physical-plan walk the specs share. Under AQE the plan a query
@@ -32,4 +32,13 @@ object TestPlans {
     p +: (children(p) ++ p.subqueries).flatMap(nodes)
 
   def nodes(df: DataFrame): Seq[SparkPlan] = nodes(finalPlan(df))
+
+  /** Does a file scan in `df`'s plan carry a partition filter on `column`?
+    * A filter applied after the scan prunes nothing. */
+  def prunesPartitionsOn(df: DataFrame, column: String): Boolean =
+    nodes(df).exists {
+      case s: FileSourceScanLike =>
+        s.partitionFilters.exists(_.references.exists(_.name == column))
+      case _ => false
+    }
 }

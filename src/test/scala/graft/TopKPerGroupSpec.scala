@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.TopK
+import graft.plans.{TopK, TopKPerGroupExec}
 import graft.sources.Tables
 
 /** Custom physical operator: correctness vs the window formulation, plan
@@ -30,13 +32,16 @@ class TopKPerGroupSpec extends AnyFunSuite {
   }
 
   test("plan contains partial and final GraftTopKPerGroup stages around one exchange") {
-    val plan = nativeTopK().queryExecution.executedPlan.toString
-    assert(plan.contains("GraftTopKPerGroup (partial)"), plan)
-    assert(plan.contains("GraftTopKPerGroup (final)"), plan)
-    val partialIdx = plan.indexOf("GraftTopKPerGroup (partial)")
-    val finalIdx = plan.indexOf("GraftTopKPerGroup (final)")
-    val exchangeIdx = plan.indexOf("Exchange hashpartitioning")
-    assert(finalIdx < exchangeIdx && exchangeIdx < partialIdx,
+    val plan = TestPlans.finalPlan(nativeTopK())
+    def topK(p: SparkPlan, partial: Boolean) = TestPlans.nodes(p).collectFirst {
+      case t: TopKPerGroupExec if t.partial == partial => t
+    }
+    // final → exchange → partial, each below the one before
+    val fin = topK(plan, partial = false)
+    assert(fin.isDefined, plan)
+    val exchange = TestPlans.nodes(fin.get).collectFirst { case e: ShuffleExchangeExec => e }
+    assert(exchange.isDefined, s"expected final → exchange → partial, got:\n$plan")
+    assert(topK(exchange.get, partial = true).isDefined,
       s"expected final → exchange → partial, got:\n$plan")
   }
 

@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """Seeded oracle fuzz harness (VERDICT r14 item 5).
 
-Drives graft.tools.FuzzVerify — N seeded instances of ~10 parameterizable
+Drives graft.tools.FuzzVerify — N seeded instances of 12 parameterizable
 query templates, each rendering its DataFrame plan AND its DuckDB SQL from
-the same drawn parameters — then hash-compares every instance with the
-driver-format selfcheck. On top of the per-instance verdicts it enforces a
+the same drawn parameters, dumped through graft.Verify's dump — then
+hash-compares every instance with the driver-format selfcheck. On top of the per-instance verdicts it enforces a
 NON-TRIVIALITY floor: a fuzz run where many instances return zero rows
 proves nothing (the old q74 empty-result trap), so >25% empty results fail
 the run even if every compare "passed".

@@ -6,7 +6,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 # Args: zero or more sf DIRS (default: the three driver-generated SFs).
 # Out-of-tree corpora work too: `tools/sweep.sh /tmp/sf1` runs the full
-# 110-query oracle sweep at sf1 (generate it with tools/gen_sf.py first).
+# 113-query oracle sweep at sf1 (generate it with tools/gen_sf.py first).
 dirs=("$@")
 if [ ${#dirs[@]} -eq 0 ]; then
   dirs=(/root/testdata/sf0.001 /root/testdata/sf0.01 /root/testdata/sf0.1)

@@ -6,10 +6,12 @@
 # exact oracle is structurally infeasible at this decade.
 #
 # Disk shape: a full sf100 registry dump is ~45 GB against this box's
-# ~50 GB headroom, so the sweep dumps in SMALL BATCHES via
-# graft.tools.VerifyOne (subset oracle_sql.json included), checks each
-# batch, and deletes it before the next — at most one heavy result on
-# disk at a time. Dumps therefore never persist across code versions
+# ~50 GB headroom, so the sweep dumps in SMALL BATCHES with
+# `graft.Verify <sf> <dir> <names...>` (its oracle_sql.json covers exactly
+# the batch), checks each batch, and deletes it before the next — at most
+# one heavy result on disk at a time. GRAFT_VERIFY_COALESCE=0 keeps each
+# result's natural partitioning, so no query's last stage collapses into
+# a few writer tasks. Dumps therefore never persist across code versions
 # (the sha-rotated PASS log is the resume state, not the dumps).
 #
 # Adjudicator routing (see each tool's docstring):
@@ -143,9 +145,9 @@ dump_and_check() { # dump_and_check <batchTag> <names...>
   rm -rf "$dd"
   echo "[sweep100] $(date +%H:%M:%S) dumping ${#todo[@]} queries ($tag)" >&2
   GRAFT_XMX="${GRAFT_XMX:-32g}" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
-    SPARK_GRAFT_SHUFFLE="${SPARK_GRAFT_SHUFFLE:-64}" \
-    bash tools/run.sh graft.tools.VerifyOne "$SF" "$dd" "${todo[@]}" \
-    2>&1 | grep -iE "error|exception" | head -3 >&2 || true
+    SPARK_GRAFT_SHUFFLE="${SPARK_GRAFT_SHUFFLE:-64}" GRAFT_VERIFY_COALESCE=0 \
+    bash tools/run.sh graft.Verify "$SF" "$dd" "${todo[@]}" \
+    2>&1 | grep -iE "error|exception|failed" | head -3 >&2 || true
   if [ ! -f "$dd/oracle_sql.json" ]; then
     for q in "${todo[@]}"; do
       echo "FAIL $q: batch dump produced no oracle_sql.json" | tee -a "$LOG"
