@@ -82,8 +82,8 @@ object Tables {
     spark.read.option("header", "true").option("inferSchema", "true").csv(path)
 
   /** Overwrite parquet sink — the reference's idempotent raw layer
-    * (main.py:55-62, `if_exists='replace'`) re-expressed as an atomic
-    * overwrite; SURVEY.md §7.4 item 5.
+    * (main.py:55-62, `if_exists='replace'`) re-expressed as
+    * `mode("overwrite")`; SURVEY.md §7.4 item 5.
     *
     * Deliberately a DIRECT overwrite, not the stage+swap protocol the
     * derived-artifact writers use (ScaleLayout.writeStaged,

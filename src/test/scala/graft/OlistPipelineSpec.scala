@@ -1,11 +1,17 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.Row
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.FileSourceScanLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, LongType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TempDirs.withTempDir
+import graft.functions.Cleanse.{nullIfZero, normLower}
 import graft.pipeline.OlistPipeline
 
 /** End-to-end parity spec for the reference pipeline on Olist-shaped
@@ -237,5 +243,137 @@ class OlistPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // location resolved (Postgres would fan out the same way).
     val got = m.select("customer_location_id").collect()
     assert(got.length == 4 && got.forall(!_.isNullAt(0)))
+  }
+
+  private def lakeRead(t: String): DataFrame = spark.read.parquet(s"$lake/$t.parquet")
+
+  /** master_table over the suite's lake, with `orders`, `items` and
+    * `payments` swapped in when given. */
+  private def masterOf(orders: DataFrame = lakeRead("orders"),
+      items: DataFrame = lakeRead("order_items"),
+      payments: DataFrame = lakeRead("order_payments")): DataFrame =
+    OlistPipeline.buildMaster(orders, items, payments, lakeRead("order_reviews"),
+      lakeRead("products"), lakeRead("product_category_name_translation"),
+      lakeRead("customers"), lakeRead("sellers"), lakeRead("dim_locations"))
+
+  private def stepThreadsAlive: Set[String] =
+    Thread.getAllStackTraces.keySet.asScala.map(_.getName)
+      .filter(_.startsWith(OlistPipeline.StepThreadPrefix)).toSet
+
+  test("a missing source CSV fails loadRaw naming its table, and runPipeline writes nothing downstream") {
+    withTempDir { dir =>
+      val src = s"$dir/src"
+      writeFixtures(src)
+      Files.delete(Paths.get(s"$src/olist_order_payments_dataset.csv"))
+      val e = intercept[RuntimeException](OlistPipeline.loadRaw(spark, src, s"$dir/lake1"))
+      assert(e.getMessage.contains("order_payments"), e.getMessage)
+      assert(stepThreadsAlive.isEmpty)
+      val lakeDir = s"$dir/lake2"
+      intercept[RuntimeException](OlistPipeline.runPipeline(spark, src, lakeDir))
+      assert(!Files.exists(Paths.get(s"$lakeDir/dim_locations.parquet")))
+      assert(!Files.exists(Paths.get(s"$lakeDir/master_table.parquet")))
+      assert(stepThreadsAlive.isEmpty)
+    }
+  }
+
+  test("every job loadRaw and publishServing start carries the caller's job group") {
+    val sc = spark.sparkContext
+    val built = lake
+    val seen = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k))).getOrElse("<none>")
+        seen.add(prop("spark.jobGroup.id") -> prop("spark.job.description"))
+      }
+    }
+    System.setProperty("derby.stream.error.file", "/tmp/derby.log")
+    sc.addSparkListener(listener)
+    try withTempDir { dir =>
+      writeFixtures(s"$dir/src")
+      sc.setJobGroup("olist-steps-spec", "load and serve")
+      try {
+        OlistPipeline.loadRaw(spark, s"$dir/src", s"$dir/lake")
+        OlistPipeline.publishServing(spark, built, "jdbc:derby:memory:olistgroups;create=true")
+      } finally sc.clearJobGroup()
+      // Listener events arrive asynchronously but in order: once a later
+      // job's start is seen, every start before it has been recorded.
+      sc.setJobGroup("olist-steps-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.asScala.exists(_._1 == "olist-steps-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    val jobs = seen.asScala.toSeq.takeWhile(_._1 != "olist-steps-sentinel")
+    assert(jobs.size == seen.size - 1, "the sentinel job was never seen")
+    assert(jobs.size >= 11, jobs) // at least one job per raw table and per sink
+    assert(jobs.forall(_ == ("olist-steps-spec" -> "load and serve")), jobs)
+  }
+
+  test("fused payment aggregate equals the payTotals ⋈ payPrimary form it replaced") {
+    val payments = Seq[(String, Int, Option[String], Option[Int], Option[Double])](
+      ("a", 1, Some("credit_card"), Some(3), Some(50.00)),  // tie on 50.00 → type ASC
+      ("a", 2, Some("boleto"), Some(0), Some(50.00)),
+      ("b", 1, None, Some(2), Some(10.00)),                 // NULL type, largest sum
+      ("b", 2, Some("voucher"), Some(1), Some(5.00)),
+      ("c", 1, Some("boleto"), Some(0), Some(7.25)),        // every installment 0 → 0
+      ("c", 2, Some("boleto"), Some(0), Some(2.50)),
+      ("d", 1, Some("voucher"), Some(2), None),             // NULL value
+      ("d", 2, Some("credit_card"), None, Some(1.00)),
+      ("e", 1, Some("credit_card"), Some(1), Some(10.10)),  // several rows of one type
+      ("e", 2, Some("credit_card"), Some(2), Some(20.20)),  // outweigh one larger row
+      ("e", 3, Some("debit_card"), Some(1), Some(25.00)))
+      .toDF("order_id", "payment_sequential", "payment_type", "payment_installments", "payment_value")
+    val ids = Seq("a", "b", "c", "d", "e", "f")             // f: no payments
+    val orders = ids.map(o => (o, "c1", "delivered", "2017-01-01 00:00:00",
+      null: String, null: String, null: String, null: String))
+      .toDF("order_id", "customer_id", "order_status", "order_purchase_timestamp",
+        "order_approved_at", "order_delivered_carrier_date",
+        "order_delivered_customer_date", "order_estimated_delivery_date")
+    val items = ids.map(o => (o, 1, "p1", "s1", "2017-01-02 00:00:00", 1.0, 1.0))
+      .toDF("order_id", "order_item_id", "product_id", "seller_id", "shipping_limit_date", "price", "freight_value")
+
+    // The two-aggregate formulation buildMaster used before the fusion.
+    val money = DecimalType(12, 2)
+    val payTotals = payments.groupBy(col("order_id")).agg(
+      sum(col("payment_value").cast(money)).as("total_payment_value"),
+      coalesce(sum(nullIfZero(col("payment_installments"))), lit(0)).as("total_installments"))
+    val payPrimary = payments
+      .groupBy(col("order_id"), col("payment_type"))
+      .agg(sum(col("payment_value").cast(money)).as("type_value"))
+      .groupBy(col("order_id"))
+      .agg(min(struct(negate(col("type_value")).as("neg"), col("payment_type").as("t"))).as("top"))
+      .select(col("order_id"), col("top.t").as("primary_payment_type"))
+    val want = orders.select("order_id")
+      .join(payTotals.join(payPrimary, Seq("order_id"), "left"), Seq("order_id"), "left")
+      .select(col("order_id"), col("total_payment_value"), col("total_installments"),
+        normLower(col("primary_payment_type")).as("primary_payment_type"))
+
+    val got = masterOf(orders, items, payments)
+      .select("order_id", "total_payment_value", "total_installments", "primary_payment_type")
+    def types(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    assert(types(got) == types(want))
+    assert(got.schema("total_payment_value").dataType == DecimalType(22, 2))
+    assert(got.schema("total_installments").dataType == LongType)
+    val rows = got.orderBy("order_id").collect().toSeq
+    assert(rows == want.orderBy("order_id").collect().toSeq)
+    val byId = rows.map(r => r.getString(0) -> r).toMap
+    assert(byId("a").getString(3) == "boleto")
+    assert(byId("b").isNullAt(3) && byId("b").getLong(2) == 3L)
+    assert(byId("c").getLong(2) == 0L)
+    assert(byId("c").getDecimal(1).compareTo(new java.math.BigDecimal("9.75")) == 0)
+    assert(byId("e").getString(3) == "credit_card")
+    assert(byId("f").isNullAt(1) && byId("f").isNullAt(2))
+  }
+
+  test("buildMaster's executed plan scans order_payments once") {
+    val m = masterOf()
+    m.collect()
+    val paymentScans = TestPlans.nodes(m).count {
+      case s: FileSourceScanLike =>
+        s.relation.location.rootPaths.exists(_.getName == "order_payments.parquet")
+      case _ => false
+    }
+    assert(paymentScans == 1)
   }
 }
