@@ -1,14 +1,12 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.Q
 import graft.functions.Similarity
 import graft.sources.Tables
+import SessionLedger.memo
 
 /** Deduplication family over `documents`/`embeddings` (BASELINE.json north
   * star): exact hash dedup, n-gram Jaccard, MinHash+LSH banding, SimHash,
@@ -34,97 +32,11 @@ import graft.sources.Tables
   */
 object Dedup {
 
-  /** Session-scoped memo of persisted intermediates shared across the dedup
-    * family (shingles, MinHash signatures, SimHash signatures, exact pairs).
-    * Keyed by (session reference, data dir, tag) so repeated query
-    * invocations in one session reuse a single cache entry instead of
-    * stacking persisted copies. Holding the SparkSession itself in the key
-    * makes the key unique for the session's whole lifetime (an identity hash
-    * alone could be recycled after a stopped session is collected; the strong
-    * reference here prevents that). `releaseCaches` frees everything for a
-    * session — wired into Bench, Verify, and the dedup specs' teardown so
-    * persisted blocks never outlive the batch that needed them. */
-  /** Storage level for memoized dedup intermediates. Deserialized reuse
-    * (MEMORY_AND_DISK) is fastest when the heap is roomy — but deserialized
-    * block sizes are SizeEstimator ESTIMATES, and under a tight heap the
-    * underestimation lets the store overfill physical heap before eviction
-    * kicks in: the r15 2 GiB full-registry run died of raw
-    * OutOfMemoryError in q48 with every family memo warm, while q48 ALONE
-    * at 2 GiB passed. Serialized blocks are byte-exact accounted and ~4×
-    * smaller (the same finding that moved the CC edge checkpoint to SER at
-    * sf100, r12), so small heaps trade per-reuse deserialization CPU for
-    * survival: SER below a 6 GiB max heap. A pure function of the heap
-    * size, so the spec can pin both sides without forking a JVM per heap
-    * size (MemoLevelSpec). */
-  private[graft] def memoLevelFor(maxHeapBytes: Long): StorageLevel =
-    if (maxHeapBytes < (6L << 30)) StorageLevel.MEMORY_AND_DISK_SER
-    else StorageLevel.MEMORY_AND_DISK
-
-  private[operators] val memoLevel: StorageLevel =
-    memoLevelFor(Runtime.getRuntime.maxMemory)
-
-  private val memoCache = TrieMap.empty[(SparkSession, String, String), DataFrame]
-  private val hookedSessions =
-    TrieMap.empty[SparkSession, org.apache.spark.scheduler.SparkListener]
-
-  private[operators] def memo(spark: SparkSession, dir: String, tag: String)(
-      build: => DataFrame): DataFrame = memoCache.synchronized {
-    // synchronized: TrieMap.getOrElseUpdate may run `build` twice under a
-    // concurrent first access, persisting an orphan copy releaseCaches could
-    // never free. On a session's first entry, hook application-end so a
-    // session stopped WITHOUT a manual releaseCaches doesn't pin its plans
-    // and persisted blocks in this JVM-global map forever. The listener
-    // reference is kept so releaseCaches can deregister it — repeated
-    // memo/release cycles must not accumulate listeners on the context.
-    hookedSessions.getOrElseUpdate(spark, {
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          releaseCaches(spark)
-      }
-      spark.sparkContext.addSparkListener(l)
-      l
-    })
-    memoCache.getOrElseUpdate((spark, dir, tag), build)
-  }
-
-  /** Unpersist and forget every dedup intermediate cached for `spark`, and
-    * deregister the session's application-end hook. Call after a dedup batch
-    * completes (specs/bench teardown); also runs automatically when the
+  /** Unpersist every memoized intermediate and checkpoint block of `spark`
+    * (its table plans stay; see [[SessionLedger]]). Bench, Verify and the
+    * spec teardowns call it between batches; it also runs when the
     * session's application ends. */
-  def releaseCaches(spark: SparkSession): Unit = {
-    memoCache.keys.filter(_._1 eq spark).foreach { k =>
-      memoCache.remove(k).foreach(df => try df.unpersist(blocking = false) catch {
-        case NonFatal(_) => () // session already stopped: nothing to free
-      })
-    }
-    hookedSessions.remove(spark).foreach { l =>
-      try spark.sparkContext.removeSparkListener(l) catch {
-        case NonFatal(_) => () // context already stopped: nothing to remove
-      }
-    }
-    // the iterative operators' localCheckpoint blocks (final CC/PageRank/BPE
-    // iterates) live in their own session ledger — releaseCaches is the
-    // documented family-teardown entry point, so it frees those too
-    Checkpoints.release(spark)
-  }
-
-  /** Per-dir eviction for LONG-LIVED sessions (VERDICT r9 item 4): a
-    * session profiling many corpus dirs accretes one cache entry per
-    * (dir, tag) until `releaseCaches` — fine for Bench/Verify, which
-    * release at batch end, but an interactive session that has finished
-    * with one corpus should drop just that corpus's persisted blocks and
-    * keep the rest warm. */
-  def releaseCachesFor(spark: SparkSession, dir: String): Unit =
-    memoCache.keys.filter(k => (k._1 eq spark) && k._2 == dir).foreach { k =>
-      memoCache.remove(k).foreach(df => try df.unpersist(blocking = false) catch {
-        case NonFatal(_) => () // session already stopped: nothing to free
-      })
-    }
-
-  /** Test-only view of which (dir, tag) memo entries a session holds. */
-  private[graft] def memoKeysFor(spark: SparkSession): Set[(String, String)] =
-    memoCache.keys.collect { case (s, d, t) if s eq spark => (d, t) }.toSet
+  def releaseCaches(spark: SparkSession): Unit = SessionLedger.release(spark)
 
   /** Exploded, hashed, per-doc-distinct shingle relation shared by the whole
     * family, carrying TWO identities per word-3-gram: `h` = xxhash64 (an
@@ -165,7 +77,6 @@ object Dedup {
           graft.expressions.Md5Prefix.of(col("shingle").cast("binary"), 15)
             .as("x60"))
         .distinct()
-        .persist(memoLevel)
     }
 
   /** The shared toks→shingles→exploded oracle CTE prefix mirrored by every
@@ -252,7 +163,6 @@ object Dedup {
         .filter(col("jaccard") >= minJaccard)
         .select(col("doc_a"), col("doc_b"), col("na"), col("nb"),
           col("common"), col("jaccard"))
-        .persist(memoLevel)
     }
 
   /** Min-label connected components over an undirected edge list — the
@@ -270,17 +180,17 @@ object Dedup {
     // are ~4x smaller and evict/spill cleanly; each superstep streams the
     // edges once, so deserialization cost is the right trade at every
     // size. Label checkpoints stay default — they are node-grain (small).
-    val sym = Checkpoints.tracked(
+    val sym = SessionLedger.tracked(
       edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .unionByName(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
         .distinct(), StorageLevel.MEMORY_AND_DISK_SER)
-    // Superseded iterates are dropped EAGERLY (Checkpoints.drop): each
+    // Superseded iterates are dropped EAGERLY (SessionLedger.drop): each
     // round's checkpoint is only read by the next round, so live checkpoint
     // blocks stay O(1) instead of O(diameter) — the r15 concurrent-session
     // spec caught exactly these accumulating past releaseCaches. `sym` and
     // the FINAL iterate stay live (the returned plan reads the final
     // iterate) under the session ledger, freed by releaseCaches.
-    var labels = Checkpoints.tracked(
+    var labels = SessionLedger.tracked(
       sym.select(col("src").as("doc_id")).distinct()
         .withColumn("label", col("doc_id")))
     var prevCp = labels
@@ -288,16 +198,16 @@ object Dedup {
     while (changed > 0) {
       val nbrMin = sym.join(labels.select(col("doc_id").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-      val updated = Checkpoints.tracked(labels
+      val updated = SessionLedger.tracked(labels
         .join(nbrMin.withColumnRenamed("src", "doc_id"), Seq("doc_id"), "left")
         .select(col("doc_id"), col("label"),
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("new_label")))
       changed = updated.filter(col("new_label") < col("label")).count()
-      Checkpoints.drop(prevCp)
+      SessionLedger.drop(prevCp)
       prevCp = updated
       labels = updated.select(col("doc_id"), col("new_label").as("label"))
     }
-    Checkpoints.drop(sym) // only the loop reads the edge checkpoint
+    SessionLedger.drop(sym) // only the loop reads the edge checkpoint
     labels.select(col("doc_id"), col("label").as("cluster_rep"))
   }
 
@@ -336,7 +246,7 @@ object Dedup {
     memo(spark, dir, "clusters05") {
       val edges = jaccardPairs(spark, dir).filter(col("jaccard") >= 0.5)
         .select(col("doc_a"), col("doc_b"))
-      connectedComponents(edges).persist(memoLevel)
+      connectedComponents(edges)
     }
 
   /** q48 — near-dup clustering: Jaccard ≥ 0.5 pairs → connected components
@@ -459,7 +369,6 @@ object Dedup {
         min((xm * minHashA(0) + minHashB(0)) % MinHashP).as("mh0"),
         (1 until LshNumHashes).map(i =>
           min((xm * minHashA(i) + minHashB(i)) % MinHashP).as(s"mh$i")): _*)
-        .persist(memoLevel)
     }
 
   /** LSH candidate pairs: 4 bands × 4 rows; docs sharing any band hash
@@ -507,7 +416,6 @@ object Dedup {
         .withColumn("jaccard",
           col("common").cast("double") / (col("na") + col("nb") - col("common")))
         .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .persist(memoLevel)
     }
 
   val q32MinHashLsh: Q = Q(
@@ -580,7 +488,6 @@ object Dedup {
       votes.select(col("doc_id"),
         (0 until bits).map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
           .reduce(_ + _).as("simhash"))
-        .persist(memoLevel) // both sides of the band join
     }
 
   /** Banded SimHash pair search: pigeonhole-complete for hamming ≤
@@ -814,7 +721,7 @@ object Dedup {
       val edges = lshVerified(s, dir).filter(col("jaccard") >= 0.5)
         .select(col("doc_a"), col("doc_b"))
       val labels = memo(s, dir, "lshClusters05") {
-        connectedComponents(edges).persist(memoLevel)
+        connectedComponents(edges)
       }
       val labeled = qualityScores(s, dir).join(labels, Seq("doc_id"), "left")
         .withColumn("cluster_rep", coalesce(col("cluster_rep"), col("doc_id")))

@@ -68,8 +68,8 @@ object Graph {
         // tracked/drop pair keeps live checkpoint blocks O(1) across the
         // loop and lets releaseCaches free the final iterate (r15: bare
         // localCheckpoint blocks outlive every teardown).
-        val next = Checkpoints.tracked(step(es, outdeg, r, nNodes))
-        Checkpoints.drop(r)
+        val next = SessionLedger.tracked(step(es, outdeg, r, nNodes))
+        SessionLedger.drop(r)
         r = next
       }
       r

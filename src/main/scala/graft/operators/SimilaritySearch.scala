@@ -460,9 +460,8 @@ object SimilaritySearch {
       // memoized like q48's clusters05: the label-propagation loop runs
       // count() actions per superstep, so repeated in-session invocations
       // must reuse one materialization (released with Dedup.releaseCaches)
-      val labels = Dedup.memo(s, dir, "embClusters035") {
+      val labels = SessionLedger.memo(s, dir, "embClusters035") {
         clusterLabels(s, dir, bands = 8, bitsPerBand = 8, threshold = 0.35)
-          .persist(Dedup.memoLevel)
       }
       withClusterSizes(labels)
     },

@@ -818,7 +818,7 @@ object TextAnalysis {
     // tracked/drop (not bare localCheckpoint + Dataset.unpersist: the
     // latter is a silent no-op on checkpointed plans — no CacheManager
     // entry — so every batch's blocks leaked until session end, r15)
-    var cur = graft.operators.Checkpoints.tracked(init)
+    var cur = SessionLedger.tracked(init)
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     var steps = 0
     var exhausted = false
@@ -850,14 +850,14 @@ object TextAnalysis {
           m -= 1
         val batch = cands.take(m)
         out ++= batch
-        val next = graft.operators.Checkpoints.tracked(cur.select(
+        val next = SessionLedger.tracked(cur.select(
           batch.foldLeft(col("syms")) { case (c, (l, r, _)) => applyMerge(c, l, r) }
             .as("syms"), col("freq")))
-        graft.operators.Checkpoints.drop(cur)
+        SessionLedger.drop(cur)
         cur = next
       }
     }
-    graft.operators.Checkpoints.drop(cur)
+    SessionLedger.drop(cur)
     (out.toSeq, steps)
   }
 

@@ -9,7 +9,6 @@ import org.apache.spark.sql.types._
 import graft.functions.Cleanse._
 import graft.operators.Aggregates
 import graft.sources.Tables
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** The reference pipeline itself, Olist-shaped, end to end — so a user of
   * the reference can switch engines and run the exact workload they run
@@ -113,9 +112,11 @@ object OlistPipeline {
   private[graft] val StepThreadPrefix = "olist-step-"
 
   /** Runs independent named steps at the same time, one pool thread each,
-    * and returns when all have ended. Each worker runs under a copy of the
-    * caller's Spark local properties, so its jobs carry the caller's job
-    * group and description, plus one job tag for this call.
+    * and returns when all have ended. Each worker inherits a copy of the
+    * caller's Spark local properties (SparkContext keeps them in an
+    * InheritableThreadLocal, and the pool makes its threads on the caller's
+    * thread, inside `submit`), so its jobs carry the caller's job group and
+    * description, plus one job tag for this call.
     *
     * Fail-fast (pipeline.py:4-11): the first failure cancels the running
     * jobs of the sibling steps, and once every step has ended it is
@@ -123,9 +124,8 @@ object OlistPipeline {
     * as suppressed. The cancel reaches only jobs already running: a
     * sibling that finished before it, or starts its job after it, keeps
     * its output. */
-  private def concurrently(spark: SparkSession, steps: Seq[(String, () => Unit)]): Unit = {
+  private[pipeline] def concurrently(spark: SparkSession, steps: Seq[(String, () => Unit)]): Unit = {
     val sc = spark.sparkContext
-    val caller = Bridge.localProperties(sc)
     val tag = s"olist-steps-${UUID.randomUUID()}"
     val threads = new ConcurrentLinkedQueue[Thread]()
     val pool = Executors.newFixedThreadPool(steps.size max 1, { (r: Runnable) =>
@@ -137,7 +137,6 @@ object OlistPipeline {
       val done = new ExecutorCompletionService[Unit](pool)
       val names = steps.map { case (name, body) =>
         done.submit { () =>
-          Bridge.setLocalProperties(sc, caller)
           sc.addJobTag(tag)
           body()
         } -> name
@@ -307,18 +306,15 @@ object OlistPipeline {
         col("total_payment_value"), col("total_installments"),
         normLower(col("primary_payment_type")).as("primary_payment_type"),
         col("review_score_avg"), col("first_review_creation_ts"), col("last_review_answer_ts"),
-        when(col("order_delivered_customer_ts").isNotNull && col("order_purchase_ts").isNotNull,
-          fracDays(col("order_delivered_customer_ts"), col("order_purchase_ts")))
-          .otherwise(lit(null).cast(DoubleType)).as("delivery_days_actual"),
-        when(col("order_estimated_delivery_ts").isNotNull && col("order_purchase_ts").isNotNull,
-          fracDays(col("order_estimated_delivery_ts"), col("order_purchase_ts")))
-          .otherwise(lit(null).cast(DoubleType)).as("delivery_days_estimated"),
-        when(col("order_delivered_customer_ts").isNotNull && col("order_estimated_delivery_ts").isNotNull,
-          fracDays(col("order_delivered_customer_ts"), col("order_estimated_delivery_ts")))
-          .otherwise(lit(null).cast(DoubleType)).as("delivery_delay_days"),
-        when(col("order_delivered_customer_ts").isNotNull && col("order_estimated_delivery_ts").isNotNull,
-          col("order_delivered_customer_ts") > col("order_estimated_delivery_ts"))
-          .otherwise(lit(null).cast(BooleanType)).as("delivered_late_flag"))
+        // fracDays and > are already NULL when either timestamp is NULL
+        fracDays(col("order_delivered_customer_ts"), col("order_purchase_ts"))
+          .as("delivery_days_actual"),
+        fracDays(col("order_estimated_delivery_ts"), col("order_purchase_ts"))
+          .as("delivery_days_estimated"),
+        fracDays(col("order_delivered_customer_ts"), col("order_estimated_delivery_ts"))
+          .as("delivery_delay_days"),
+        (col("order_delivered_customer_ts") > col("order_estimated_delivery_ts"))
+          .as("delivered_late_flag"))
   }
 
   /** Orchestration (pipeline.py:13-18): steps run in order, fail-fast — an
@@ -342,15 +338,14 @@ object OlistPipeline {
   }
 
   /** Serving publish — the reference's LAST mile (main.py:55-62 writes every
-    * table to Postgres with batched multi-row INSERTs): push the built lake
-    * tables to a JDBC serving database via `Tables.jdbcSink` (10k batches,
+    * table to Postgres with batched multi-row INSERTs): push dim_locations
+    * and master_table from the lake to a JDBC serving database via `Tables.jdbcSink` (10k batches,
     * overwrite = if_exists='replace'). Kept separate from `runPipeline` so
     * the lake build never blocks on a serving DB being reachable; re-runs
     * are idempotent on both layers. The sinks are independent, so they run
     * concurrently (`concurrently`), fail-fast like `loadRaw`. */
-  def publishServing(spark: SparkSession, lakeDir: String, url: String,
-      tables: Seq[String] = Seq("dim_locations", "master_table")): Unit =
-    concurrently(spark, tables.distinct.map { t =>
+  def publishServing(spark: SparkSession, lakeDir: String, url: String): Unit =
+    concurrently(spark, Seq("dim_locations", "master_table").map { t =>
       t -> (() => Tables.jdbcSink(spark.read.parquet(s"$lakeDir/$t.parquet"), url, t))
     })
 }

@@ -19,33 +19,19 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Session-scoped memo of the table DataFrames (optimization r18,
-    * guide §6 "file listing"): every `spark.read.parquet(path)` builds a
-    * fresh InMemoryFileIndex (file listing) and re-reads the footer for
-    * schema inference — pure driver-side metadata work repeated by every
-    * query builder for every table reference (measured: q74's six table
-    * reads cost 0.3–0.4 s of build time per bench sample BEFORE any
-    * execution). A catalog deployment resolves a table to one cached
-    * relation; this memo reproduces that posture for the path-scan
-    * harness. It caches ONLY the logical plan + file metadata — execution
-    * still scans parquet every run; results are unaffected (the memoized
-    * plan is what the fresh read would build). Keyed weakly by session so
-    * test suites that churn sessions don't leak, and per (dir, name) so
-    * multi-SF runs in one JVM stay distinct. */
-  private val memo =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val bySession = memo.synchronized {
-      var m = memo.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        memo.put(spark, m)
-      }
-      m
-    }
-    bySession.computeIfAbsent(s"$dir/$name", _ => build(spark, dir, name))
-  }
+  /** The session's DataFrame for table `name` under `dir`, built once per
+    * (session, dir, name) and kept in [[graft.operators.SessionLedger]]
+    * (optimization r18, guide §6 "file listing"): every
+    * `spark.read.parquet(path)` builds a fresh InMemoryFileIndex (file
+    * listing) and re-reads the footer for schema inference — driver-side
+    * metadata work repeated by every query builder for every table
+    * reference (measured: q74's six table reads cost 0.3–0.4 s of build
+    * time per bench sample BEFORE any execution). Results are unaffected:
+    * the kept plan is what a fresh read would build, and execution still
+    * scans parquet every run. The plans live until the session's
+    * application ends; `Dedup.releaseCaches` keeps them. */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    graft.operators.SessionLedger.table(spark, dir, name)(build(spark, dir, name))
 
   private def build(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
@@ -99,34 +85,22 @@ object Tables {
     * (scripts/main.py:55-62: `to_sql(..., if_exists='replace',
     * method='multi', chunksize=10000)`) re-expressed on Spark's parallel
     * JDBC writer: every partition opens its own connection and flushes
-    * `batchsize`-row multi-row batches (`addBatch`/`executeBatch` — the
-    * exact analog of pandas' `method='multi'` + `chunksize`), and
-    * `overwrite` drops-and-recreates like `if_exists='replace'`.
+    * 10,000-row multi-row batches (`addBatch`/`executeBatch` — the exact
+    * analog of pandas' `method='multi'` + `chunksize`), and overwrite
+    * drops and recreates the table like `if_exists='replace'`.
     *
     * Scale contrast with the reference: pandas funnels the whole relation
     * through ONE driver-side connection; here write parallelism equals the
     * partition count, so the sink saturates the database, not the driver.
     * Cap concurrent connections for a fragile serving DB by coalescing
     * first (`df.coalesce(n)`), not by shrinking the batch. */
-  def jdbcSink(df: DataFrame, url: String, table: String,
-      batchsize: Int = 10000, overwrite: Boolean = true,
-      properties: java.util.Properties = new java.util.Properties()): Unit = {
-    val props = new java.util.Properties()
-    // stringPropertyNames() walks the DEFAULTS chain too (putAll would not),
-    // and a caller-supplied batchsize wins over the parameter's default.
-    properties.stringPropertyNames().forEach(k =>
-      props.setProperty(k, properties.getProperty(k)))
-    if (props.getProperty("batchsize") == null)
-      props.setProperty("batchsize", batchsize.toString)
-    df.write.mode(if (overwrite) "overwrite" else "append").jdbc(url, table, props)
-  }
+  def jdbcSink(df: DataFrame, url: String, table: String): Unit =
+    df.write.mode("overwrite").option("batchsize", 10000)
+      .jdbc(url, table, new java.util.Properties())
 
-  /** JDBC readback (serving-layer verification / reverse ETL). For a big
-    * table pass `partitionColumn`/bounds via `properties` so the read fans
-    * out instead of streaming through one connection. */
-  def jdbc(spark: SparkSession, url: String, table: String,
-      properties: java.util.Properties = new java.util.Properties()): DataFrame =
-    spark.read.jdbc(url, table, properties)
+  /** JDBC readback (serving-layer verification / reverse ETL). */
+  def jdbc(spark: SparkSession, url: String, table: String): DataFrame =
+    spark.read.jdbc(url, table, new java.util.Properties())
 
   /** Explicit schemas for the testdata tables (FIXTURES.md §1) — used by
     * unit tests and by any CSV round-trip of the same shapes. */

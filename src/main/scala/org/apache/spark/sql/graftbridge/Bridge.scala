@@ -1,16 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
-import java.util.Properties
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.util.Utils
 
 /** Minimal private[sql]/private[spark]-access bridge (the standard pattern
   * for Spark extension libraries): converts between the public Column API
   * and catalyst Expressions so graft's native expressions can be used from
-  * DataFrame code without registering SQL functions first, and carries a
-  * thread's Spark local properties to the threads it hands work to. */
+  * DataFrame code without registering SQL functions first. */
 object Bridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -45,15 +41,4 @@ object Bridge {
   /** external (Row) value → catalyst internal value converter for a type. */
   def toCatalystConverter(dt: org.apache.spark.sql.types.DataType): Any => Any =
     org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(dt)
-
-  /** A copy of the calling thread's Spark local properties (job group,
-    * description, job tags, scheduler pool). They are per thread: a pool
-    * thread keeps what its creator had when it was made, not what the
-    * thread that hands it work has now. */
-  def localProperties(sc: SparkContext): Properties = Utils.cloneProperties(sc.getLocalProperties)
-
-  /** Make `props` (copied, so threads never share one object) the calling
-    * thread's local properties: the jobs it starts then carry them. */
-  def setLocalProperties(sc: SparkContext, props: Properties): Unit =
-    sc.setLocalProperties(Utils.cloneProperties(props))
 }

@@ -7,10 +7,10 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, SimilaritySearch}
+import graft.operators.{Dedup, SessionLedger, SimilaritySearch}
 
-/** Concurrent-session safety (VERDICT r14 item 6): Dedup.memoCache and the
-  * listener hooks are keyed by SparkSession and synchronized, but until this
+/** Concurrent-session safety (VERDICT r14 item 6): SessionLedger's entries
+  * and hooks are keyed by SparkSession and synchronized, but until this
   * spec nothing ran two sessions through the dedup/similarity families AT
   * THE SAME TIME. Three `newSession()` children (shared SparkContext,
   * separate session state — the multi-tenant shape a long-lived driver
@@ -62,13 +62,15 @@ class ConcurrentSessionsSpec extends AnyFunSuite {
       }
       // while warm, each session owns its own memo entries
       sessions.foreach(s =>
-        assert(Dedup.memoKeysFor(s).nonEmpty, "memo should be warm per session"))
+        assert(SessionLedger.view(s).exists(_.startsWith("memo:")),
+          "memo should be warm per session"))
     } finally {
       sessions.foreach(Dedup.releaseCaches)
       pool.shutdown()
     }
     sessions.foreach(s =>
-      assert(Dedup.memoKeysFor(s).isEmpty, "memo keys must not outlive release"))
+      assert(!SessionLedger.view(s).exists(_.startsWith("memo:")),
+        "memo keys must not outlive release"))
     // releaseCaches unpersists async (blocking=false): poll briefly before
     // declaring a leak
     val deadline = System.nanoTime() + 30.seconds.toNanos

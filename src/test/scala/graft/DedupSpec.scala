@@ -16,28 +16,6 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     .select("doc_a", "doc_b")
     .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("multi-corpus sessions evict per-dir memo entries without touching other dirs") {
-    // warm memo entries for two corpora in ONE session (VERDICT r9 item 4:
-    // long-lived sessions must be able to drop a finished corpus's persisted
-    // blocks and keep the rest warm)
-    Dedup.q32MinHashLsh.run(spark, TestSpark.sf0001).count()
-    Dedup.q32MinHashLsh.run(spark, TestSpark.sf001).count()
-    val dirs = Dedup.memoKeysFor(spark).map(_._1)
-    assert(dirs.contains(TestSpark.sf0001) && dirs.contains(TestSpark.sf001))
-
-    Dedup.releaseCachesFor(spark, TestSpark.sf0001)
-    val after = Dedup.memoKeysFor(spark).map(_._1)
-    assert(!after.contains(TestSpark.sf0001),
-      "released dir must hold no memo entries")
-    assert(after.contains(TestSpark.sf001),
-      "other dirs' warm entries must survive a per-dir release")
-
-    // a released dir re-memoizes cleanly (no stale unpersisted handle reuse)
-    Dedup.q32MinHashLsh.run(spark, TestSpark.sf0001).count()
-    assert(Dedup.memoKeysFor(spark).map(_._1).contains(TestSpark.sf0001))
-    Dedup.releaseCachesFor(spark, TestSpark.sf001)
-  }
-
   test("MinHash-LSH recovers high-Jaccard pairs (recall ≥ 0.8 at J≥0.8)") {
     val cand = Dedup.q32MinHashLsh.run(spark, TestSpark.sf0001)
       .select("doc_a", "doc_b")

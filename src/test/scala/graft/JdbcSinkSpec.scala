@@ -34,12 +34,13 @@ class JdbcSinkSpec extends AnyFunSuite {
   }
 
   test("batchsize below the row count still lands every row (multi-batch path)") {
-    val orders = Tables(spark, TestSpark.sf0001, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    Tables.jdbcSink(orders, url, "orders_serving", batchsize = 37)
+    // one partition of 25,000 rows: one connection flushes three 10k batches
+    val rows = spark.range(0, 25000, 1, 1)
+      .select(col("id").as("o_orderkey"), (col("id") % 97).as("o_custkey"))
+    Tables.jdbcSink(rows, url, "orders_serving")
     val back = Tables.jdbc(spark, url, "orders_serving")
-    assert(back.count() === orders.count())
+    assert(back.count() === 25000L)
     assert(back.agg(sum(col("o_orderkey"))).head.getLong(0) ===
-      orders.agg(sum(col("o_orderkey"))).head.getLong(0))
+      rows.agg(sum(col("o_orderkey"))).head.getLong(0))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.operators.SessionLedger
 
 /** Pins the heap-adaptive storage level for memoized dedup intermediates
   * (ADVICE r15 item 3 — the change whose half-edited form broke the r15
@@ -22,16 +22,16 @@ class MemoLevelSpec extends AnyFunSuite {
 
   test("auto: serialized below a 6 GiB max heap, deserialized at/above") {
     // the r15 constrained probes ran at 2 and 4 GiB — both must auto-SER
-    assert(Dedup.memoLevelFor(2L << 30) ==
+    assert(SessionLedger.memoLevelFor(2L << 30) ==
       StorageLevel.MEMORY_AND_DISK_SER)
-    assert(Dedup.memoLevelFor(4L << 30) ==
+    assert(SessionLedger.memoLevelFor(4L << 30) ==
       StorageLevel.MEMORY_AND_DISK_SER)
-    assert(Dedup.memoLevelFor((6L << 30) - 1) ==
+    assert(SessionLedger.memoLevelFor((6L << 30) - 1) ==
       StorageLevel.MEMORY_AND_DISK_SER)
     // the boundary itself and roomy heaps keep deserialized reuse speed
-    assert(Dedup.memoLevelFor(6L << 30) ==
+    assert(SessionLedger.memoLevelFor(6L << 30) ==
       StorageLevel.MEMORY_AND_DISK)
-    assert(Dedup.memoLevelFor(128L << 30) ==
+    assert(SessionLedger.memoLevelFor(128L << 30) ==
       StorageLevel.MEMORY_AND_DISK)
   }
 }
