@@ -60,9 +60,8 @@ object Dedup {
       // positions explode from a sequence and each 3-gram is concatenated
       // in the fused post-explode projection — the array-of-shingles
       // `transform` HOF this replaces is interpreted and materialized every
-      // doc's full shingle array before the explode (same lesson as q39/
-      // q108; the memo build is the one place the whole sketch family
-      // pays it)
+      // doc's full shingle array before the explode (same lesson as q108;
+      // the memo build is the one place the whole sketch family pays it)
       Tables(spark, dir, "documents")
         .repartition(col("doc_id"))
         .withColumn("w", TextAnalysis.words(col("text")))

@@ -3,14 +3,15 @@ package graft.operators
 import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Everything the engine keeps per SparkSession: one map keyed by
-  * (session, key) and one application-end hook per session. Three kinds
-  * of entry:
+  * (session, key) and one application-end hook per SparkContext. Three
+  * kinds of entry:
   *
   *  - table plans (`table`): the DataFrame a path scan builds. Every
   *    `spark.read.parquet(path)` lists files and reads footers again; a
@@ -27,9 +28,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * `release` frees the memo and checkpoint blocks and keeps the table
   * plans: they hold no blocks, and dropping them would add file listing
-  * and footer reads to the next query. Everything a session owns,
-  * plans included, goes when its application ends. A session dropped
-  * while the application lives keeps its plans until then.
+  * and footer reads to the next query. Everything every session of a
+  * context owns, plans included, goes when its application ends. A
+  * session dropped while the application lives keeps its plans until
+  * then.
   *
   * Keys hold the session itself, not an identity hash that a later session
   * could reuse. Unpersisting a checkpoint makes it unrecomputable: `drop`
@@ -43,7 +45,9 @@ object SessionLedger {
   private final case class Memo(df: DataFrame) extends Entry
   private final case class Block(rdd: RDD[_]) extends Entry
 
-  private val entries = TrieMap.empty[(SparkSession, String), Entry]
+  /** Keyed by (owner, key): the owner is a session, or for the hook its
+    * SparkContext. */
+  private val entries = TrieMap.empty[(AnyRef, String), Entry]
 
   /** Storage level for memoized frames. Deserialized reuse
     * (MEMORY_AND_DISK) is fastest when the heap is roomy, but deserialized
@@ -63,17 +67,29 @@ object SessionLedger {
 
   private val memoLevel: StorageLevel = memoLevelFor(Runtime.getRuntime.maxMemory)
 
-  /** On a session's first entry, hook application-end so a session stopped
-    * without `release` does not pin its plans and blocks in this JVM-global
-    * map. `putIfAbsent` decides the race, so each session gets one hook. */
-  private def hook(spark: SparkSession): Unit =
-    if (entries.putIfAbsent((spark, "hook"), Hook).isEmpty)
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
-          release(spark)
-          entries.keys.filter(_._1 eq spark).foreach(entries.remove)
-        }
-      })
+  /** Frees and forgets every entry of every session on `sc` when its
+    * application ends, so sessions stopped without `release` do not pin
+    * plans and blocks in this JVM-global map. */
+  private[graft] final class ContextHook(sc: SparkContext) extends SparkListener {
+    override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+      def onContext(owner: AnyRef): Boolean = owner match {
+        case s: SparkSession => s.sparkContext eq sc
+        case other => other eq sc
+      }
+      entries.foreach {
+        case (k, e) if onContext(k._1) && entries.remove(k, e) => free(e)
+        case _ => ()
+      }
+    }
+  }
+
+  /** On the first entry of a context's first session, hook its
+    * application end. `putIfAbsent` decides the race, so each context gets
+    * one listener however many sessions it has. */
+  private def hook(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    if (entries.putIfAbsent((sc, "hook"), Hook).isEmpty) sc.addSparkListener(new ContextHook(sc))
+  }
 
   /** The session's plan for table `name` under `dir`, built once. */
   private[graft] def table(spark: SparkSession, dir: String, name: String)(
@@ -101,8 +117,13 @@ object SessionLedger {
       case _ => None
     }
 
-  private def quietly(free: => Unit): Unit =
-    try free catch { case NonFatal(_) => () } // session already stopped: nothing to free
+  /** Unpersist a memo or checkpoint block; plans and the hook hold none. */
+  private def free(e: Entry): Unit =
+    try e match {
+      case Memo(df) => df.unpersist(blocking = false)
+      case Block(r) => r.unpersist(blocking = false)
+      case _ => ()
+    } catch { case NonFatal(_) => () } // session already stopped: nothing to free
 
   /** Eager localCheckpoint with its block registered for `release`. */
   private[operators] def tracked(df: DataFrame,
@@ -116,23 +137,19 @@ object SessionLedger {
 
   /** Unpersist ONE superseded checkpoint now (loop-iterate eviction). */
   private[operators] def drop(df: DataFrame): Unit = rddOf(df).foreach { r =>
-    entries.remove((df.sparkSession, s"block:${r.id}"))
-    quietly(r.unpersist(blocking = false))
+    entries.remove((df.sparkSession, s"block:${r.id}")).foreach(free)
   }
 
   /** Unpersist every memo and checkpoint block of `spark`; its table plans
-    * and hook stay. */
+    * stay. */
   private[operators] def release(spark: SparkSession): Unit =
     entries.foreach {
-      case (k @ (s, _), e @ Memo(df)) if (s eq spark) && entries.remove(k, e) =>
-        quietly(df.unpersist(blocking = false))
-      case (k @ (s, _), e @ Block(r)) if (s eq spark) && entries.remove(k, e) =>
-        quietly(r.unpersist(blocking = false))
+      case (k, e @ (_: Memo | _: Block)) if (k._1 eq spark) && entries.remove(k, e) => free(e)
       case _ => ()
     }
 
   /** The keys a session holds (`table:`, `memo:` and `block:` entries), for
     * specs. */
   private[graft] def view(spark: SparkSession): Set[String] =
-    entries.keys.collect { case (s, k) if (s eq spark) && k != "hook" => k }.toSet
+    entries.keys.collect { case (s, k) if s eq spark => k }.toSet
 }

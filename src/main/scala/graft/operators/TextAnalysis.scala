@@ -431,42 +431,21 @@ object TextAnalysis {
     * scheme): hash every 8-char k-gram, slide a 4-position window, keep each
     * window's minimum hash, distinct per doc. Hashes are md5 — engine-
     * portable (identical in DuckDB), so unlike an xxhash64 formulation this
-    * is fully hash-checkable against the oracle. The hot path carries the
-    * digest as raw 16-byte BINARY ([[graft.expressions.Md5Raw]]): unsigned
-    * bytewise order == lowercase-hex lexicographic order, so window MIN /
-    * DISTINCT / group MIN-MAX rank identically while the built-in `md5()`'s
-    * per-row JCA lookup + 32-char hex string disappear from the per-gram
-    * loop; hex is re-derived with `lower(hex(...))` only for the doc-grain
-    * output rows. Grams are never materialized as an array — positions
-    * explode from a `sequence` and the substring is computed in the fused
-    * post-explode projection (the array-of-strings `transform` this
-    * replaces churned a per-doc gram array through an interpreted HOF).
-    * One shuffle total: whole docs repartition by doc_id BEFORE the
-    * explode (grams never ride an exchange), and the window, the
-    * (doc_id, fp) distinct, and the doc-grain agg all reuse that
-    * clustering. */
+    * is fully hash-checkable against the oracle. The oracle's explode,
+    * window, distinct and group-by are one per-document expression
+    * ([[graft.expressions.Winnowing]]): one pass over the text's bytes, a
+    * monotone deque for the window minima, no per-gram row and no shuffle.
+    * That relies on `doc_id` being the key of `documents` (the generator
+    * declares it, with disjoint ranges per replica): the oracle groups by
+    * `doc_id`, the expression by row. */
   val q39Winnowing: Q = Q(
     "q39_winnowing",
-    (s, dir) => {
-      val k = 8
-      val w = 4
-      val win = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("pos")).rowsBetween(0, w - 1)
+    (s, dir) =>
       Tables(s, dir, "documents")
-        .repartition(col("doc_id"))
-        .filter(length(col("text")) >= k)
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(1), length(col("text")) - (k - 1))).as("pos"))
-        .select(col("doc_id"), col("pos"),
-          graft.expressions.Md5Raw.of(
-            col("text").substr(col("pos"), lit(k)).cast("binary")).as("h"))
-        .withColumn("fp", min(col("h")).over(win))
-        .select(col("doc_id"), col("fp")).distinct()
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("fp_count"),
-          lower(hex(min(col("fp")))).as("min_fp"),
-          lower(hex(max(col("fp")))).as("max_fp"))
-    },
+        .filter(length(col("text")) >= 8)
+        .select(col("doc_id"),
+          graft.expressions.Winnowing.of(col("text"), k = 8, w = 4).as("fp"))
+        .select(col("doc_id"), col("fp.*")),
     Some("""WITH pos AS (
       |  SELECT doc_id, text, unnest(range(1, length(text) - 6)) AS pos
       |  FROM documents WHERE length(text) >= 8),

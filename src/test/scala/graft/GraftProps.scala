@@ -540,17 +540,19 @@ object GraftProps extends Properties("graft") {
   property("Md5Raw: hex parity and unsigned-bytewise order == hex order") =
     forAll(Gen.listOfN(2, Gen.listOf(Gen.choose(Byte.MinValue, Byte.MaxValue)))) {
       case List(aBytes, bBytes) =>
+        // the raw md5 digests graft_winnowing ranks, held as two longs each
         val (a, b) = (aBytes.toArray, bBytes.toArray)
-        def hex(d: Array[Byte]) = d.map("%02x".format(_)).mkString
-        val (da, db) = (graft.expressions.Md5Raw.digest(a),
-          graft.expressions.Md5Raw.digest(b))
-        val hexOk = hex(da) == org.apache.commons.codec.digest.DigestUtils.md5Hex(a)
-        // unsigned bytewise compare of raw digests vs String compare of hex
-        val cmpRaw = da.zip(db).collectFirst {
-          case (x, y) if x != y => (x & 0xff) compare (y & 0xff)
-        }.getOrElse(0)
-        val cmpHex = math.signum(hex(da) compare hex(db)).toInt
-        hexOk && math.signum(cmpRaw) == cmpHex
+        val h = new Array[Long](4)
+        val md = java.security.MessageDigest.getInstance("MD5")
+        graft.expressions.Winnowing.md5Into(md, java.nio.ByteBuffer.allocate(16), a, 0, a.length, h, 0)
+        graft.expressions.Winnowing.md5Into(md, java.nio.ByteBuffer.allocate(16), b, 0, b.length, h, 1)
+        val (ha, hb) = (graft.expressions.Winnowing.hexAt(h, 0).toString,
+          graft.expressions.Winnowing.hexAt(h, 1).toString)
+        val hexOk = ha == org.apache.commons.codec.digest.DigestUtils.md5Hex(a) &&
+          hb == org.apache.commons.codec.digest.DigestUtils.md5Hex(b)
+        // unsigned compare of the raw digests vs String compare of hex
+        val cmpRaw = math.signum(graft.expressions.Winnowing.compareAt(h, 0, 1))
+        hexOk && cmpRaw == math.signum(ha compare hb).toInt
       case _ => true
     }
 }
