@@ -11,29 +11,23 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, 
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowing fingerprints of one document (Schleimer, Wilkerson and Aiken,
-  * SIGMOD 2003) as `struct<fp_count, min_fp, max_fp>`: md5 every k-code-point
-  * gram, take the minimum of each w-gram window, count the distinct minima
+  * SIGMOD 2003) as `struct<fp_count, min_fp, max_fp>`: md5 every 8-code-point
+  * gram, take the minimum of each 4-gram window, count the distinct minima
   * and report the smallest and largest as lowercase hex.
   *
-  * It is the whole relational formulation in one pass over the UTF-8
-  * bytes: grams start at code points (`UTF8String.numBytesForFirstByte`,
-  * the stepping `length` and `substr` use), so gram i is `substr(text, i,
-  * k)`; window i covers grams i..i+w-1 truncated at the last gram, as
-  * `ROWS BETWEEN CURRENT ROW AND w-1 FOLLOWING` truncates it; a monotone
-  * deque gives every window minimum in O(grams). Digests stay 16 raw bytes,
-  * held as two longs and compared unsigned. Unsigned byte order is
-  * lowercase-hex order, so the minimum, maximum and distinct set equal the
-  * ones SQL computes over `md5()` hex strings. Only the two reported
-  * digests become hex.
+  * One pass over the UTF-8 bytes does the whole relational formulation:
+  * grams start at code points (`UTF8String.numBytesForFirstByte`, the
+  * stepping `length` and `substr` use), so gram i is `substr(text, i, 8)`;
+  * window i covers grams i..i+3 truncated at the last gram, as `ROWS
+  * BETWEEN CURRENT ROW AND 3 FOLLOWING` truncates it; a monotone deque gives
+  * every window minimum in O(grams). Digests stay 16 raw bytes compared
+  * unsigned, which is lowercase-hex order, so minimum, maximum and distinct
+  * set equal the ones SQL computes over `md5()` strings.
   *
-  * A document with fewer than k code points has no grams: (0, NULL, NULL).
-  * NULL text in, NULL out. `doGenCode` is one static call, so the
-  * projection stays inside whole-stage codegen. Working memory (digest,
-  * gram offsets, hashes, deque, distinct set) is per thread and reused.
+  * Fewer than 8 code points: (0, NULL, NULL); NULL in, NULL out. `doGenCode`
+  * is one static call, so the projection stays in whole-stage codegen.
   */
-case class Winnowing(child: Expression, k: Int, w: Int) extends UnaryExpression {
-  require(k >= 1 && w >= 1, s"graft_winnowing needs k, w >= 1, got k=$k w=$w")
-
+case class Winnowing(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string input")
@@ -42,10 +36,10 @@ case class Winnowing(child: Expression, k: Int, w: Int) extends UnaryExpression 
   override def prettyName: String = "graft_winnowing"
 
   override def nullSafeEval(input: Any): Any =
-    Winnowing.fingerprints(input.asInstanceOf[UTF8String], k, w)
+    Winnowing.fingerprints(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Winnowing.fingerprints($c, $k, $w)")
+    defineCodeGen(ctx, ev, c => s"graft.expressions.Winnowing.fingerprints($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -53,25 +47,29 @@ case class Winnowing(child: Expression, k: Int, w: Int) extends UnaryExpression 
 
 object Winnowing {
   /** Column wrapper for DataFrame call sites. */
-  def of(text: org.apache.spark.sql.Column, k: Int, w: Int): org.apache.spark.sql.Column =
+  def of(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.graftbridge.Bridge.column(
-      Winnowing(org.apache.spark.sql.graftbridge.Bridge.expression(text), k, w))
+      Winnowing(org.apache.spark.sql.graftbridge.Bridge.expression(text)))
+
+  private[graft] val GramChars = 8 // code points per gram
+  private val WindowGrams = 4
+  private[graft] val KeptBytes = 16 << 10 // longest text whose Scratch a thread keeps
 
   private val resultType: StructType = StructType(Seq(
     StructField("fp_count", LongType, nullable = false),
     StructField("min_fp", StringType),
     StructField("max_fp", StringType)))
 
-  /** One thread's working memory, grown to the longest document it saw.
-    * MessageDigest is stateful but reset by `digest()`, and executor task
-    * threads never share an expression evaluation. */
+  /** Working memory, grown to fit exactly. A thread keeps one for texts up
+    * to `KeptBytes`; a longer text gets its own. MessageDigest is reset by
+    * `digest()`, and task threads never share an expression evaluation. */
   private final class Scratch {
     val md: MessageDigest = MessageDigest.getInstance("MD5")
     val digest: ByteBuffer = ByteBuffer.allocate(16)
-    var starts = new Array[Int](64) // byte offset of each code point, then the end
-    var hashes = new Array[Long](64) // gram g's digest at (2g, 2g + 1)
-    var deque = new Array[Int](32) // gram positions with increasing digests
-    var slots = new Array[Int](64) // distinct minima: gram position + 1, 0 = empty
+    var starts = new Array[Int](0) // byte offset of each code point, then the end
+    var hashes = new Array[Long](0) // gram g's digest at (2g, 2g + 1)
+    var deque = new Array[Int](0) // gram positions with increasing digests
+    var slots = new Array[Int](0) // distinct minima: gram position + 1, 0 = empty
   }
 
   private val scratch: ThreadLocal[Scratch] = ThreadLocal.withInitial(() => new Scratch)
@@ -110,13 +108,13 @@ object Winnowing {
   }
 
   /** Java-callable from generated code. */
-  def fingerprints(text: UTF8String, k: Int, w: Int): InternalRow = {
-    val sc = scratch.get()
+  def fingerprints(text: UTF8String): InternalRow = {
+    val sc = if (text.numBytes() <= KeptBytes) scratch.get() else new Scratch
     val buf = text.getByteBuffer // the row's bytes in place when array-backed
     val bytes = buf.array()
     val end = buf.arrayOffset() + buf.position() + text.numBytes()
 
-    if (sc.starts.length <= text.numBytes()) sc.starts = new Array[Int](text.numBytes() * 2 + 1)
+    if (sc.starts.length <= text.numBytes()) sc.starts = new Array[Int](text.numBytes() + 1)
     val starts = sc.starts
     var chars = 0
     var i = buf.arrayOffset() + buf.position()
@@ -127,14 +125,14 @@ object Winnowing {
     }
     starts(chars) = end // a truncated last code point ends at the last byte
 
-    val grams = chars - k + 1
+    val grams = chars - GramChars + 1
     if (grams <= 0) return new GenericInternalRow(Array[Any](0L, null, null))
-    if (sc.hashes.length < 2 * grams) {
-      sc.hashes = new Array[Long](4 * grams)
-      sc.deque = new Array[Int](2 * grams)
+    if (sc.deque.length < grams) {
+      sc.hashes = new Array[Long](2 * grams)
+      sc.deque = new Array[Int](grams)
     }
     val h = sc.hashes
-    val capacity = Integer.highestOneBit(grams) << 2 // load factor <= 1/2
+    val capacity = Integer.highestOneBit(2 * grams - 1) << 1 // load factor <= 1/2
     if (sc.slots.length < capacity) sc.slots = new Array[Int](capacity)
     else java.util.Arrays.fill(sc.slots, 0, capacity, 0)
     val slots = sc.slots
@@ -147,11 +145,11 @@ object Winnowing {
     var maxAt = -1
     // gram g is hashed as it enters the deque; the minimum of window
     // `start` is the deque's front once positions before `start` have left it
-    var start = 1 - w
+    var start = 1 - WindowGrams
     var g = 0
     while (start < grams) {
       if (g < grams) {
-        md5Into(sc.md, sc.digest, bytes, starts(g), starts(g + k) - starts(g), h, g)
+        md5Into(sc.md, sc.digest, bytes, starts(g), starts(g + GramChars) - starts(g), h, g)
         while (tail > head && compareAt(h, dq(tail - 1), g) >= 0) tail -= 1
         dq(tail) = g
         tail += 1

@@ -427,24 +427,20 @@ object TextAnalysis {
        |  CAST(CAST(SUM(tokens) AS BIGINT) AS DOUBLE) / 2000.0 AS fill_frac
        |FROM sharded GROUP BY shard_id""".stripMargin))
 
-  /** q39 — winnowing fingerprints (the rolling-hash document-fingerprint
-    * scheme): hash every 8-char k-gram, slide a 4-position window, keep each
-    * window's minimum hash, distinct per doc. Hashes are md5 — engine-
-    * portable (identical in DuckDB), so unlike an xxhash64 formulation this
-    * is fully hash-checkable against the oracle. The oracle's explode,
-    * window, distinct and group-by are one per-document expression
-    * ([[graft.expressions.Winnowing]]): one pass over the text's bytes, a
-    * monotone deque for the window minima, no per-gram row and no shuffle.
-    * That relies on `doc_id` being the key of `documents` (the generator
-    * declares it, with disjoint ranges per replica): the oracle groups by
-    * `doc_id`, the expression by row. */
+  /** q39 — winnowing fingerprints: md5 every 8-char gram, keep each
+    * 4-position window's minimum, distinct per doc. md5 is identical in
+    * DuckDB, so the result is hash-checkable against the oracle. The
+    * oracle's explode, window, distinct and group-by are one per-document
+    * expression ([[graft.expressions.Winnowing]]): no per-gram row and no
+    * shuffle. That relies on `doc_id` being the key of `documents` (the
+    * generator declares it, with disjoint ranges per replica): the oracle
+    * groups by `doc_id`, the expression by row. */
   val q39Winnowing: Q = Q(
     "q39_winnowing",
     (s, dir) =>
       Tables(s, dir, "documents")
-        .filter(length(col("text")) >= 8)
-        .select(col("doc_id"),
-          graft.expressions.Winnowing.of(col("text"), k = 8, w = 4).as("fp"))
+        .filter(length(col("text")) >= graft.expressions.Winnowing.GramChars)
+        .select(col("doc_id"), graft.expressions.Winnowing.of(col("text")).as("fp"))
         .select(col("doc_id"), col("fp.*")),
     Some("""WITH pos AS (
       |  SELECT doc_id, text, unnest(range(1, length(text) - 6)) AS pos

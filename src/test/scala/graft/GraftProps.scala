@@ -537,6 +537,7 @@ object GraftProps extends Properties("graft") {
           got.getUTF8String(i).toString == want(i))
     }
 
+  // covers the digest helpers of graft_winnowing, folded from Md5Raw
   property("Md5Raw: hex parity and unsigned-bytewise order == hex order") =
     forAll(Gen.listOfN(2, Gen.listOf(Gen.choose(Byte.MinValue, Byte.MaxValue)))) {
       case List(aBytes, bBytes) =>

@@ -39,8 +39,8 @@ class WinnowingSpec extends AnyFunSuite {
 
   /** q39's shape over any documents frame. */
   private def winnowed(docs: DataFrame): DataFrame =
-    docs.filter(length(col("text")) >= 8)
-      .select(col("doc_id"), Winnowing.of(col("text"), 8, 4).as("fp"))
+    docs.filter(length(col("text")) >= Winnowing.GramChars)
+      .select(col("doc_id"), Winnowing.of(col("text")).as("fp"))
       .select(col("doc_id"), col("fp.*"))
 
   private def rows(df: DataFrame): Seq[(Long, Long, String, String)] =
@@ -92,8 +92,24 @@ class WinnowingSpec extends AnyFunSuite {
     assert(rows(got) == rows(reference(edgeDocs(spark))))
   }
 
+  test("a text longer than the kept scratch equals the reference, and short texts after it") {
+    // mixed 1-, 2-, 3- and 4-byte code points with repeats, past KeptBytes
+    val rnd = new scala.util.Random(39)
+    val alphabet = Seq("a", "b", "c", " ", "é", "世", "😀")
+    val long = new StringBuilder
+    while (long.toString.getBytes("UTF-8").length <= Winnowing.KeptBytes)
+      long ++= Seq.fill(1000)(alphabet(rnd.nextInt(alphabet.size))).mkString
+    val texts = edgeTexts.take(6) ++ Seq(Some(long.toString)) ++ edgeTexts.drop(6)
+    val docs = spark.sparkContext
+      .parallelize(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }, 1)
+      .toDF("doc_id", "text")
+    val want = rows(reference(docs))
+    assert(want.exists(r => r._1 == 6L && r._2 > 1000L))
+    assert(rows(winnowed(docs)) == want)
+  }
+
   test("NULL text gives NULL; fewer than k code points give (0, NULL, NULL)") {
-    val r = edgeDocs(spark).select(Winnowing.of(col("text"), 8, 4).as("fp"))
+    val r = edgeDocs(spark).select(Winnowing.of(col("text")).as("fp"))
       .select(col("fp.*")).collect()
     assert(r(0).isNullAt(0))
     assert(r(1).getLong(0) == 0L && r(1).isNullAt(1) && r(1).isNullAt(2))
