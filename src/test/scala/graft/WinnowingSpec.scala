@@ -47,6 +47,16 @@ class WinnowingSpec extends AnyFunSuite {
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3)))
       .toSeq.sortBy(_._1)
 
+  /** Past the scratch a thread keeps: mixed 1- to 4-byte code points. */
+  private val longText: String = {
+    val rnd = new scala.util.Random(39)
+    val alphabet = Seq("a", "b", "c", " ", "é", "世", "😀")
+    val sb = new StringBuilder
+    while (sb.toString.getBytes("UTF-8").length <= Winnowing.KeptBytes)
+      sb ++= Seq.fill(1000)(alphabet(rnd.nextInt(alphabet.size))).mkString
+    sb.toString
+  }
+
   private val edgeTexts: Seq[Option[String]] = Seq(
     None,
     Some("abcdefg"), // 7 code points: no gram
@@ -60,7 +70,8 @@ class WinnowingSpec extends AnyFunSuite {
     Some("😀 smile 😀😀 grin 🙂 end😀"), // 4-byte, two UTF-16 units each
     Some("😀😀😀😀😀😀😀😀"), // 8 code points, 32 bytes
     Some("世界世界世界世"), // 7 code points, 21 bytes
-    Some("é́é́é́é́x")) // combining marks count as code points
+    Some("é́é́é́é́x"), // combining marks count as code points
+    Some(longText))
 
   /** An RDD scan, not a local relation: the optimizer would fold a
     * projection over local rows through the interpreted path. */
@@ -80,6 +91,7 @@ class WinnowingSpec extends AnyFunSuite {
     assert(want.exists(_._1 == 3L) && want.exists(_._1 == 4L))
     assert(want.exists(r => r._1 == 5L && r._2 == 1L))
     assert(want.exists(_._1 == 10L) && !want.exists(_._1 == 11L))
+    assert(want.exists(r => r._1 == 13L && r._2 > 1000L))
   }
 
   test("fingerprints equal the relational reference on edge documents (interpreted)") {
@@ -90,22 +102,6 @@ class WinnowingSpec extends AnyFunSuite {
     val got = winnowed(edgeDocs(s))
     assert(!TestPlans.nodes(got).exists(_.isInstanceOf[WholeStageCodegenExec]))
     assert(rows(got) == rows(reference(edgeDocs(spark))))
-  }
-
-  test("a text longer than the kept scratch equals the reference, and short texts after it") {
-    // mixed 1-, 2-, 3- and 4-byte code points with repeats, past KeptBytes
-    val rnd = new scala.util.Random(39)
-    val alphabet = Seq("a", "b", "c", " ", "é", "世", "😀")
-    val long = new StringBuilder
-    while (long.toString.getBytes("UTF-8").length <= Winnowing.KeptBytes)
-      long ++= Seq.fill(1000)(alphabet(rnd.nextInt(alphabet.size))).mkString
-    val texts = edgeTexts.take(6) ++ Seq(Some(long.toString)) ++ edgeTexts.drop(6)
-    val docs = spark.sparkContext
-      .parallelize(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }, 1)
-      .toDF("doc_id", "text")
-    val want = rows(reference(docs))
-    assert(want.exists(r => r._1 == 6L && r._2 > 1000L))
-    assert(rows(winnowed(docs)) == want)
   }
 
   test("NULL text gives NULL; fewer than k code points give (0, NULL, NULL)") {
