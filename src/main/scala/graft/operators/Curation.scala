@@ -295,22 +295,7 @@ object Curation {
       |  (cum_tokens - tokens) // 2000 AS shard_id
       |FROM ordered""".stripMargin))
 
-  /** q110 — source-similarity matrix: pairwise TOTAL-VARIATION distance
-    * between per-source unigram distributions — the domain-similarity
-    * input to mixture design (which sources are near-duplicates of each
-    * other's distribution, which are outliers; feeds q89's rates).
-    *
-    * TV needs no logs (unlike KL), so it stays integer-exact and
-    * hash-checkable: per-source probabilities quantize to q = (10⁶·cnt)
-    * div total, and for a pair (a, b),  Σ_t |q_a − q_b| over the UNION
-    * vocabulary = Q_a + Q_b − 2·Σ_{t∈both} min(q_a, q_b) — so one INNER
-    * join on term (terms private to one source contribute via the Q
-    * totals) computes the whole union-sum. tv = that / (2·10⁶) ∈ [0, 1].
-    * Scale shape: one (source, term) count aggregate (map-side
-    * combinable), a source-grain totals relation (broadcasts), and a
-    * term-keyed self-join whose fan-out is sources-per-term choose 2 —
-    * vocabulary-linear for a bounded source set. */
-  /** q110 core over any (source, text) relation — factored out so the spec
+  /** q112 core over any (source, text) relation — factored out so the spec
     * can plant a disjoint-vocabulary source pair. The pair grid comes from
     * a cross of the SOURCE-GRAIN relation (bounded set — documented tiny
     * cartesian, PlanAuditSpec deliberate list), left-joined to the
@@ -351,6 +336,21 @@ object Curation {
             / lit(2000000.0)).as("tv"))
   }
 
+  /** q112 — source-similarity matrix: pairwise TOTAL-VARIATION distance
+    * between per-source unigram distributions — the domain-similarity
+    * input to mixture design (which sources are near-duplicates of each
+    * other's distribution, which are outliers; feeds q89's rates).
+    *
+    * TV needs no logs (unlike KL), so it stays integer-exact and
+    * hash-checkable: per-source probabilities quantize to q = (10⁶·cnt)
+    * div total, and for a pair (a, b),  Σ_t |q_a − q_b| over the UNION
+    * vocabulary = Q_a + Q_b − 2·Σ_{t∈both} min(q_a, q_b) — so one INNER
+    * join on term (terms private to one source contribute via the Q
+    * totals) computes the whole union-sum. tv = that / (2·10⁶) ∈ [0, 1].
+    * Scale shape: one (source, term) count aggregate (map-side
+    * combinable), a source-grain totals relation (broadcasts), and a
+    * term-keyed self-join whose fan-out is sources-per-term choose 2 —
+    * vocabulary-linear for a bounded source set. */
   val q110SourceSimilarity: Q = Q(
     "q112_source_similarity",
     (s, dir) => sourceTv(Tables(s, dir, "documents")),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.Q
@@ -210,23 +211,36 @@ object Dedup {
     labels.select(col("doc_id"), col("label").as("cluster_rep"))
   }
 
-  /** Shared SQL generator so q31 and q48 embed the identical Jaccard-pair
-    * oracle at their respective thresholds. */
+  /** Oracle mirror of `connectedComponents`: min-label components by
+    * recursive reachability over the undirected pairs (`a`, `b`) of the
+    * relation `pairs`, ending at `labeled(doc_id, cluster_rep)` without a
+    * trailing comma. The query needs `WITH RECURSIVE`. */
+  private[operators] def componentsOracleCte(pairs: String, a: String, b: String): String =
+    s"""edges AS (
+       |  SELECT $a AS src, $b AS dst FROM $pairs
+       |  UNION
+       |  SELECT $b, $a FROM $pairs),
+       |nodes AS (SELECT DISTINCT src AS doc FROM edges),
+       |reach(doc, r) AS (
+       |  SELECT doc, doc FROM nodes
+       |  UNION
+       |  SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.doc),
+       |labeled AS (
+       |  SELECT doc AS doc_id, MIN(r) AS cluster_rep FROM reach GROUP BY doc)""".stripMargin
+
+  /** `labels` plus `cluster_size`, the number of rows sharing its
+    * `cluster_rep`. */
+  private[operators] def withClusterSize(labels: DataFrame): DataFrame =
+    labels.withColumn("cluster_size", count(lit(1)).over(Window.partitionBy(col("cluster_rep"))))
+
+  /** Oracle mirror of `jaccardPairs` at `threshold` over the shared
+    * shingle CTEs (q31, q48, q60, q92), ending at `pairs`. */
   private[graft] def jaccardPairsOracle(threshold: Double): String =
-    raw"""toks AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
-       |sh AS (
-       |  SELECT doc_id,
-       |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-       |                   FOR i IN range(1, greatest(len(w) - 1, 1))]) AS shingles
-       |  FROM toks),
-       |ex AS (
-       |  SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS shingle
-       |  FROM sh WHERE len(shingles) > 0),
+    s"""$shingleOracleCte,
        |rare AS (
-       |  SELECT shingle FROM ex GROUP BY shingle HAVING COUNT(*) <= 1000),
+       |  SELECT shingle FROM exs GROUP BY shingle HAVING COUNT(*) <= 1000),
        |exr AS (
-       |  SELECT ex.doc_id, ex.n_sh, ex.shingle FROM ex JOIN rare USING (shingle)),
+       |  SELECT exs.doc_id, exs.n_sh, exs.shingle FROM exs JOIN rare USING (shingle)),
        |pairs_all AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.n_sh AS na, b.n_sh AS nb,
        |         COUNT(*) AS common
@@ -248,26 +262,17 @@ object Dedup {
       connectedComponents(edges)
     }
 
+  /** Oracle mirror of `clusters05`, ending at `labeled`. */
+  private val clusters05Oracle: String =
+    s"${jaccardPairsOracle(0.5)},\n${componentsOracleCte("pairs", "doc_a", "doc_b")}"
+
   /** q48 — near-dup clustering: Jaccard ≥ 0.5 pairs → connected components
     * → (doc, cluster representative, cluster size). Oracle computes the same
     * min-label components with a recursive CTE. */
   val q48DedupClusters: Q = Q(
     "q48_dedup_clusters",
-    (s, dir) => clusters05(s, dir)
-      .withColumn("cluster_size", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_rep")))),
-    Some(s"""WITH RECURSIVE ${jaccardPairsOracle(0.5)},
-       |edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION
-       |  SELECT doc_b, doc_a FROM pairs),
-       |nodes AS (SELECT DISTINCT src AS doc FROM edges),
-       |reach(doc, r) AS (
-       |  SELECT doc, doc FROM nodes
-       |  UNION
-       |  SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.doc),
-       |labeled AS (
-       |  SELECT doc AS doc_id, MIN(r) AS cluster_rep FROM reach GROUP BY doc)
+    (s, dir) => withClusterSize(clusters05(s, dir)),
+    Some(s"""WITH RECURSIVE $clusters05Oracle
        |SELECT doc_id, cluster_rep,
        |  CAST(COUNT(*) OVER (PARTITION BY cluster_rep) AS BIGINT) AS cluster_size
        |FROM labeled""".stripMargin),
@@ -451,29 +456,6 @@ object Dedup {
          |  ON v.doc_a = e.doc_a AND v.doc_b = e.doc_b""".stripMargin
     })
 
-  /** q33 — SimHash: 60-bit signature from per-shingle hash bit votes;
-    * near-dup pairs = hamming distance ≤ 10 (random docs sit near hamming 30,
-    * so ≤10 isolates true near-dups). Features are 3-gram shingles, not
-    * words: the synthetic vocabulary is tiny, so word SETS are nearly
-    * identical across all docs and carry no signal, while shingles are
-    * near-unique per doc.
-    *
-    * The per-shingle hash is PORTABLE: the shared relation's `x60` identity
-    * (60 md5-derived bits as a long) supplies the bit votes via plain
-    * integer shift/mask in BOTH engines, so signatures — and therefore the
-    * whole pair set — are reproducible in DuckDB SQL: q33 is fully
-    * hash-checked, not rows-only.
-    *
-    * Candidate generation is BANDED, not all-pairs: the signature splits
-    * into 11 disjoint bands (5×6 bits + 6×5 bits). Pigeonhole: a pair at
-    * hamming ≤ 10 differs in at most 10 bit positions, so at least one band
-    * is bit-identical — the (band_idx, band_bits) equi-join has perfect
-    * recall for the ≤10 threshold, and the hamming filter on candidates
-    * removes false positives; the banded result is therefore EXACTLY the
-    * all-pairs-filter result, which is what the oracle computes (all-pairs
-    * is fine for DuckDB at sf0.01; the Spark plan has no cartesian stage).
-    * At 100 TB you widen the signature (several longs) so each band carries
-    * 11+ bits and bucket sizes stay sub-linear; the plan shape is identical. */
   /** Memoized 60-bit SimHash signatures (±1 bit votes over the portable
     * shingle identity, ONE shuffle), shared by q33 and q79. */
   private def simhashSig(s: SparkSession, dir: String): DataFrame =
@@ -517,6 +499,54 @@ object Dedup {
       .distinct()
   }
 
+  /** Oracle for `simhashPairs` at radius `maxHamming`: the same
+    * signatures in SQL, then the exact all-pairs hamming join (fine for
+    * DuckDB at the gate SFs; banded pigeonhole-complete candidates give
+    * exactly these pairs). */
+  private def simhashOracle(maxHamming: Int): String = {
+    val bits = 60
+    val voteDefs = (0 until bits).map { b =>
+      s"    SUM(CASE WHEN (x60 >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS v$b"
+    }.mkString(",\n")
+    val simSum = (0 until bits)
+      .map(b => s"CASE WHEN v$b > 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END")
+      .mkString(" + ")
+    s"""WITH $shingleOracleCte,
+       |votes AS (
+       |  SELECT doc_id,
+       |$voteDefs
+       |  FROM exm GROUP BY doc_id),
+       |sim AS (SELECT doc_id, $simSum AS simhash FROM votes)
+       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       |  a.simhash AS sim_a, b.simhash AS sim_b,
+       |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+       |FROM sim a JOIN sim b ON a.doc_id < b.doc_id
+       |WHERE bit_count(xor(a.simhash, b.simhash)) <= $maxHamming""".stripMargin
+  }
+
+  /** q33 — SimHash: 60-bit signature from per-shingle hash bit votes;
+    * near-dup pairs = hamming distance ≤ 10 (random docs sit near hamming 30,
+    * so ≤10 isolates true near-dups). Features are 3-gram shingles, not
+    * words: the synthetic vocabulary is tiny, so word SETS are nearly
+    * identical across all docs and carry no signal, while shingles are
+    * near-unique per doc.
+    *
+    * The per-shingle hash is PORTABLE: the shared relation's `x60` identity
+    * (60 md5-derived bits as a long) supplies the bit votes via plain
+    * integer shift/mask in BOTH engines, so signatures — and therefore the
+    * whole pair set — are reproducible in DuckDB SQL: q33 is fully
+    * hash-checked, not rows-only.
+    *
+    * Candidate generation is BANDED, not all-pairs: the signature splits
+    * into 11 disjoint bands (5×6 bits + 6×5 bits). Pigeonhole: a pair at
+    * hamming ≤ 10 differs in at most 10 bit positions, so at least one band
+    * is bit-identical — the (band_idx, band_bits) equi-join has perfect
+    * recall for the ≤10 threshold, and the hamming filter on candidates
+    * removes false positives; the banded result is therefore EXACTLY the
+    * all-pairs-filter result, which is what the oracle computes (all-pairs
+    * is fine for DuckDB at sf0.01; the Spark plan has no cartesian stage).
+    * At 100 TB you widen the signature (several longs) so each band carries
+    * 11+ bits and bucket sizes stay sub-linear; the plan shape is identical. */
   val q33SimHash: Q = Q(
     "q33_dedup_simhash",
     (s, dir) =>
@@ -526,26 +556,7 @@ object Dedup {
       // corpus vs ~1 s at 5k), so this variant is for bounded corpora; q79
       // is the production radius whose candidates stay collision-linear.
       simhashPairs(simhashSig(s, dir), Seq(6, 6, 6, 6, 6, 5, 5, 5, 5, 5, 5), 10),
-    Some {
-      val bits = 60
-      val voteDefs = (0 until bits).map { b =>
-        s"    SUM(CASE WHEN (x60 >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS v$b"
-      }.mkString(",\n")
-      val simSum = (0 until bits)
-        .map(b => s"CASE WHEN v$b > 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END")
-        .mkString(" + ")
-      s"""WITH $shingleOracleCte,
-         |votes AS (
-         |  SELECT doc_id,
-         |$voteDefs
-         |  FROM exm GROUP BY doc_id),
-         |sim AS (SELECT doc_id, $simSum AS simhash FROM votes)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  a.simhash AS sim_a, b.simhash AS sim_b,
-         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-         |FROM sim a JOIN sim b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.simhash, b.simhash)) <= 10""".stripMargin
-    },
+    Some(simhashOracle(10)),
     anchor = true)
 
   /** q79 — SimHash at the PRODUCTION radius: hamming ≤ 4 via 5 bands of
@@ -560,26 +571,7 @@ object Dedup {
   val q79SimHashScale: Q = Q(
     "q79_simhash_scale",
     (s, dir) => simhashPairs(simhashSig(s, dir), Seq(12, 12, 12, 12, 12), 4),
-    Some {
-      val bits = 60
-      val voteDefs = (0 until bits).map { b =>
-        s"    SUM(CASE WHEN (x60 >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS v$b"
-      }.mkString(",\n")
-      val simSum = (0 until bits)
-        .map(b => s"CASE WHEN v$b > 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END")
-        .mkString(" + ")
-      s"""WITH $shingleOracleCte,
-         |votes AS (
-         |  SELECT doc_id,
-         |$voteDefs
-         |  FROM exm GROUP BY doc_id),
-         |sim AS (SELECT doc_id, $simSum AS simhash FROM votes)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  a.simhash AS sim_a, b.simhash AS sim_b,
-         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-         |FROM sim a JOIN sim b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.simhash, b.simhash)) <= 4""".stripMargin
-    })
+    Some(simhashOracle(4)))
 
   /** q34 — embedding-cosine near-dup pairs (brute force at test scale; the
     * LSH-bucketed scale paths are q36 top-k and q38 pairs). Sequential-fold
@@ -611,79 +603,39 @@ object Dedup {
     anchor = true)
 
   /** Per-doc quality scores — q24's exact double expression (length /
-    * diversity / stopword blend), shared by the survivorship queries
-    * (q60, q67, q113) so the IEEE evaluation tree is written once.
-    * Stopword counting is the compiled CountInArray sum
-    * (TextAnalysis.stopwordCount) — value-identical to the interpreted
-    * `filter`+`array_contains` HOF it replaced, but stays in codegen. */
-  /** The exact q24 quality expression over a words array and its
-    * word count — ONE definition so every consumer (qualityScores, q67's
-    * fused scan) evaluates the identical IEEE tree. */
-  private[operators] def qualityExpr(w: org.apache.spark.sql.Column, wordCount: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    least(wordCount.cast("double") / lit(100.0), lit(1.0)) * lit(0.3) +
-      size(array_distinct(w)).cast("double") / wordCount * lit(0.4) +
-      (lit(1.0) - TextAnalysis.stopwordCount(w).cast("double") / wordCount) * lit(0.3)
-
+    * diversity / stopword blend, `TextAnalysis.qualityExpr`), shared by the
+    * survivorship queries (q60, q113). */
   private def qualityScores(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
       .withColumn("w", TextAnalysis.words(col("text")))
       .withColumn("word_count", size(col("w")).cast("long"))
       .select(col("doc_id"),
-        qualityExpr(col("w"), col("word_count")).as("quality_score"))
+        TextAnalysis.qualityExpr(col("w"), col("word_count")).as("quality_score"))
 
-  /** q60 — dedup SURVIVORSHIP: the endpoint a training-data pipeline
-    * actually ships — near-dup clusters (q48's label-propagation components
-    * over Jaccard ≥ 0.5 pairs, singletons as their own cluster) resolved to
-    * ONE kept document per cluster by quality score (q24's formula), ties
-    * pinned to the lowest doc_id. Survivor selection is a per-cluster
-    * window (`first_value` ordered by quality desc, doc_id asc) — both
-    * engines order the bitwise-identical doubles identically, so the whole
-    * query is hash-checked. Scale: quality is per-row, the window
-    * partitions by cluster (cluster sizes are near-dup group sizes — small
-    * by construction), and the component loop is q48's O(diameter) rounds. */
-  val q60DedupSurvivors: Q = Q(
-    "q60_dedup_survivors",
-    (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val quality = qualityScores(s, dir)
-      val labeled = quality.join(clusters05(s, dir), Seq("doc_id"), "left")
-        .withColumn("cluster_rep", coalesce(col("cluster_rep"), col("doc_id")))
-      val win = Window.partitionBy(col("cluster_rep"))
-        .orderBy(col("quality_score").desc, col("doc_id").asc)
-      labeled
+  /** Survivorship over component `labels` (doc_id, cluster_rep): every
+    * document, singletons as their own cluster, resolved to ONE kept
+    * document per cluster by quality score (q24's formula), ties pinned to
+    * the lowest doc_id. Survivor selection is a per-cluster window
+    * (`first_value` ordered by quality desc, doc_id asc) — both engines
+    * order the bitwise-identical doubles identically, so the result is
+    * hash-checked. Shared by q60 and q113. */
+  private def survivors(labels: DataFrame, s: SparkSession, dir: String): DataFrame = {
+    val labeled = qualityScores(s, dir).join(labels, Seq("doc_id"), "left")
+      .withColumn("cluster_rep", coalesce(col("cluster_rep"), col("doc_id")))
+    val win = Window.partitionBy(col("cluster_rep"))
+      .orderBy(col("quality_score").desc, col("doc_id").asc)
+    withClusterSize(labeled
         .withColumn("survivor_doc", first(col("doc_id")).over(win))
-        .withColumn("is_survivor", col("doc_id") === col("survivor_doc"))
-        .withColumn("cluster_size", count(lit(1)).over(
-          Window.partitionBy(col("cluster_rep"))))
-        .select(col("doc_id"), col("cluster_rep"), col("survivor_doc"),
-          col("is_survivor"), col("cluster_size"))
-    },
-    Some(s"""WITH RECURSIVE ${jaccardPairsOracle(0.5)},
-       |edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION
-       |  SELECT doc_b, doc_a FROM pairs),
-       |nodes AS (SELECT DISTINCT src AS doc FROM edges),
-       |reach(doc, r) AS (
-       |  SELECT doc, doc FROM nodes
-       |  UNION
-       |  SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.doc),
-       |labeled AS (
-       |  SELECT doc AS doc_id, MIN(r) AS cluster_rep FROM reach GROUP BY doc),
-       |qual AS (
-       |  SELECT doc_id,
-       |    least(CAST(word_count AS DOUBLE) / 100.0, 1.0) * 0.3
-       |      + distinct_ratio * 0.4
-       |      + (1.0 - stopword_ratio) * 0.3 AS quality_score
-       |  FROM (
-       |    SELECT doc_id,
-       |      CAST(len(w) AS BIGINT) AS word_count,
-       |      CAST(len(list_distinct(w)) AS DOUBLE) / CAST(len(w) AS BIGINT) AS distinct_ratio,
-       |      CAST(len(list_filter(w, x -> list_contains(${
-         TextAnalysis.stopwords.mkString("['", "','", "']")}, x))) AS DOUBLE)
-       |        / CAST(len(w) AS BIGINT) AS stopword_ratio
-       |    FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-       |          FROM documents) raw) feat),
+        .withColumn("is_survivor", col("doc_id") === col("survivor_doc")))
+      .select(col("doc_id"), col("cluster_rep"), col("survivor_doc"),
+        col("is_survivor"), col("cluster_size"))
+  }
+
+  /** Oracle mirror of `survivors`; follows a `labeled(doc_id, cluster_rep)`
+    * CTE and ends the query. */
+  private val survivorsOracle: String =
+    s"""qual AS (
+       |${TextAnalysis.qualityOracle(TextAnalysis.docWordsOracle)}),
        |fullc AS (
        |  SELECT q.doc_id, COALESCE(l.cluster_rep, q.doc_id) AS cluster_rep,
        |         q.quality_score
@@ -694,7 +646,19 @@ object Dedup {
        |  doc_id = FIRST_VALUE(doc_id) OVER (PARTITION BY cluster_rep
        |    ORDER BY quality_score DESC, doc_id ASC) AS is_survivor,
        |  COUNT(*) OVER (PARTITION BY cluster_rep) AS cluster_size
-       |FROM fullc""".stripMargin),
+       |FROM fullc""".stripMargin
+
+  /** q60 — dedup SURVIVORSHIP: the endpoint a training-data pipeline
+    * actually ships — near-dup clusters (q48's label-propagation components
+    * over Jaccard ≥ 0.5 pairs) resolved to one kept document per cluster
+    * (`survivors`). Scale: quality is per-row, the window partitions by
+    * cluster (cluster sizes are near-dup group sizes — small by
+    * construction), and the component loop is q48's O(diameter) rounds. */
+  val q60DedupSurvivors: Q = Q(
+    "q60_dedup_survivors",
+    (s, dir) => survivors(clusters05(s, dir), s, dir),
+    Some(s"""WITH RECURSIVE $clusters05Oracle,
+       |$survivorsOracle""".stripMargin),
     anchor = true)
 
   /** q113 — dedup survivorship, PRODUCTION FORM: the text-side mirror of
@@ -715,65 +679,16 @@ object Dedup {
     * the full composition is hash-checked end to end. */
   val q113DedupSurvivorsLsh: Q = Q(
     "q113_dedup_survivors_lsh",
-    (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val edges = lshVerified(s, dir).filter(col("jaccard") >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
-      val labels = memo(s, dir, "lshClusters05") {
-        connectedComponents(edges)
-      }
-      val labeled = qualityScores(s, dir).join(labels, Seq("doc_id"), "left")
-        .withColumn("cluster_rep", coalesce(col("cluster_rep"), col("doc_id")))
-      val win = Window.partitionBy(col("cluster_rep"))
-        .orderBy(col("quality_score").desc, col("doc_id").asc)
-      labeled
-        .withColumn("survivor_doc", first(col("doc_id")).over(win))
-        .withColumn("is_survivor", col("doc_id") === col("survivor_doc"))
-        .withColumn("cluster_size", count(lit(1)).over(
-          Window.partitionBy(col("cluster_rep"))))
-        .select(col("doc_id"), col("cluster_rep"), col("survivor_doc"),
-          col("is_survivor"), col("cluster_size"))
-    },
+    (s, dir) => survivors(memo(s, dir, "lshClusters05") {
+        connectedComponents(lshVerified(s, dir).filter(col("jaccard") >= 0.5)
+          .select(col("doc_a"), col("doc_b")))
+      }, s, dir),
     Some(s"""WITH RECURSIVE $shingleOracleCte,
        |$lshOracleCte,
        |pairs AS (
        |  SELECT doc_a, doc_b FROM verified WHERE jaccard >= 0.5),
-       |edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION
-       |  SELECT doc_b, doc_a FROM pairs),
-       |nodes AS (SELECT DISTINCT src AS doc FROM edges),
-       |reach(doc, r) AS (
-       |  SELECT doc, doc FROM nodes
-       |  UNION
-       |  SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.doc),
-       |labeled AS (
-       |  SELECT doc AS doc_id, MIN(r) AS cluster_rep FROM reach GROUP BY doc),
-       |qual AS (
-       |  SELECT doc_id,
-       |    least(CAST(word_count AS DOUBLE) / 100.0, 1.0) * 0.3
-       |      + distinct_ratio * 0.4
-       |      + (1.0 - stopword_ratio) * 0.3 AS quality_score
-       |  FROM (
-       |    SELECT doc_id,
-       |      CAST(len(w) AS BIGINT) AS word_count,
-       |      CAST(len(list_distinct(w)) AS DOUBLE) / CAST(len(w) AS BIGINT) AS distinct_ratio,
-       |      CAST(len(list_filter(w, x -> list_contains(${
-         TextAnalysis.stopwords.mkString("['", "','", "']")}, x))) AS DOUBLE)
-       |        / CAST(len(w) AS BIGINT) AS stopword_ratio
-       |    FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-       |          FROM documents) raw) feat),
-       |fullc AS (
-       |  SELECT q.doc_id, COALESCE(l.cluster_rep, q.doc_id) AS cluster_rep,
-       |         q.quality_score
-       |  FROM qual q LEFT JOIN labeled l ON l.doc_id = q.doc_id)
-       |SELECT doc_id, cluster_rep,
-       |  FIRST_VALUE(doc_id) OVER (PARTITION BY cluster_rep
-       |    ORDER BY quality_score DESC, doc_id ASC) AS survivor_doc,
-       |  doc_id = FIRST_VALUE(doc_id) OVER (PARTITION BY cluster_rep
-       |    ORDER BY quality_score DESC, doc_id ASC) AS is_survivor,
-       |  COUNT(*) OVER (PARTITION BY cluster_rep) AS cluster_size
-       |FROM fullc""".stripMargin))
+       |${componentsOracleCte("pairs", "doc_a", "doc_b")},
+       |$survivorsOracle""".stripMargin))
 
   /** q61 — benchmark CONTAMINATION detection (train/test decontamination):
     * for every training document, the fraction of its distinct 3-gram
@@ -860,7 +775,7 @@ object Dedup {
         .withColumn("w", TextAnalysis.words(col("text")))
         .withColumn("word_count", size(col("w")).cast("long"))
         .select(col("doc_id"),
-          qualityExpr(col("w"), col("word_count")).as("quality_score"),
+          TextAnalysis.qualityExpr(col("w"), col("word_count")).as("quality_score"),
           md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ").cast("binary")).as("fp"))
         .withColumn("keeper_id", min(col("doc_id")).over(keeperW))
       // contamination vs the doc_id%100=0 benchmark slice (q61 shape)
@@ -911,12 +826,7 @@ object Dedup {
       |                             ORDER BY matches DESC, cand_lang ASC) AS rn
       |        FROM votes) r WHERE rn = 1),
       |qual AS (
-      |  SELECT doc_id,
-      |    least(CAST(len(w) AS DOUBLE) / 100.0, 1.0) * 0.3
-      |      + (CAST(len(list_distinct(w)) AS DOUBLE) / CAST(len(w) AS BIGINT)) * 0.4
-      |      + (1.0 - CAST(len(list_filter(w, x -> list_contains(['the','a','of','and'], x))) AS DOUBLE)
-      |          / CAST(len(w) AS BIGINT)) * 0.3 AS quality_score
-      |  FROM toks),
+      |${TextAnalysis.qualityOracle("toks")}),
       |fp AS (
       |  SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
       |  FROM documents),

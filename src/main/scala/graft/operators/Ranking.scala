@@ -52,8 +52,9 @@ object Ranking {
     * 1e-12 of a rounding boundary and that distinct score-determining inputs
     * are separated by ≫ the cross-engine ulp error — so the rounded values
     * AND the rank permutation are bit-identical across engines.
-    * Plan shape is identical to q84's. */
-  /** `thinMod` (optimization r18): score only the docs whose
+    * Plan shape is identical to q84's.
+    *
+    * `thinMod` (optimization r18): score only the docs whose
     * xxhash64(doc_id) ≡ 0 mod thinMod, with the corpus stats (N, Σdl, df)
     * computed over that SAME subset. Used as the splitter-bounds source
     * for the distributed rank: the subset stats keep idf/avgdl in the

@@ -66,8 +66,9 @@ object Ranks {
     * the sample multiset is still a pure value function). An unordered
     * `limit` here would draw the whole sample from whichever splits
     * answered first — the exact skew the sampler exists to avoid. Any
-    * sample yields EXACT ranks; only balance varies. */
-  /** `boundsFrom` (optimization r18): an optional CHEAPER relation to draw
+    * sample yields EXACT ranks; only balance varies.
+    *
+    * `boundsFrom` (optimization r18): an optional CHEAPER relation to draw
     * the splitter sample from, with the same key columns as `df`. The
     * bounds are only lexicographic cut points and the ranks are EXACT for
     * ANY bound values (see step 1 above), so the sample source may score

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Q
@@ -38,16 +38,29 @@ object SimilaritySearch {
   private def arraySql(a: Array[Double]): String = a.mkString("[", ", ", "]")
 
   /** Argmin over named score columns: first index whose score is ≤ all
-    * later ones — ties break to the lowest index. Shared by q62/q65/
-    * `kmeansIterateOn`, and mirrored by the oracles' CASE chains. */
-  private def argminCols(names: Seq[String]): org.apache.spark.sql.Column =
+    * later ones — ties break to the lowest index. Shared by
+    * `assignLiteral` and q65; `argminSql` is its oracle mirror. */
+  private def argminCols(names: Seq[String]): Column =
     (0 until names.length - 1).foldRight(lit(names.length - 1)) { (i, rest) =>
       when((i + 1 until names.length).map(j => col(names(i)) <= col(names(j))).reduce(_ && _), i)
         .otherwise(rest)
     }
 
-  private def nearestCid(k: Int): org.apache.spark.sql.Column =
-    argminCols((0 until k).map(i => s"s$i"))
+  /** `argminCols` as a DuckDB CASE chain. */
+  private def argminSql(names: Seq[String]): String =
+    (0 until names.length - 1).map { i =>
+      val conds = (i + 1 until names.length).map(j => s"${names(i)} <= ${names(j)}")
+      s"WHEN ${conds.mkString(" AND ")} THEN $i"
+    }.mkString("CASE ", " ", s" ELSE ${names.length - 1} END")
+
+  /** Centroid `c`'s score for vector `emb`: ‖c‖² − 2·x·c, the squared L2
+    * distance less the ‖x‖² every centroid shares. */
+  private def centroidScore(emb: Column, c: Array[Double]): Column =
+    lit(c.map(v => v * v).sum) - lit(2.0) * Similarity.dot(emb, typedLit(c))
+
+  /** `centroidScore` in DuckDB SQL. */
+  private def centroidScoreSql(emb: String, c: Array[Double]): String =
+    s"${c.map(v => v * v).sum} - 2.0 * list_dot_product($emb, ${arraySql(c)})"
 
   /** q35 — brute-force cosine top-k: for each query vector (vec_id < 8),
     * the 5 nearest other vectors by cosine, ties broken by vec_id. */
@@ -235,15 +248,11 @@ object SimilaritySearch {
       }
     }
 
-  /** The 4-bands × 4-planes family for q38 (planes 4b..4b+3 for band b),
-    * embedded as literals in both the Spark plan and the oracle SQL. */
-  private[operators] val pairPlanes: Seq[Array[Double]] = radPlanes(16)
-
   /** q38 — embedding-LSH near-dup PAIRS: the scale-safe replacement for
     * q34's all-pairs baseline (`Dedup.q34EmbeddingDups` remains the declared
     * exact ground truth; `SimilaritySpec` pins this query's recall against
     * it). OR-construction: 4 independent band tables, each a 4-bit sign code
-    * from `pairPlanes`; a pair becomes a candidate if it collides in ANY
+    * from `radPlanes`; a pair becomes a candidate if it collides in ANY
     * band (a self equi-join on (band_idx, bucket) — shuffle on the bucket,
     * no cartesian stage), then the exact cosine verifies candidates only.
     * Collision probability per band for angle θ is (1-θ/π)^4, so 4 bands
@@ -255,30 +264,11 @@ object SimilaritySearch {
     "q38_dedup_embedding_lsh",
     // the anchor IS lshPairs at (4, 4) — spec-pinned identical since r9;
     // the fused band-code expression keeps that identity (bit-exact
-    // substitution, expressions.LshBandCodes scaladoc). The oracle below
-    // stays an INDEPENDENT literal-plane DuckDB formulation either way.
+    // substitution, expressions.LshBandCodes scaladoc). The oracle is the
+    // literal-plane DuckDB chain q110 and q111 use, at (4, 4).
     (s, dir) => lshPairs(s, dir, bands = 4, bitsPerBand = 4),
-    Some {
-      def bandSql(b: Int) = (0 until 4).map { i =>
-        s"(CASE WHEN list_dot_product(emb, ${arraySql(pairPlanes(b * 4 + i))}) > 0 THEN ${1 << i} ELSE 0 END)"
-      }.mkString(" + ")
-      val bandList = (0 until 4).map(bandSql).mkString("[", ", ", "]")
-      s"""WITH $embOracleCte,
-         |banded AS (
-         |  SELECT vec_id, unnest([0, 1, 2, 3]) AS band_idx, unnest($bandList) AS bucket
-         |  FROM e),
-         |cand AS (
-         |  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-         |  FROM banded x JOIN banded y
-         |    ON x.band_idx = y.band_idx AND x.bucket = y.bucket
-         |   AND x.vec_id < y.vec_id)
-         |SELECT c.vec_a, c.vec_b,
-         |  list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm) AS cosine
-         |FROM cand c
-         |JOIN e a ON a.vec_id = c.vec_a
-         |JOIN e b ON b.vec_id = c.vec_b
-         |WHERE list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm) >= 0.35""".stripMargin
-    },
+    Some(s"""WITH ${lshPairsOracleCte(4, 4, 0.35)}
+       |SELECT vec_a, vec_b, cosine FROM scored""".stripMargin),
     anchor = true)
 
   /** Parameterized embedding-LSH near-dup pairs — the PRODUCTION form of
@@ -357,6 +347,35 @@ object SimilaritySearch {
       .select(col("vec_a"), col("vec_b"), col("cosine"))
   }
 
+  /** The banded-LSH candidate+cosine oracle CTE chain of `lshPairs` at
+    * (`bands`, `bits`, `threshold`) — everything through `scored` (vec_a,
+    * vec_b, cosine ≥ threshold), with lshPairs' splitmix Rademacher planes
+    * as SQL literals. Prefix with WITH [RECURSIVE] at the call site. */
+  private[graft] def lshPairsOracleCte(bands: Int, bits: Int, threshold: Double): String = {
+    val planes = radPlanes(bands * bits)
+    def bandSql(b: Int) = (0 until bits).map { i =>
+      s"(CASE WHEN list_dot_product(emb, ${arraySql(planes(b * bits + i))}) > 0 THEN ${1 << i} ELSE 0 END)"
+    }.mkString(" + ")
+    val bandList = (0 until bands).map(bandSql).mkString("[", ", ", "]")
+    s"""$embOracleCte,
+       |banded AS (
+       |  SELECT vec_id, unnest(${(0 until bands).mkString("[", ", ", "]")}) AS band_idx,
+       |         unnest($bandList) AS bucket
+       |  FROM e),
+       |cand AS (
+       |  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
+       |  FROM banded x JOIN banded y
+       |    ON x.band_idx = y.band_idx AND x.bucket = y.bucket
+       |   AND x.vec_id < y.vec_id),
+       |scored AS (
+       |  SELECT c.vec_a, c.vec_b,
+       |    list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm) AS cosine
+       |  FROM cand c
+       |  JOIN e a ON a.vec_id = c.vec_a
+       |  JOIN e b ON b.vec_id = c.vec_b
+       |  WHERE list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm) >= $threshold)""".stripMargin
+  }
+
   /** q110 — the SCALED operating point of `lshPairs`, oracle-checked
     * (VERDICT r9 item 1: the production form was spec-pinned but the only
     * CORRECTNESS-green point on the LSH curve was the quadratic q38
@@ -377,40 +396,32 @@ object SimilaritySearch {
     * The 64 hyperplanes are the deterministic `radPlanes` prefix — the
     * identical double literals appear in the Spark plan and the generated
     * oracle SQL, so both engines compute bitwise-equal band codes. */
-  /** The (8 bands × 8 bits) candidate+cosine oracle CTE chain shared by
-    * q110 and q111 — everything through `scored` (vec_a, vec_b, cosine ≥
-    * threshold), mirroring lshPairs' splitmix Rademacher planes as SQL
-    * literals. Prefix with WITH [RECURSIVE] at the call site. */
-  private[graft] def lshPairsOracleCte(threshold: Double): String = {
-    val planes = radPlanes(64)
-    def bandSql(b: Int) = (0 until 8).map { i =>
-      s"(CASE WHEN list_dot_product(emb, ${arraySql(planes(b * 8 + i))}) > 0 THEN ${1 << i} ELSE 0 END)"
-    }.mkString(" + ")
-    val bandList = (0 until 8).map(bandSql).mkString("[", ", ", "]")
-    s"""$embOracleCte,
-       |banded AS (
-       |  SELECT vec_id, unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS band_idx,
-       |         unnest($bandList) AS bucket
-       |  FROM e),
-       |cand AS (
-       |  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-       |  FROM banded x JOIN banded y
-       |    ON x.band_idx = y.band_idx AND x.bucket = y.bucket
-       |   AND x.vec_id < y.vec_id),
-       |scored AS (
-       |  SELECT c.vec_a, c.vec_b,
-       |    list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm) AS cosine
-       |  FROM cand c
-       |  JOIN e a ON a.vec_id = c.vec_a
-       |  JOIN e b ON b.vec_id = c.vec_b
-       |  WHERE list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm) >= $threshold)""".stripMargin
-  }
-
   val q110LshScaled: Q = Q(
     "q110_ann_lsh_scaled",
     (s, dir) => lshPairs(s, dir, bands = 8, bitsPerBand = 8),
-    Some(s"""WITH ${lshPairsOracleCte(0.35)}
+    Some(s"""WITH ${lshPairsOracleCte(8, 8, 0.35)}
        |SELECT vec_a, vec_b, cosine FROM scored""".stripMargin))
+
+  /** Production form of q111 — corpus-adaptive parameters, same plan
+    * shape at every setting: bits ≈ log2(N/64) keeps bucket populations
+    * constant as N grows (the lshPairs rule), and the threshold is the
+    * near-dup semantics knob (the research 0.35 graph PERCOLATES into one
+    * giant component by sf1 — real dedup thresholds sit where components
+    * are the planted-dup sets). Labels are NOT memoized here — callers
+    * own persistence; the registry entry memoizes its pinned point. */
+  def embeddingClusters(spark: SparkSession, dir: String, bands: Int,
+      bitsPerBand: Int, threshold: Double): DataFrame =
+    Dedup.withClusterSize(clusterLabels(spark, dir, bands, bitsPerBand, threshold)
+      .withColumnRenamed("doc_id", "vec_id"))
+
+  /** lshPairs edges → min-label component labels (doc_id, cluster_rep) —
+    * the single body both the probe form and the memoized registry entry
+    * compose, so the two can't drift. */
+  private def clusterLabels(spark: SparkSession, dir: String, bands: Int,
+      bitsPerBand: Int, threshold: Double): DataFrame =
+    Dedup.connectedComponents(
+      lshPairs(spark, dir, bands, bitsPerBand, threshold)
+        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
 
   /** q111 — embedding-level near-dup CLUSTERS: `lshPairs` becomes the
     * edge relation of the same min-label connected components q48 runs
@@ -429,31 +440,6 @@ object SimilaritySearch {
     * hyperplanes to cluster labels — is hash-checked cross-engine.
     * Output grain: one row per clustered vector (singletons have no
     * edges and no row, same as q48). */
-  /** Production form of q111 — corpus-adaptive parameters, same plan
-    * shape at every setting: bits ≈ log2(N/64) keeps bucket populations
-    * constant as N grows (the lshPairs rule), and the threshold is the
-    * near-dup semantics knob (the research 0.35 graph PERCOLATES into one
-    * giant component by sf1 — real dedup thresholds sit where components
-    * are the planted-dup sets). Labels are NOT memoized here — callers
-    * own persistence; the registry entry memoizes its pinned point. */
-  def embeddingClusters(spark: SparkSession, dir: String, bands: Int,
-      bitsPerBand: Int, threshold: Double): DataFrame =
-    withClusterSizes(clusterLabels(spark, dir, bands, bitsPerBand, threshold))
-
-  /** lshPairs edges → min-label component labels (doc_id, cluster_rep) —
-    * the single body both the probe form and the memoized registry entry
-    * compose, so the two can't drift. */
-  private def clusterLabels(spark: SparkSession, dir: String, bands: Int,
-      bitsPerBand: Int, threshold: Double): DataFrame =
-    Dedup.connectedComponents(
-      lshPairs(spark, dir, bands, bitsPerBand, threshold)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
-
-  private def withClusterSizes(labels: DataFrame): DataFrame =
-    labels.select(col("doc_id").as("vec_id"), col("cluster_rep"))
-      .withColumn("cluster_size", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_rep"))))
-
   val q111EmbeddingClusters: Q = Q(
     "q111_embedding_clusters",
     (s, dir) => {
@@ -463,26 +449,16 @@ object SimilaritySearch {
       val labels = SessionLedger.memo(s, dir, "embClusters035") {
         clusterLabels(s, dir, bands = 8, bitsPerBand = 8, threshold = 0.35)
       }
-      withClusterSizes(labels)
+      Dedup.withClusterSize(labels.withColumnRenamed("doc_id", "vec_id"))
     },
-    Some(s"""WITH RECURSIVE ${lshPairsOracleCte(0.35)},
-       |edges AS (
-       |  SELECT vec_a AS src, vec_b AS dst FROM scored
-       |  UNION
-       |  SELECT vec_b, vec_a FROM scored),
-       |nodes AS (SELECT DISTINCT src AS v FROM edges),
-       |reach(v, r) AS (
-       |  SELECT v, v FROM nodes
-       |  UNION
-       |  SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.v),
-       |labeled AS (
-       |  SELECT v AS vec_id, MIN(r) AS cluster_rep FROM reach GROUP BY v)
-       |SELECT vec_id, cluster_rep,
+    Some(s"""WITH RECURSIVE ${lshPairsOracleCte(8, 8, 0.35)},
+       |${Dedup.componentsOracleCte("scored", "vec_a", "vec_b")}
+       |SELECT doc_id AS vec_id, cluster_rep,
        |  CAST(COUNT(*) OVER (PARTITION BY cluster_rep) AS BIGINT) AS cluster_size
        |FROM labeled""".stripMargin))
 
   /** The 4 literal initial centroids for q62 (±0.25-entry vectors from the
-    * same splitmix mixer as `pairPlanes` — deterministic, shared verbatim
+    * same splitmix mixer as `radPlanes` — deterministic, shared verbatim
     * with the oracle SQL). */
   private[operators] val kmeansInit: Seq[Array[Double]] =
     (0 until 4).map { c =>
@@ -507,50 +483,25 @@ object SimilaritySearch {
     * order. */
   val q62KmeansStep: Q = Q(
     "q62_kmeans_step",
-    (s, dir) => {
-      val e = embWithNorm(s, dir)
-      val scores = kmeansInit.zipWithIndex.map { case (c, i) =>
-        val cc = c.map(v => v * v).sum
-        (lit(cc) - lit(2.0) * Similarity.dot(col("emb"), typedLit(c))).as(s"s$i")
-      }
-      val scored = e.select((col("vec_id") +: col("emb") +: scores): _*)
-      scored.withColumn("cid", nearestCid(kmeansInit.length).cast("long"))
-        .select(col("cid"), posexplode(col("emb")).as(Seq("d", "x")))
-        .groupBy(col("cid"), col("d"))
-        .agg(
-          count(lit(1)).as("n_points"),
-          sum(floor(col("x") * lit(1048576.0) + lit(0.5)).cast("long")).as("sq"))
-        .select(col("cid"), col("d").cast("long").as("d"), col("n_points"),
-          (col("sq").cast("double") / (col("n_points") * lit(1048576L)).cast("double"))
-            .as("cx"))
-    },
-    Some {
-      val scoreDefs = kmeansInit.zipWithIndex.map { case (c, i) =>
-        val cc = c.map(v => v * v).sum
-        s"    $cc - 2.0 * list_dot_product(emb, ${arraySql(c)}) AS s$i"
-      }.mkString(",\n")
-      s"""WITH e AS (
-         |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-         |scored AS (
-         |  SELECT vec_id, emb,
-         |$scoreDefs
-         |  FROM e),
-         |assigned AS (
-         |  SELECT emb,
-         |    CAST(CASE
-         |      WHEN s0 <= s1 AND s0 <= s2 AND s0 <= s3 THEN 0
-         |      WHEN s1 <= s2 AND s1 <= s3 THEN 1
-         |      WHEN s2 <= s3 THEN 2
-         |      ELSE 3 END AS BIGINT) AS cid
-         |  FROM scored),
-         |comp AS (
-         |  SELECT cid, unnest(range(0, len(emb))) AS d, unnest(emb) AS x
-         |  FROM assigned)
-         |SELECT cid, CAST(d AS BIGINT) AS d, COUNT(*) AS n_points,
-         |  CAST(SUM(CAST(floor(x * 1048576.0 + 0.5) AS BIGINT)) AS DOUBLE)
-         |    / CAST(COUNT(*) * 1048576 AS DOUBLE) AS cx
-         |FROM comp GROUP BY cid, d""".stripMargin
-    })
+    (s, dir) => nearestCentroid(embWithNorm(s, dir), kmeansInit)
+      .select(col("cid"), posexplode(col("emb")).as(Seq("d", "x")))
+      .groupBy(col("cid"), col("d"))
+      .agg(
+        count(lit(1)).as("n_points"),
+        sum(floor(col("x") * lit(1048576.0) + lit(0.5)).cast("long")).as("sq"))
+      .select(col("cid"), col("d").cast("long").as("d"), col("n_points"),
+        (col("sq").cast("double") / (col("n_points") * lit(1048576L)).cast("double"))
+          .as("cx")),
+    Some(s"""WITH e AS (
+       |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+       |${assignedOracleCte("emb")},
+       |comp AS (
+       |  SELECT cid, unnest(range(0, len(emb))) AS d, unnest(emb) AS x
+       |  FROM assigned)
+       |SELECT cid, CAST(d AS BIGINT) AS d, COUNT(*) AS n_points,
+       |  CAST(SUM(CAST(floor(x * 1048576.0 + 0.5) AS BIGINT)) AS DOUBLE)
+       |    / CAST(COUNT(*) * 1048576 AS DOUBLE) AS cx
+       |FROM comp GROUP BY cid, d""".stripMargin))
 
   /** Iterated Lloyd training (builds the IVF coarse quantizer): runs
     * `iters` q62-style steps, holding only the k×dims centroid matrix on
@@ -567,59 +518,25 @@ object SimilaritySearch {
     * column) — the `kmeansIterate` core, reused per-subspace by `pqTrain`. */
   def kmeansIterateOn(vecs: org.apache.spark.sql.DataFrame, iters: Int,
       init: Seq[Array[Double]]): (Seq[Array[Double]], Seq[Double]) = {
-    val e = vecs.select(col("emb")).persist()
+    // vec_id keys the per-vector argmin of nearestCentroid's table path;
+    // ids are fixed once `e` is persisted
+    val e = vecs.select(col("emb"), monotonically_increasing_id().as("vec_id")).persist()
     try {
       var centroids = init
       val inertias = Seq.newBuilder[Double]
       (0 until iters).foreach { _ =>
-        val k = centroids.length
-        // Assignment shape switches by k exactly like assignLiteral /
-        // assignByTable: the plan-literal score columns + nearestCid are
-        // O(k²) expression NODES (nested when-chain of And-chains), which
-        // overflows the Column→Expression conversion stack near k≈300 —
-        // real √N̅ cluster counts (sf10: k=447) crashed here before the
-        // table path below. Both paths compute the identical score
-        // (cc − 2·x·c, ties to the lowest cid), so the spec-pinned
-        // small-k results are unchanged.
-        val assigned = if (k <= literalPathMaxK) {
-          val scores = centroids.zipWithIndex.map { case (c, i) =>
-            val cc = c.map(v => v * v).sum
-            (lit(cc) - lit(2.0) * Similarity.dot(col("emb"), typedLit(c))).as(s"s$i")
-          }
-          e.select((col("emb") +: scores): _*)
-            .withColumn("cid", nearestCid(k))
-            // true squared distance for the inertia metric: ‖x‖² + best score
-            .withColumn("dist2",
-              Similarity.dot(col("emb"), col("emb")) +
-                least((0 until k).map(i => col(s"s$i")): _*))
-        } else {
-          import vecs.sparkSession.implicits._
-          val cdf = centroids.zipWithIndex
-            .map { case (c, i) => (i, c, c.map(v => v * v).sum) }
-            .toDF("c_cid", "c_vec", "c_cc")
-          // row identity for the per-vector argmin: the input relation has
-          // no key (training runs over bare emb vectors), so synthesize
-          // one. Uniqueness per row is all the groupBy needs — the id
-          // never reaches the result, and `e` is persisted so positions
-          // are stable under recomputation.
-          e.withColumn("rid", monotonically_increasing_id())
-            .crossJoin(broadcast(cdf))
-            .withColumn("s", col("c_cc") - lit(2.0) * Similarity.dot(col("emb"), col("c_vec")))
-            .groupBy(col("rid"))
-            .agg(min(struct(col("s"), col("c_cid"))).as("m"),
-              first(col("emb")).as("emb"))
-            .select(col("emb"), col("m.c_cid").as("cid"),
-              (Similarity.dot(col("emb"), col("emb")) + col("m.s")).as("dist2"))
-        }
-        val stats = assigned
-          .select(col("cid"), col("dist2"), posexplode(col("emb")).as(Seq("d", "x")))
+        val stats = nearestCentroid(e, centroids)
+          // true squared distance for the inertia metric: ‖x‖² + best score
+          .select(col("cid"),
+            (Similarity.dot(col("emb"), col("emb")) + col("score")).as("dist2"),
+            posexplode(col("emb")).as(Seq("d", "x")))
           .groupBy(col("cid"), col("d"))
           .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
             sum(when(col("d") === 0, col("dist2"))).as("i0"))
           .collect()
         inertias += stats.flatMap(r => Option(r.get(4)).map(_ => r.getDouble(4))).sum
-        val next = centroids.zipWithIndex.map { case (old, i) =>
-          val dims = stats.filter(_.getInt(0) == i)
+        centroids = centroids.zipWithIndex.map { case (old, i) =>
+          val dims = stats.filter(_.getLong(0) == i)
           if (dims.isEmpty) old
           else {
             val out = old.clone()
@@ -627,7 +544,6 @@ object SimilaritySearch {
             out
           }
         }
-        centroids = next
       }
       (centroids, inertias.result())
     } finally e.unpersist(blocking = false)
@@ -677,11 +593,8 @@ object SimilaritySearch {
     (s, dir) => {
       val e = embWithNorm(s, dir)
       // encode: per-subspace argmin of cc − 2·x_m·c (‖x_m‖² cancels)
-      val scoreCols = for {
-        m <- 0 until PqM; c <- 0 until PqK
-        cb = pqCodebooks(m)(c); cc = cb.map(v => v * v).sum
-      } yield (lit(cc) - lit(2.0) * Similarity.dot(pqSubvec(col("emb"), m), typedLit(cb)))
-        .as(s"s${m}_$c")
+      val scoreCols = for (m <- 0 until PqM; c <- 0 until PqK)
+        yield centroidScore(pqSubvec(col("emb"), m), pqCodebooks(m)(c)).as(s"s${m}_$c")
       val coded = e.select((col("vec_id") +: scoreCols): _*)
         .select((col("vec_id") +: (0 until PqM).map(m =>
           argminCols((0 until PqK).map(c => s"s${m}_$c")).as(s"code$m"))): _*)
@@ -714,19 +627,11 @@ object SimilaritySearch {
     },
     Some {
       def subSql(embExpr: String, m: Int) = s"$embExpr[${m * PqSub + 1}:${(m + 1) * PqSub}]"
-      val scoreDefs = (for {
-        m <- 0 until PqM; c <- 0 until PqK
-        cb = pqCodebooks(m)(c); cc = cb.map(v => v * v).sum
-      } yield s"    $cc - 2.0 * list_dot_product(${subSql("emb", m)}, ${arraySql(cb)}) AS s${m}_$c")
+      val scoreDefs = (for (m <- 0 until PqM; c <- 0 until PqK)
+        yield s"    ${centroidScoreSql(subSql("emb", m), pqCodebooks(m)(c))} AS s${m}_$c")
         .mkString(",\n")
-      def argminSql(m: Int) = {
-        val whens = (0 until PqK - 1).map { c =>
-          val conds = (c + 1 until PqK).map(j => s"s${m}_$c <= s${m}_$j").mkString(" AND ")
-          s"WHEN $conds THEN $c"
-        }.mkString(" ")
-        s"CASE $whens ELSE ${PqK - 1} END"
-      }
-      val codeDefs = (0 until PqM).map(m => s"    ${argminSql(m)} AS code$m").mkString(",\n")
+      val codeDefs = (0 until PqM).map(m =>
+        s"    ${argminSql((0 until PqK).map(c => s"s${m}_$c"))} AS code$m").mkString(",\n")
       val qdDefs = (for {
         m <- 0 until PqM; c <- 0 until PqK
         cb = pqCodebooks(m)(c); cc = cb.map(v => v * v).sum
@@ -843,44 +748,51 @@ object SimilaritySearch {
     * any ≥-tau chain survives). */
   def semdedupWith(s: org.apache.spark.sql.SparkSession, dir: String,
       centroids: Seq[Array[Double]], tau: Double): org.apache.spark.sql.DataFrame =
-    semdedupPrune(assignLiteral(embWithNorm(s, dir), centroids), tau)
+    semdedupPrune(nearestCentroid(embWithNorm(s, dir), centroids), tau)
 
-  /** Literal-path cutover: `nearestCid`'s argmin CASE chain is k(k-1)/2
+  /** Literal-path cutover: `argminCols`' CASE chain is k(k-1)/2
     * comparisons, so generated code grows QUADRATICALLY in k — at k=45 a
     * probe showed janino's 64 KB method limit tripping and the whole stage
     * silently falling back to interpreted execution (the worst of both
     * paths). 16 keeps the chain at 120 comparisons, far under the limit,
     * and everything larger takes `assignByTable`, whose plan is O(1) in k.
+    * The literal path must never see a large k: its O(k²) expression nodes
+    * overflow the Column→Expression conversion stack near k≈300 (sf10's
+    * √N̅ k=447 crashed Lloyd training before training took this cutover).
     * The two paths are bit-identical (SimilaritySpec), so the cutover is a
     * pure physical-plan choice. */
   private[graft] val literalPathMaxK = 16
 
-  /** Nearest-centroid assignment with centroids as PLAN LITERALS (one score
-    * column per centroid) — zero extra shuffle, ideal for small k, but plan
-    * width grows with k. Ties break to the lowest cid. */
-  private[graft] def assignLiteral(e: org.apache.spark.sql.DataFrame,
-      centroids: Seq[Array[Double]]): org.apache.spark.sql.DataFrame = {
-    val scores = centroids.zipWithIndex.map { case (c, i) =>
-      val cc = c.map(v => v * v).sum
-      (lit(cc) - lit(2.0) * Similarity.dot(col("emb"), typedLit(c))).as(s"s$i")
-    }
-    e.select((col("vec_id") +: col("emb") +: col("nrm") +: scores): _*)
-      .withColumn("cid", nearestCid(centroids.length).cast("long"))
-      .select(col("vec_id"), col("cid"), col("emb"), col("nrm"))
+  /** Nearest centroid of every row of `e` (a unique `vec_id` and an `emb`
+    * vector): `e`'s columns plus `cid` (bigint, ties to the lowest id) and
+    * `score`, that centroid's `centroidScore`. The one literal/table
+    * cutover: `assignLiteral` up to `literalPathMaxK` centroids,
+    * `assignByTable` above. */
+  private[graft] def nearestCentroid(e: DataFrame, centroids: Seq[Array[Double]]): DataFrame =
+    if (centroids.length <= literalPathMaxK) assignLiteral(e, centroids)
+    else assignByTable(e, centroids)
+
+  /** `nearestCentroid` with centroids as PLAN LITERALS (one score column
+    * per centroid) — zero extra shuffle, ideal for small k, but plan width
+    * grows with k. */
+  private[graft] def assignLiteral(e: DataFrame, centroids: Seq[Array[Double]]): DataFrame = {
+    val names = centroids.indices.map(i => s"s$i")
+    e.select(col("*") +: centroids.zip(names).map { case (c, n) =>
+        centroidScore(col("emb"), c).as(n) }: _*)
+      .withColumn("cid", argminCols(names).cast("long"))
+      .withColumn("score", least(names.map(col): _*))
+      .drop(names: _*)
   }
 
-  /** Nearest-centroid assignment against a BROADCAST centroid TABLE — the
-    * large-k path (k ≫ plan-literal width, e.g. √N̅ clusters on a real
-    * corpus): one (vector × centroid) broadcast join, per-vector
-    * min-struct argmin (lowest distance, then lowest cid — the exact tie
-    * order of `nearestCid`, over identically-computed distances), then one
-    * equi-join to re-attach the vector payload. Plan size is O(1) in k;
-    * the k×d model rides the broadcast. `SimilaritySpec` pins bit-equality
-    * of the two assignment paths. */
-  private[graft] def assignByTable(s: org.apache.spark.sql.SparkSession,
-      e: org.apache.spark.sql.DataFrame,
-      centroids: Seq[Array[Double]]): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
+  /** `nearestCentroid` against a BROADCAST centroid TABLE — the large-k
+    * path (k ≫ plan-literal width, e.g. √N̅ clusters on a real corpus): one
+    * (vector × centroid) broadcast join, per-vector min-struct argmin
+    * (lowest score, then lowest cid — the exact tie order of `argminCols`,
+    * over identically-computed scores), then one equi-join to re-attach the
+    * vector payload. Plan size is O(1) in k; the k×d model rides the
+    * broadcast. `SimilaritySpec` pins bit-equality of the two paths. */
+  private[graft] def assignByTable(e: DataFrame, centroids: Seq[Array[Double]]): DataFrame = {
+    import e.sparkSession.implicits._
     val cdf = centroids.zipWithIndex
       .map { case (c, i) => (i.toLong, c, c.map(v => v * v).sum) }
       .toDF("c_cid", "c_vec", "c_cc")
@@ -890,16 +802,31 @@ object SimilaritySearch {
         col("c_cc") - lit(2.0) * Similarity.dot(col("emb"), col("c_vec")))
       .groupBy(col("vec_id"))
       .agg(min(struct(col("dist"), col("c_cid"))).as("m"))
-      .select(col("vec_id"), col("m.c_cid").as("cid"))
+      .select(col("vec_id"), col("m.c_cid").as("cid"), col("m.dist").as("score"))
     e.join(best, "vec_id")
-      .select(col("vec_id"), col("cid"), col("emb"), col("nrm"))
   }
 
-  /** The prune half of SemDeDup over an assigned (vec_id, cid, emb, nrm)
-    * relation: cid-bucketed lower-id pair join → per-vector MAX cosine →
-    * prune at `tau`. */
-  private[graft] def semdedupPrune(assigned: org.apache.spark.sql.DataFrame,
-      tau: Double): org.apache.spark.sql.DataFrame = {
+  /** Oracle mirror of `nearestCentroid` at the literal `kmeansInit` over
+    * the CTE `e`: `scored` adds the score columns, `assigned` keeps `cols`
+    * plus `cid`. Ends without a trailing comma. */
+  private def assignedOracleCte(cols: String): String = {
+    val names = kmeansInit.indices.map(i => s"s$i")
+    val scoreDefs = kmeansInit.zip(names)
+      .map { case (c, n) => s"    ${centroidScoreSql("emb", c)} AS $n" }.mkString(",\n")
+    s"""scored AS (
+       |  SELECT $cols,
+       |$scoreDefs
+       |  FROM e),
+       |assigned AS (
+       |  SELECT $cols, CAST(${argminSql(names)} AS BIGINT) AS cid
+       |  FROM scored)""".stripMargin
+  }
+
+  /** The prune half of SemDeDup over an assigned relation (vec_id, cid,
+    * emb, nrm, …): cid-bucketed lower-id pair join → per-vector MAX cosine
+    * → prune at `tau`. */
+  private[graft] def semdedupPrune(in: DataFrame, tau: Double): DataFrame = {
+    val assigned = in.select(col("vec_id"), col("cid"), col("emb"), col("nrm"))
     val a = assigned.toDF("vec_a", "cid", "emb_a", "nrm_a")
     val b = assigned.toDF("vec_b", "cid_b", "emb_b", "nrm_b")
     val pairMax = a.join(b, col("cid") === col("cid_b") && col("vec_a") < col("vec_b"))
@@ -969,9 +896,7 @@ object SimilaritySearch {
     // bounded collect: k ≤ sampleCap rows × dim doubles — model-grain
     val init = sample.orderBy(col("vec_id")).limit(k)
       .select(col("emb")).collect().map(_.getSeq[Double](0).toArray).toSeq
-    val (centroids, _) = kmeansIterateOn(sample.select(col("emb")), iters, init)
-    if (centroids.length <= literalPathMaxK) assignLiteral(e, centroids)
-    else assignByTable(s, e, centroids)
+    nearestCentroid(e, kmeansIterateOn(sample.select(col("emb")), iters, init)._1)
   }
 
   /** q85 — SemDeDup (semantic dedup, Abbas et al. 2023 shape): assign every
@@ -990,24 +915,8 @@ object SimilaritySearch {
   val q85SemDedup: Q = Q(
     "q85_semdedup",
     (s, dir) => semdedupWith(s, dir, kmeansInit, tau = 0.3),
-    Some {
-      val scoreDefs = kmeansInit.zipWithIndex.map { case (c, i) =>
-        val cc = c.map(v => v * v).sum
-        s"    $cc - 2.0 * list_dot_product(emb, ${arraySql(c)}) AS s$i"
-      }.mkString(",\n")
-      s"""WITH $embOracleCte,
-         |scored AS (
-         |  SELECT vec_id, emb, nrm,
-         |$scoreDefs
-         |  FROM e),
-         |assigned AS (
-         |  SELECT vec_id, emb, nrm,
-         |    CAST(CASE
-         |      WHEN s0 <= s1 AND s0 <= s2 AND s0 <= s3 THEN 0
-         |      WHEN s1 <= s2 AND s1 <= s3 THEN 1
-         |      WHEN s2 <= s3 THEN 2
-         |      ELSE 3 END AS BIGINT) AS cid
-         |  FROM scored),
+    Some(s"""WITH $embOracleCte,
+         |${assignedOracleCte("vec_id, emb, nrm")},
          |pm AS (
          |  SELECT b.vec_id AS vec_id,
          |    MAX(list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm)) AS max_cos_lower
@@ -1016,19 +925,8 @@ object SimilaritySearch {
          |  GROUP BY b.vec_id)
          |SELECT s.vec_id, s.cid, pm.max_cos_lower,
          |  COALESCE(pm.max_cos_lower >= 0.3, FALSE) AS pruned
-         |FROM assigned s LEFT JOIN pm ON pm.vec_id = s.vec_id""".stripMargin
-    })
+         |FROM assigned s LEFT JOIN pm ON pm.vec_id = s.vec_id""".stripMargin))
 
-  /** q109 — cluster topic cards: the "what is in my data" report a corpus
-    * curator reads after clustering — for each embedding cluster, the 5
-    * most SALIENT terms of its documents (term frequency × cluster-level
-    * inverse document frequency). Assignment reuses the literal centroids
-    * (q62/q85's — oracle-shared); doc text joins on doc_id = vec_id (the
-    * testdata convention, same as q101). Salience stays integer-exact
-    * (tf · (10⁶ div cluster_df)) so the output hash-checks.
-    * Scale: one corpus-grain term aggregate at (cid, term) — map-side
-    * combinable; cluster-df and the rank window run over vocabulary-sized
-    * relations, partitioned by cid. */
   /** The topic-card report over ANY (vec_id, cid) assignment — q109
     * anchors it on the literal k=4 centroids (oracle-hash-checkable);
     * `clusterCardsTrained` composes the same report over the real
@@ -1067,29 +965,23 @@ object SimilaritySearch {
       trainedAssignment(s, dir, iters).select(col("vec_id"), col("cid")),
       Tables(s, dir, "documents"))
 
+  /** q109 — cluster topic cards: the "what is in my data" report a corpus
+    * curator reads after clustering — for each embedding cluster, the 5
+    * most SALIENT terms of its documents (term frequency × cluster-level
+    * inverse document frequency). Assignment reuses the literal centroids
+    * (q62/q85's — oracle-shared); doc text joins on doc_id = vec_id (the
+    * testdata convention, same as q101). Salience stays integer-exact
+    * (tf · (10⁶ div cluster_df)) so the output hash-checks.
+    * Scale: one corpus-grain term aggregate at (cid, term) — map-side
+    * combinable; cluster-df and the rank window run over vocabulary-sized
+    * relations, partitioned by cid. */
   val q109ClusterCards: Q = Q(
     "q109_cluster_cards",
     (s, dir) => clusterCards(
-      assignLiteral(embWithNorm(s, dir), kmeansInit).select(col("vec_id"), col("cid")),
+      nearestCentroid(embWithNorm(s, dir), kmeansInit).select(col("vec_id"), col("cid")),
       Tables(s, dir, "documents")),
-    Some {
-      val scoreDefs = kmeansInit.zipWithIndex.map { case (c, i) =>
-        val cc = c.map(v => v * v).sum
-        s"    $cc - 2.0 * list_dot_product(emb, ${arraySql(c)}) AS s$i"
-      }.mkString(",\n")
-      s"""WITH $embOracleCte,
-         |scored AS (
-         |  SELECT vec_id, emb,
-         |$scoreDefs
-         |  FROM e),
-         |assigned AS (
-         |  SELECT vec_id,
-         |    CAST(CASE
-         |      WHEN s0 <= s1 AND s0 <= s2 AND s0 <= s3 THEN 0
-         |      WHEN s1 <= s2 AND s1 <= s3 THEN 1
-         |      WHEN s2 <= s3 THEN 2
-         |      ELSE 3 END AS BIGINT) AS cid
-         |  FROM scored),
+    Some(s"""WITH $embOracleCte,
+         |${assignedOracleCte("vec_id")},
          |terms AS (
          |  SELECT a.cid, unnest(regexp_split_to_array(trim(d.text), '\\s+')) AS term
          |  FROM documents d JOIN assigned a ON d.doc_id = a.vec_id),
@@ -1105,8 +997,7 @@ object SimilaritySearch {
          |      ORDER BY tf.tf * (1000000 // cdf.cdf) DESC, tf.term ASC)
          |      AS BIGINT) AS rank
          |  FROM tf JOIN cdf USING (term)) r
-         |WHERE rank <= 5""".stripMargin
-    })
+         |WHERE rank <= 5""".stripMargin))
 
   val all: Seq[Q] = Seq(q35BruteForceTopK, q36LshTopK, q37IvfTopK, q38LshPairs,
     q62KmeansStep, q65PqAdc, q75VectorStats, q85SemDedup, q109ClusterCards,

@@ -171,6 +171,36 @@ object TextAnalysis {
       |  COUNT(*) AS cluster_size, MIN(doc_id) AS canonical_doc
       |FROM documents GROUP BY 1""".stripMargin))
 
+  /** The exact q24 quality expression over a words array and its word
+    * count — ONE definition so every Spark consumer (Dedup's survivorship
+    * scores, q67's fused scan) evaluates the identical IEEE tree. */
+  private[operators] def qualityExpr(w: Column, wordCount: Column): Column =
+    least(wordCount.cast("double") / lit(100.0), lit(1.0)) * lit(0.3) +
+      size(array_distinct(w)).cast("double") / wordCount * lit(0.4) +
+      (lit(1.0) - stopwordCount(w).cast("double") / wordCount) * lit(0.3)
+
+  /** DuckDB mirror of q24 and `qualityExpr` over `words`, a relation of
+    * (doc_id, w): q24's feature columns, then `quality_score` as the same
+    * IEEE tree. */
+  private[operators] def qualityOracle(words: String): String =
+    s"""SELECT doc_id, word_count, distinct_ratio, stopword_ratio,
+      |  least(CAST(word_count AS DOUBLE) / 100.0, 1.0) * 0.3
+      |    + distinct_ratio * 0.4
+      |    + (1.0 - stopword_ratio) * 0.3 AS quality_score
+      |FROM (
+      |  SELECT doc_id,
+      |    CAST(len(w) AS BIGINT) AS word_count,
+      |    CAST(len(list_distinct(w)) AS DOUBLE) / CAST(len(w) AS BIGINT) AS distinct_ratio,
+      |    CAST(len(list_filter(w, x -> list_contains(${
+        stopwords.mkString("['", "','", "']")}, x))) AS DOUBLE)
+      |      / CAST(len(w) AS BIGINT) AS stopword_ratio
+      |  FROM $words) feat""".stripMargin
+
+  /** The documents' words as (doc_id, w), for `qualityOracle`. */
+  private[operators] val docWordsOracle: String =
+    """(SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
+      |        FROM documents) raw""".stripMargin
+
   /** q24 — quality scoring: length/diversity/stopword-ratio blend. The exact
     * double expression structure is mirrored in the oracle so per-row IEEE
     * arithmetic is identical. */
@@ -190,18 +220,7 @@ object TextAnalysis {
             + col("distinct_ratio") * lit(0.4)
             + (lit(1.0) - col("stopword_ratio")) * lit(0.3)).as("quality_score"))
     },
-    Some("""SELECT doc_id, word_count, distinct_ratio, stopword_ratio,
-      |  least(CAST(word_count AS DOUBLE) / 100.0, 1.0) * 0.3
-      |    + distinct_ratio * 0.4
-      |    + (1.0 - stopword_ratio) * 0.3 AS quality_score
-      |FROM (
-      |  SELECT doc_id,
-      |    CAST(len(w) AS BIGINT) AS word_count,
-      |    CAST(len(list_distinct(w)) AS DOUBLE) / CAST(len(w) AS BIGINT) AS distinct_ratio,
-      |    CAST(len(list_filter(w, x -> list_contains(['the','a','of','and'], x))) AS DOUBLE)
-      |      / CAST(len(w) AS BIGINT) AS stopword_ratio
-      |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-      |        FROM documents) raw) feat""".stripMargin))
+    Some(qualityOracle(docWordsOracle)))
 
   /** q64 — repetition signals (the Gopher/C4-style quality gates a training
     * corpus filters on): per-doc duplicate-word fraction, most-common-word
@@ -855,15 +874,6 @@ object TextAnalysis {
       .withColumn("n_tokens", size(col("tokens")).cast("long"))
   }
 
-  /** q105 — overlapping context-window chunking (the RAG / long-context
-    * prep pass: split every document into fixed token windows with overlap,
-    * keyed for provenance). window=64 tokens, stride=48 → 16-token overlap;
-    * the final window per doc may run short (never dropped — trailing
-    * tokens always land in some chunk, and a chunk starts at every stride
-    * boundary ≤ doc length). Pure per-row explode + slice: no shuffle at
-    * all, chunk ids derive from the start offset (not a window function),
-    * so the operator is a single map-side pass at any corpus size — the
-    * shape that matters when chunking 100 TB for an embedding index. */
   /** The chunk transform behind q105, as a plain DataFrame→DataFrame so the
     * SAME code path runs in batch (oracle-checked) and under `readStream`
     * (stateless per-row explode — no watermark or state store needed;
@@ -881,6 +891,15 @@ object TextAnalysis {
         size(col("chunk")).cast("long").as("n_tokens"),
         array_join(col("chunk"), " ").as("chunk_text"))
 
+  /** q105 — overlapping context-window chunking (the RAG / long-context
+    * prep pass: split every document into fixed token windows with overlap,
+    * keyed for provenance). window=64 tokens, stride=48 → 16-token overlap;
+    * the final window per doc may run short (never dropped — trailing
+    * tokens always land in some chunk, and a chunk starts at every stride
+    * boundary ≤ doc length). Pure per-row explode + slice: no shuffle at
+    * all, chunk ids derive from the start offset (not a window function),
+    * so the operator is a single map-side pass at any corpus size — the
+    * shape that matters when chunking 100 TB for an embedding index. */
   val q105Chunking: Q = Q(
     "q105_chunking",
     (s, dir) => chunk(Tables(s, dir, "documents")),
@@ -898,22 +917,6 @@ object TextAnalysis {
       |  array_to_string(w[start:least(start + 63, n)], ' ') AS chunk_text
       |FROM c""".stripMargin))
 
-  /** q108 — boilerplate stripping (the C4-style cleanup pass: text repeated
-    * across many documents of a source — nav bars, license footers, templa-
-    * ted headers — is removed from EVERY document, with the document text
-    * REBUILT from the surviving content in order). Unit here is the
-    * non-overlapping 8-token block (this corpus has no newlines; on real
-    * data the split expression changes, the plan does not). A block is
-    * boilerplate when it appears verbatim in ≥ 3 distinct documents of the
-    * same source. Rebuild = order-sorted collect of kept blocks — the
-    * collect_list is per-document (bounded by document size, not corpus),
-    * made deterministic by array_sort on the block index.
-    * Scale shape: block explode (|tokens|/8 rows) → one map-side-combined
-    * (source, block, doc) occurrence-pack aggregate (read once, reused by
-    * both the distinct-doc count and the join back) → equi-join on
-    * (source, block) → per-doc regroup. Nothing wider than a document ever
-    * sits in one group; the frequency relation is bounded by distinct
-    * blocks, and `bis` arrays by a single document's block count. */
   /** The strip transform behind q108 as a plain DataFrame function
     * (doc_id, source, text) → cleaned docs, so the drop semantics are
     * spec-testable on a fixture with PLANTED boilerplate (the natural
@@ -961,6 +964,22 @@ object TextAnalysis {
           " ").as("cleaned_text"))
   }
 
+  /** q108 — boilerplate stripping (the C4-style cleanup pass: text repeated
+    * across many documents of a source — nav bars, license footers, templa-
+    * ted headers — is removed from EVERY document, with the document text
+    * REBUILT from the surviving content in order). Unit here is the
+    * non-overlapping 8-token block (this corpus has no newlines; on real
+    * data the split expression changes, the plan does not). A block is
+    * boilerplate when it appears verbatim in ≥ 3 distinct documents of the
+    * same source. Rebuild = order-sorted collect of kept blocks — the
+    * collect_list is per-document (bounded by document size, not corpus),
+    * made deterministic by array_sort on the block index.
+    * Scale shape: block explode (|tokens|/8 rows) → one map-side-combined
+    * (source, block, doc) occurrence-pack aggregate (read once, reused by
+    * both the distinct-doc count and the join back) → equi-join on
+    * (source, block) → per-doc regroup. Nothing wider than a document ever
+    * sits in one group; the frequency relation is bounded by distinct
+    * blocks, and `bis` arrays by a single document's block count. */
   val q108BoilerplateStrip: Q = Q(
     "q108_boilerplate_strip",
     (s, dir) => stripBoilerplate(Tables(s, dir, "documents")),

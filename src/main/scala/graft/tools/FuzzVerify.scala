@@ -355,7 +355,7 @@ object FuzzVerify {
     Q("lsh_thresh",
       (s, dir) => graft.operators.SimilaritySearch
         .lshPairs(s, dir, bands = 8, bitsPerBand = 8, threshold = t),
-      Some(s"""WITH ${graft.operators.SimilaritySearch.lshPairsOracleCte(t)}
+      Some(s"""WITH ${graft.operators.SimilaritySearch.lshPairsOracleCte(8, 8, t)}
          |SELECT vec_a, vec_b, cosine FROM scored""".stripMargin))
   }
 

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expressions.Md5Prefix
@@ -19,8 +21,23 @@ class Md5PrefixSpec extends AnyFunSuite {
     "0:12345", "1:12345", "x" * 1000, "line\nbreak|pipe|tab\tend",
     "世界", "replica-17:documents:42")
 
+  /** An RDD scan, not a local relation: the optimizer folds a projection
+    * over local rows through `eval`, so generated code would never run. */
+  private def sampleDocs(s: SparkSession): DataFrame = {
+    import s.implicits._
+    s.sparkContext.parallelize(samples, 2).toDF("s")
+  }
+
+  /** Is an `Md5Prefix` projection inside a whole-stage-codegen stage? */
+  private def fused(df: DataFrame): Boolean = TestPlans.nodes(df).exists {
+    case w: WholeStageCodegenExec => w.child.collect {
+      case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[Md5Prefix])) => p
+    }.nonEmpty
+    case _ => false
+  }
+
   test("parity with the conv(substring(md5)) composite at 15, 12, 5, 1 nibbles") {
-    val df = samples.toDF("s").select(
+    val df = sampleDocs(spark).select(
       col("s"),
       Md5Prefix.of(col("s").cast("binary"), 15).as("n15"),
       Md5Prefix.of(col("s").cast("binary"), 12).as("n12"),
@@ -30,7 +47,10 @@ class Md5PrefixSpec extends AnyFunSuite {
       conv(substring(md5(col("s").cast("binary")), 1, 12), 16, 10).cast("long").as("r12"),
       conv(substring(md5(col("s").cast("binary")), 1, 5), 16, 10).cast("long").as("r5"),
       conv(substring(md5(col("s").cast("binary")), 1, 1), 16, 10).cast("long").as("r1"))
-    df.collect().foreach { r =>
+    assert(fused(df), df.queryExecution.executedPlan.toString)
+    val rows = df.collect()
+    assert(rows.length == samples.length)
+    rows.foreach { r =>
       assert(r.getLong(1) == r.getLong(5), s"15 nibbles: ${r.getString(0)}")
       assert(r.getLong(2) == r.getLong(6), s"12 nibbles: ${r.getString(0)}")
       assert(r.getLong(3) == r.getLong(7), s"5 nibbles: ${r.getString(0)}")
@@ -39,15 +59,18 @@ class Md5PrefixSpec extends AnyFunSuite {
   }
 
   test("parity holds in the INTERPRETED path too (eval, not codegen)") {
-    // a non-deterministic guard in the projection disables whole-stage
-    // codegen for the expression tree, forcing Expression.eval
-    val df = samples.toDF("s")
-      .withColumn("r", rand(7)) // non-deterministic → eval path downstream
-      .select(
-        Md5Prefix.of(col("s").cast("binary"), 15).as("got"),
-        conv(substring(md5(col("s").cast("binary")), 1, 15), 16, 10)
-          .cast("long").as("want"))
-    df.collect().foreach(r => assert(r.getLong(0) == r.getLong(1)))
+    // no whole-stage codegen and no generated projections: Expression.eval
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val df = sampleDocs(s).select(
+      Md5Prefix.of(col("s").cast("binary"), 15).as("got"),
+      conv(substring(md5(col("s").cast("binary")), 1, 15), 16, 10)
+        .cast("long").as("want"))
+    assert(!TestPlans.nodes(df).exists(_.isInstanceOf[WholeStageCodegenExec]))
+    val rows = df.collect()
+    assert(rows.length == samples.length)
+    rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 
   test("NULL in, NULL out; codegen projection stays fused") {

@@ -338,10 +338,55 @@ class SimilaritySpec extends AnyFunSuite {
     }
     val byLiteral = SimilaritySearch.assignLiteral(e, centroids)
       .select(col("vec_id"), col("cid")).as[(Long, Long)].collect().sortBy(_._1)
-    val byTable = SimilaritySearch.assignByTable(spark, e, centroids)
+    val byTable = SimilaritySearch.assignByTable(e, centroids)
       .select(col("vec_id"), col("cid")).as[(Long, Long)].collect().sortBy(_._1)
     assert(byLiteral.toSeq == byTable.toSeq)
     assert(byLiteral.map(_._2).distinct.length > 1)
+  }
+
+  test("kmeansIterateOn above the literal cutover matches a driver-side Lloyd") {
+    // k = literalPathMaxK + 1 takes the broadcast-table assignment path
+    val e = SimilaritySearch.embWithNorm(spark, TestSpark.sf0001)
+    val k = SimilaritySearch.literalPathMaxK + 1
+    val iters = 3
+    val vecs = e.orderBy(col("vec_id")).select(col("emb"))
+      .collect().map(_.getSeq[Double](0).toArray)
+    val init = vecs.take(k).toSeq
+    val (got, gotInertia) = SimilaritySearch.kmeansIterateOn(e.select(col("emb")), iters, init)
+    // reference: same score (‖c‖² − 2·x·c, sequential dot), ties to the
+    // lowest id, means of the assigned vectors, empty clusters kept
+    def dot(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0; var i = 0
+      while (i < a.length) { s += a(i) * b(i); i += 1 }
+      s
+    }
+    var want = init
+    val wantInertia = (0 until iters).map { _ =>
+      val assigned = vecs.map { x =>
+        val sc = want.map(c => c.map(v => v * v).sum - 2.0 * dot(x, c))
+        val i = sc.indices.minBy(i => (sc(i), i))
+        (i, x, dot(x, x) + sc(i))
+      }
+      want = want.indices.map { i =>
+        val mine = assigned.filter(_._1 == i).map(_._2)
+        if (mine.isEmpty) want(i)
+        else Array.tabulate(want(i).length)(d => mine.map(_(d)).sum / mine.length)
+      }
+      assigned.map(_._3).sum
+    }
+    def rel(a: Array[Double], b: Array[Double]): Double =
+      math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum) /
+        math.sqrt(dot(b, b))
+    assert(gotInertia.length == iters)
+    gotInertia.zip(wantInertia).foreach { case (g, w) =>
+      assert(math.abs(g - w) <= 1e-9 * math.abs(w), s"inertia $g vs $w")
+    }
+    assert(got.length == k)
+    got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
+      assert(rel(g, w) <= 1e-9, s"centroid $i off by ${rel(g, w)} relative")
+    }
+    // training moved the model off its init
+    assert(got.zip(init).exists { case (g, c) => rel(g, c) > 1e-6 })
   }
 
   test("q109: every cluster gets ≤5 card terms with contiguous ranks and monotone salience") {

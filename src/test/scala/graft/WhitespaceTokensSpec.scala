@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expressions.WhitespaceTokens
@@ -20,24 +22,47 @@ class WhitespaceTokensSpec extends AnyFunSuite {
     "nbsp stays", "ideo　stays", "mix   y", "x" * 500,
     ("w " * 200).trim, "\t", "a\nb")
 
+  /** An RDD scan, not a local relation: the optimizer folds a projection
+    * over local rows through `eval`, so generated code would never run. */
+  private def sampleDocs(s: SparkSession): DataFrame = {
+    import s.implicits._
+    s.sparkContext.parallelize(samples, 2).toDF("s")
+  }
+
+  /** Is a `WhitespaceTokens` projection inside a whole-stage-codegen stage? */
+  private def fused(df: DataFrame): Boolean = TestPlans.nodes(df).exists {
+    case w: WholeStageCodegenExec => w.child.collect {
+      case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[WhitespaceTokens])) => p
+    }.nonEmpty
+    case _ => false
+  }
+
   test("parity with split(s, '\\\\s+') on edge samples, codegen path") {
-    val df = samples.toDF("s").select(
+    val df = sampleDocs(spark).select(
       col("s"),
       WhitespaceTokens.of(col("s")).as("got"),
       split(col("s"), "\\s+").as("want"))
-    df.collect().foreach { r =>
+    assert(fused(df), df.queryExecution.executedPlan.toString)
+    val rows = df.collect()
+    assert(rows.length == samples.length)
+    rows.foreach { r =>
       assert(r.getSeq[String](1) == r.getSeq[String](2),
         s"input=${r.getString(0).replace("\n", "\\n")}")
     }
   }
 
   test("parity in the INTERPRETED path (eval, not codegen)") {
-    val df = samples.toDF("s")
-      .withColumn("r", rand(7))
-      .select(
-        WhitespaceTokens.of(col("s")).as("got"),
-        split(col("s"), "\\s+").as("want"))
-    df.collect().foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
+    // no whole-stage codegen and no generated projections: Expression.eval
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val df = sampleDocs(s).select(
+      WhitespaceTokens.of(col("s")).as("got"),
+      split(col("s"), "\\s+").as("want"))
+    assert(!TestPlans.nodes(df).exists(_.isInstanceOf[WholeStageCodegenExec]))
+    val rows = df.collect()
+    assert(rows.length == samples.length)
+    rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
   }
 
   test("JVM-level parity with String.split on the same samples") {
