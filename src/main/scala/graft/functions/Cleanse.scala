@@ -70,8 +70,12 @@ object Cleanse {
     * report means. Tie behavior matches by construction: Spark `round` on
     * decimal is HALF_UP, DuckDB `ROUND` on decimal ties away from zero,
     * and both return a scale-2 decimal. Oracle-side lockstep form:
-    * `CAST(ROUND(SUM(CAST(x AS DECIMAL(18,6))), 2) AS DOUBLE)`. */
+    * `moneySumSql`. */
   def moneyReport(decSum: Column): Column = round(decSum, 2).cast("double")
+
+  /** `moneyReport(moneySum(x))` in SQL, for the per-row expression `exprSql`. */
+  def moneySumSql(exprSql: String): String =
+    s"CAST(ROUND(SUM(CAST($exprSql AS DECIMAL(18,6))), 2) AS DOUBLE)"
 
   /** Statically non-null column (optimization r18, guide §2.4 "remove
     * shuffles outright"): wraps a key that is non-null BY CONSTRUCTION

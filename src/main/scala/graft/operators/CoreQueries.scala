@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Q
@@ -13,11 +14,11 @@ import graft.sources.Tables
 object CoreQueries {
 
   /** A1–A6 + F1 — grouped hash aggregation with exact decimal money sums
-    * (pay_agg shape; transform-complex-full.py:67-82). Partial+final
-    * HashAggregate: the shuffle carries 6 groups, not 600k rows. */
-  val q01PricingSummary: Q = Q(
-    "q01_pricing_summary",
-    (s, dir) => Tables(s, dir, "lineitem")
+    * (pay_agg shape; transform-complex-full.py:67-82) over `lineitem` rows
+    * (q01: the whole table). Partial+final HashAggregate: the shuffle
+    * carries 6 groups, not 600k rows. */
+  def pricingSummary(lineitem: DataFrame): DataFrame =
+    lineitem
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
         sum(col("l_quantity")).as("sum_qty"),
@@ -25,35 +26,55 @@ object CoreQueries {
         moneyReport(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("sum_disc_price"),
         moneyReport(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax")))).as("sum_charge"),
         avg(col("l_quantity")).as("avg_qty"),
-        count(lit(1)).as("count_order")),
-    Some("""SELECT l_returnflag, l_linestatus,
+        count(lit(1)).as("count_order"))
+
+  /** `pricingSummary` in DuckDB SQL over the relation `from`. */
+  private[graft] def pricingSummaryOracle(from: String): String =
+    s"""SELECT l_returnflag, l_linestatus,
       |  SUM(l_quantity) AS sum_qty,
-      |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_base_price,
-      |  CAST(ROUND(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_disc_price,
-      |  CAST(ROUND(SUM(CAST(l_extendedprice*(1-l_discount)*(1+l_tax) AS DECIMAL(18,6))), 2) AS DOUBLE) AS sum_charge,
+      |  ${moneySumSql("l_extendedprice")} AS sum_base_price,
+      |  ${moneySumSql("l_extendedprice*(1-l_discount)")} AS sum_disc_price,
+      |  ${moneySumSql("l_extendedprice*(1-l_discount)*(1+l_tax)")} AS sum_charge,
       |  AVG(l_quantity) AS avg_qty,
       |  COUNT(*) AS count_order
-      |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin))
+      |FROM $from GROUP BY l_returnflag, l_linestatus""".stripMargin
 
-  /** P1/P6 predicates + computed aggregate (TPC-H Q6 shape). The range +
-    * equality predicates push into the parquet scan (PushedFilters). */
-  val q02SelectiveRevenue: Q = Q(
-    "q02_selective_revenue",
-    (s, dir) => Tables(s, dir, "lineitem")
+  val q01PricingSummary: Q = Q(
+    "q01_pricing_summary",
+    (s, dir) => pricingSummary(Tables(s, dir, "lineitem")),
+    Some(pricingSummaryOracle("lineitem")))
+
+  /** P1/P6 predicates + computed aggregate (TPC-H Q6 shape): ship date in
+    * [from, until), discount in [discLo, discHi], quantity below
+    * `qtyBelow`. The range + equality predicates push into the parquet
+    * scan (PushedFilters). */
+  def selectiveRevenue(s: SparkSession, dir: String, from: String, until: String,
+      discLo: Double, discHi: Double, qtyBelow: Int): DataFrame =
+    Tables(s, dir, "lineitem")
       .filter(
-        col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1996-07-01").cast("timestamp") &&
-        col("l_discount").between(0.02, 0.06) &&
-        col("l_quantity") < 24)
+        col("l_shipdate") >= lit(from).cast("timestamp") &&
+        col("l_shipdate") < lit(until).cast("timestamp") &&
+        col("l_discount").between(discLo, discHi) &&
+        col("l_quantity") < qtyBelow)
       .agg(
         moneyReport(moneySum(col("l_extendedprice") * col("l_discount"))).as("promo_revenue"),
-        count(lit(1)).as("n_rows")),
-    Some("""SELECT
-      |  CAST(ROUND(SUM(CAST(l_extendedprice*l_discount AS DECIMAL(18,6))), 2) AS DOUBLE) AS promo_revenue,
+        count(lit(1)).as("n_rows"))
+
+  /** `selectiveRevenue` in DuckDB SQL. The discount bounds cross as
+    * `Double.toString`, which round-trips. */
+  private[graft] def selectiveRevenueOracle(from: String, until: String,
+      discLo: Double, discHi: Double, qtyBelow: Int): String =
+    s"""SELECT
+      |  ${moneySumSql("l_extendedprice*l_discount")} AS promo_revenue,
       |  COUNT(*) AS n_rows
       |FROM lineitem
-      |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-07-01'
-      |  AND l_discount BETWEEN 0.02 AND 0.06 AND l_quantity < 24""".stripMargin))
+      |WHERE l_shipdate >= TIMESTAMP '$from' AND l_shipdate < TIMESTAMP '$until'
+      |  AND l_discount BETWEEN $discLo AND $discHi AND l_quantity < $qtyBelow""".stripMargin
+
+  val q02SelectiveRevenue: Q = Q(
+    "q02_selective_revenue",
+    (s, dir) => selectiveRevenue(s, dir, "1996-01-01", "1996-07-01", 0.02, 0.06, 24),
+    Some(selectiveRevenueOracle("1996-01-01", "1996-07-01", 0.02, 0.06, 24)))
 
   /** J2 inner equi-join + grouped agg + distinct aggregate
     * (transform-complex-full.py:197-199 join shape). */
@@ -65,9 +86,9 @@ object CoreQueries {
       .agg(
         countDistinct(col("o_orderkey")).as("order_count"),
         moneyReport(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("revenue")),
-    Some("""SELECT o_orderpriority,
+    Some(s"""SELECT o_orderpriority,
       |  COUNT(DISTINCT o_orderkey) AS order_count,
-      |  CAST(ROUND(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
+      |  ${moneySumSql("l_extendedprice*(1-l_discount)")} AS revenue
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY o_orderpriority""".stripMargin))
 
@@ -148,62 +169,91 @@ object CoreQueries {
       |  concat_ws('|', p_brand, p_type) AS brand_type
       |FROM part""".stripMargin))
 
-  /** O1 generalized — top-k per group via ranked window (SURVEY.md §2.6). */
-  val q10TopKPerGroup: Q = Q(
-    "q10_topk_per_group",
-    (s, dir) => Tables(s, dir, "part")
+  /** Sort direction of an ORDER BY key, in Spark and in SQL. */
+  private def ordered(c: Column, desc: Boolean): Column = if (desc) c.desc else c.asc
+  private def orderSql(desc: Boolean): String = if (desc) "DESC" else "ASC"
+
+  /** O1 generalized — top-k per group via ranked window (SURVEY.md §2.6):
+    * the `k` parts of each brand by price (`desc` or ascending), ties
+    * broken by partkey. */
+  def topKPerGroup(s: SparkSession, dir: String, k: Int, desc: Boolean): DataFrame =
+    Tables(s, dir, "part")
       .withColumn("brand_rank",
         row_number().over(Window.partitionBy(col("p_brand"))
-          .orderBy(col("p_retailprice").desc, col("p_partkey").asc)).cast("long"))
-      .filter(col("brand_rank") <= 3)
+          .orderBy(ordered(col("p_retailprice"), desc), col("p_partkey").asc)).cast("long"))
+      .filter(col("brand_rank") <= k)
       .select(col("p_brand"), col("p_partkey"), col("p_name"),
-        col("p_retailprice"), col("brand_rank")),
-    Some("""SELECT p_brand, p_partkey, p_name, p_retailprice, brand_rank
+        col("p_retailprice"), col("brand_rank"))
+
+  /** `topKPerGroup` in DuckDB SQL. */
+  private[graft] def topKPerGroupOracle(k: Int, desc: Boolean): String =
+    s"""SELECT p_brand, p_partkey, p_name, p_retailprice, brand_rank
       |FROM (SELECT p_brand, p_partkey, p_name, p_retailprice,
       |        CAST(ROW_NUMBER() OVER (PARTITION BY p_brand
-      |               ORDER BY p_retailprice DESC, p_partkey ASC) AS BIGINT) AS brand_rank
+      |               ORDER BY p_retailprice ${orderSql(desc)}, p_partkey ASC) AS BIGINT) AS brand_rank
       |      FROM part) t
-      |WHERE brand_rank <= 3""".stripMargin))
+      |WHERE brand_rank <= $k""".stripMargin
 
-  /** Window-function surface (SURVEY.md §2.5 extension): row_number, lag,
-    * lead, running decimal sum over a pinned total order. */
-  val q11CustomerOrderSeq: Q = Q(
-    "q11_customer_order_seq",
-    (s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      Tables(s, dir, "orders").select(
-        col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice"),
-        row_number().over(w).cast("long").as("order_seq"),
-        lag(col("o_totalprice"), 1).over(w).as("prev_totalprice"),
-        lead(col("o_orderdate"), 1).over(w).as("next_order_ts"),
-        sum(money(col("o_totalprice")))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("double").as("running_spend"),
-        ntile(4).over(w).cast("long").as("order_quartile"))
-    },
-    Some("""SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
+  val q10TopKPerGroup: Q = Q(
+    "q10_topk_per_group",
+    (s, dir) => topKPerGroup(s, dir, 3, desc = true),
+    Some(topKPerGroupOracle(3, desc = true)))
+
+  /** Window-function surface (SURVEY.md §2.5 extension) over `orders` rows
+    * (q11: the whole table): row_number, lag, lead, running decimal sum
+    * and NTILE(`tiles`) over a pinned total order per customer. The
+    * bucket column keeps q11's name, `order_quartile`. */
+  def customerOrderSeq(orders: DataFrame, tiles: Int): DataFrame = {
+    val w = Window.partitionBy(col("o_custkey"))
+      .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
+    orders.select(
+      col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice"),
+      row_number().over(w).cast("long").as("order_seq"),
+      lag(col("o_totalprice"), 1).over(w).as("prev_totalprice"),
+      lead(col("o_orderdate"), 1).over(w).as("next_order_ts"),
+      sum(money(col("o_totalprice")))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .cast("double").as("running_spend"),
+      ntile(tiles).over(w).cast("long").as("order_quartile"))
+  }
+
+  /** `customerOrderSeq` in DuckDB SQL over the relation `from`. */
+  private[graft] def customerOrderSeqOracle(from: String, tiles: Int): String =
+    s"""SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
       |  CAST(ROW_NUMBER() OVER w AS BIGINT) AS order_seq,
       |  LAG(o_totalprice, 1) OVER w AS prev_totalprice,
       |  LEAD(o_orderdate, 1) OVER w AS next_order_ts,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) OVER
       |    (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
       |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_spend,
-      |  CAST(NTILE(4) OVER w AS BIGINT) AS order_quartile
-      |FROM orders
-      |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)""".stripMargin))
+      |  CAST(NTILE($tiles) OVER w AS BIGINT) AS order_quartile
+      |FROM $from
+      |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC)""".stripMargin
 
-  /** Global sort + limit with pinned tiebreak (SURVEY.md §2.6). Spark plans
-    * TakeOrderedAndProject — a per-partition top-k then a k-row merge, no
-    * global sort materialization. */
+  val q11CustomerOrderSeq: Q = Q(
+    "q11_customer_order_seq",
+    (s, dir) => customerOrderSeq(Tables(s, dir, "orders"), 4),
+    Some(customerOrderSeqOracle("orders", 4)))
+
+  /** Global sort + limit with pinned tiebreak (SURVEY.md §2.6): the `n`
+    * orders by total price (`desc` or ascending), ties broken by orderkey.
+    * Spark plans TakeOrderedAndProject — a per-partition top-k then a
+    * k-row merge, no global sort materialization. */
+  def topOrders(s: SparkSession, dir: String, n: Int, desc: Boolean): DataFrame =
+    Tables(s, dir, "orders")
+      .orderBy(ordered(col("o_totalprice"), desc), col("o_orderkey").asc)
+      .limit(n)
+      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderdate"))
+
+  /** `topOrders` in DuckDB SQL. */
+  private[graft] def topOrdersOracle(n: Int, desc: Boolean): String =
+    s"""SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate
+      |FROM orders ORDER BY o_totalprice ${orderSql(desc)}, o_orderkey ASC LIMIT $n""".stripMargin
+
   val q12TopOrders: Q = Q(
     "q12_top_orders",
-    (s, dir) => Tables(s, dir, "orders")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      .limit(10)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderdate")),
-    Some("""SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate
-      |FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin))
+    (s, dir) => topOrders(s, dir, 10, desc = true),
+    Some(topOrdersOracle(10, desc = true)))
 
   /** Date-part rollup (the BI-layer query shape the reference's 7 indexes
     * exist to serve — transform-complex-full.py:215-221). */
@@ -215,9 +265,9 @@ object CoreQueries {
         count(lit(1)).as("order_count"),
         moneyReport(moneySum(col("o_totalprice"))).as("month_revenue"))
       .withColumn("order_year", year(col("order_month")).cast("long")),
-    Some("""SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS order_month,
+    Some(s"""SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS order_month,
       |  COUNT(*) AS order_count,
-      |  CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS month_revenue,
+      |  ${moneySumSql("o_totalprice")} AS month_revenue,
       |  CAST(year(o_orderdate) AS BIGINT) AS order_year
       |FROM orders GROUP BY 1, 4""".stripMargin))
 
@@ -281,8 +331,8 @@ object CoreQueries {
       .agg(
         count(lit(1)).as("order_count"),
         moneyReport(moneySum(col("o_totalprice"))).as("revenue")),
-    Some("""SELECT o_orderpriority, o_orderstatus, COUNT(*) AS order_count,
-      |  CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
+    Some(s"""SELECT o_orderpriority, o_orderstatus, COUNT(*) AS order_count,
+      |  ${moneySumSql("o_totalprice")} AS revenue
       |FROM orders GROUP BY ROLLUP(o_orderpriority, o_orderstatus)""".stripMargin))
 
   /** CUBE over (returnflag, linestatus) with `grouping_id` — completes the
@@ -299,8 +349,8 @@ object CoreQueries {
         count(lit(1)).as("row_count"),
         moneyReport(moneySum(col("l_extendedprice"))).as("revenue"),
         grouping_id().cast("long").as("gid")),
-    Some("""SELECT l_returnflag, l_linestatus, COUNT(*) AS row_count,
-      |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
+    Some(s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS row_count,
+      |  ${moneySumSql("l_extendedprice")} AS revenue,
       |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
       |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""".stripMargin))
 
@@ -575,8 +625,8 @@ object CoreQueries {
           count(lit(1)).as("n_events"),
           moneyReport(moneySum(col("value"))).as("total_value"))
     },
-    Some("""SELECT u.tier, COUNT(*) AS n_events,
-      |  CAST(ROUND(SUM(CAST(e.value AS DECIMAL(18,6))), 2) AS DOUBLE) AS total_value
+    Some(s"""SELECT u.tier, COUNT(*) AS n_events,
+      |  ${moneySumSql("e.value")} AS total_value
       |FROM events e
       |JOIN (SELECT user_id, user_id % 3 AS tier
       |      FROM (SELECT DISTINCT user_id FROM events) du) u
@@ -707,8 +757,8 @@ object CoreQueries {
         .groupBy(col("n_name"))
         .agg(moneyReport(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("revenue"))
     },
-    Some("""SELECT n_name,
-      |  CAST(ROUND(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
+    Some(s"""SELECT n_name,
+      |  ${moneySumSql("l_extendedprice*(1-l_discount)")} AS revenue
       |FROM customer, orders, lineitem, supplier, nation, region
       |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
       |  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
@@ -743,9 +793,9 @@ object CoreQueries {
         .agg(count(lit(1)).as("n_orders"),
           moneyReport(moneySum(col("o_totalprice"))).as("revenue"))
     },
-    Some("""SELECT snapshot, COALESCE(o_orderpriority, '<pre-evolution>') AS priority,
+    Some(s"""SELECT snapshot, COALESCE(o_orderpriority, '<pre-evolution>') AS priority,
       |  COUNT(*) AS n_orders,
-      |  CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
+      |  ${moneySumSql("o_totalprice")} AS revenue
       |FROM (
       |  SELECT o_orderkey, o_orderstatus, o_totalprice,
       |         NULL AS o_orderpriority, 'v1' AS snapshot
@@ -804,9 +854,9 @@ object CoreQueries {
           count(lit(1)).as("purchases"),
           moneyReport(moneySum(col("value"))).as("attributed_revenue"))
     },
-    Some("""SELECT COALESCE(touch, 'direct') AS channel,
+    Some(s"""SELECT COALESCE(touch, 'direct') AS channel,
       |  COUNT(*) AS purchases,
-      |  CAST(ROUND(SUM(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE) AS attributed_revenue
+      |  ${moneySumSql("value")} AS attributed_revenue
       |FROM (
       |  SELECT event_type, value,
       |    LAST_VALUE(CASE WHEN event_type IN ('click','view','signup')
@@ -824,14 +874,14 @@ object CoreQueries {
     "q46_sql_api",
     (s, dir) => {
       Tables(s, dir, "orders").createOrReplaceTempView("orders_v")
-      s.sql("""SELECT o_orderpriority, o_orderstatus, COUNT(*) AS order_count,
-              |  CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
+      s.sql(s"""SELECT o_orderpriority, o_orderstatus, COUNT(*) AS order_count,
+              |  ${moneySumSql("o_totalprice")} AS revenue
               |FROM orders_v
               |GROUP BY o_orderpriority, o_orderstatus
               |HAVING COUNT(*) > 10""".stripMargin)
     },
-    Some("""SELECT o_orderpriority, o_orderstatus, COUNT(*) AS order_count,
-      |  CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
+    Some(s"""SELECT o_orderpriority, o_orderstatus, COUNT(*) AS order_count,
+      |  ${moneySumSql("o_totalprice")} AS revenue
       |FROM orders
       |GROUP BY o_orderpriority, o_orderstatus
       |HAVING COUNT(*) > 10""".stripMargin))
@@ -957,9 +1007,9 @@ object CoreQueries {
           coalesce(col("revenue"), lit(0.0)).as("revenue"),
           col("revenue").isNull.as("was_missing"))
     },
-    Some("""WITH monthly AS (
+    Some(s"""WITH monthly AS (
       |  SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
-      |    CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
+      |    ${moneySumSql("o_totalprice")} AS revenue
       |  FROM orders GROUP BY 1),
       |b AS (SELECT CAST(date_trunc('month', MIN(o_orderdate)) AS TIMESTAMP) AS lo,
       |             CAST(date_trunc('month', MAX(o_orderdate)) AS TIMESTAMP) AS hi

@@ -351,7 +351,7 @@ object Curation {
     * combinable), a source-grain totals relation (broadcasts), and a
     * term-keyed self-join whose fan-out is sources-per-term choose 2 —
     * vocabulary-linear for a bounded source set. */
-  val q110SourceSimilarity: Q = Q(
+  val q112SourceSimilarity: Q = Q(
     "q112_source_similarity",
     (s, dir) => sourceTv(Tables(s, dir, "documents")),
     Some("""WITH tc AS (
@@ -383,5 +383,5 @@ object Curation {
       |JOIN qt qb ON qb.source = g.source_b""".stripMargin))
 
   val all: Seq[Q] = Seq(q88EvalCarveout, q89DomainMixture, q91LengthGates,
-    q106TrainOrder, q107EpochShards, q110SourceSimilarity)
+    q106TrainOrder, q107EpochShards, q112SourceSimilarity)
 }

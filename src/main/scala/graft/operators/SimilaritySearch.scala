@@ -62,27 +62,28 @@ object SimilaritySearch {
   private def centroidScoreSql(emb: String, c: Array[Double]): String =
     s"${c.map(v => v * v).sum} - 2.0 * list_dot_product($emb, ${arraySql(c)})"
 
-  /** q35 — brute-force cosine top-k: for each query vector (vec_id < 8),
-    * the 5 nearest other vectors by cosine, ties broken by vec_id. */
-  val q35BruteForceTopK: Q = Q(
-    "q35_ann_bruteforce",
-    (s, dir) => {
-      val e = embWithNorm(s, dir)
-      val queries = e.select(col("vec_id").as("q_id"), col("emb").as("q_emb"), col("nrm").as("q_nrm"))
-        .filter(col("q_id") < 8)
-      val scored = e.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-        .withColumn("cosine",
-          Similarity.cosinePre(Similarity.dot(col("emb"), col("q_emb")),
-            col("nrm"), col("q_nrm")))
-      scored
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id").asc))
-          .cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cosine"), col("rank"))
-    },
-    Some(s"""WITH $embOracleCte,
-      |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM e WHERE vec_id < 8),
+  /** Brute-force cosine top-k: for each query vector (vec_id < `queries`),
+    * the `k` nearest other vectors by cosine, ties broken by vec_id. */
+  def bruteForceTopK(s: SparkSession, dir: String, queries: Int, k: Int): DataFrame = {
+    val e = embWithNorm(s, dir)
+    val qs = e.select(col("vec_id").as("q_id"), col("emb").as("q_emb"), col("nrm").as("q_nrm"))
+      .filter(col("q_id") < queries)
+    val scored = e.join(broadcast(qs), col("vec_id") =!= col("q_id"))
+      .withColumn("cosine",
+        Similarity.cosinePre(Similarity.dot(col("emb"), col("q_emb")),
+          col("nrm"), col("q_nrm")))
+    scored
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id").asc))
+        .cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cosine"), col("rank"))
+  }
+
+  /** `bruteForceTopK` in DuckDB SQL. */
+  private[graft] def bruteForceTopKOracle(queries: Int, k: Int): String =
+    s"""WITH $embOracleCte,
+      |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM e WHERE vec_id < $queries),
       |scored AS (
       |  SELECT q.q_id, e.vec_id AS neighbor_id,
       |         list_dot_product(e.emb, q.q_emb) / (e.nrm * q.q_nrm) AS cosine
@@ -92,7 +93,14 @@ object SimilaritySearch {
       |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
       |           ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
       |  FROM scored) r
-      |WHERE rank <= 5""".stripMargin))
+      |WHERE rank <= $k""".stripMargin
+
+  /** q35 — brute-force cosine top-k: the 5 nearest neighbors of each of
+    * the 8 query vectors. */
+  val q35BruteForceTopK: Q = Q(
+    "q35_ann_bruteforce",
+    (s, dir) => bruteForceTopK(s, dir, queries = 8, k = 5),
+    Some(bruteForceTopKOracle(queries = 8, k = 5)))
 
   /** The 4 sign-projection hyperplanes for q36, as explicit constants so the
     * SAME coefficient literals appear in the Spark plan and the generated

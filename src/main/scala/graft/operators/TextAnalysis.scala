@@ -84,30 +84,39 @@ object TextAnalysis {
       |    / len(regexp_split_to_array(trim(text), '\s+')) AS avg_word_len
       |FROM documents""".stripMargin))
 
-  /** q21 — token counting: whitespace tokens + a BPE-ish regex segmentation
-    * (letter runs / single digits / other symbols), rolled up per source. */
-  val q21TokenCount: Q = Q(
-    "q21_token_count",
-    (s, dir) => Tables(s, dir, "documents")
-      .select(col("source"),
+  /** Token counting over `docs` rows (q21: the whole table), rolled up by
+    * `key`: whitespace tokens + a BPE-ish regex segmentation (letter runs
+    * / single digits / other symbols). */
+  def tokenCount(docs: DataFrame, key: String): DataFrame =
+    docs
+      .select(col(key),
         size(words(col("text"))).cast("long").as("ws_tokens"),
         size(regexp_extract_all(col("text"), lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"), lit(0)))
           .cast("long").as("bpe_tokens"))
-      .groupBy(col("source"))
+      .groupBy(col(key))
       .agg(
         count(lit(1)).as("doc_count"),
         sum(col("ws_tokens")).as("total_ws_tokens"),
         sum(col("bpe_tokens")).as("total_bpe_tokens"),
-        max(col("bpe_tokens")).as("max_bpe_tokens")),
-    Some("""SELECT source, COUNT(*) AS doc_count,
+        max(col("bpe_tokens")).as("max_bpe_tokens"))
+
+  /** `tokenCount` in DuckDB SQL over the relation `from`. */
+  private[graft] def tokenCountOracle(from: String, key: String): String =
+    s"""SELECT $key, COUNT(*) AS doc_count,
       |  CAST(SUM(ws_tokens) AS BIGINT) AS total_ws_tokens,
       |  CAST(SUM(bpe_tokens) AS BIGINT) AS total_bpe_tokens,
       |  MAX(bpe_tokens) AS max_bpe_tokens
-      |FROM (SELECT source,
-      |        CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS ws_tokens,
-      |        CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS bpe_tokens
-      |      FROM documents) t
-      |GROUP BY source""".stripMargin))
+      |FROM (SELECT $key,
+      |        CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS ws_tokens,
+      |        CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS BIGINT) AS bpe_tokens
+      |      FROM $from) t
+      |GROUP BY $key""".stripMargin
+
+  /** q21 — token counting per source. */
+  val q21TokenCount: Q = Q(
+    "q21_token_count",
+    (s, dir) => tokenCount(Tables(s, dir, "documents"), "source"),
+    Some(tokenCountOracle("documents", "source")))
 
   /** q22 — language ID by marker-word voting: explode words, broadcast-join
     * the lexicon, count matches per candidate language, argmax with pinned
@@ -197,7 +206,7 @@ object TextAnalysis {
       |  FROM $words) feat""".stripMargin
 
   /** The documents' words as (doc_id, w), for `qualityOracle`. */
-  private[operators] val docWordsOracle: String =
+  private[graft] val docWordsOracle: String =
     """(SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
       |        FROM documents) raw""".stripMargin
 

@@ -181,8 +181,8 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(dropped(None)._2 == tail("n"))
   }
 
-  test("q110: all unordered source pairs present, tv bounded, degenerate self-distance zero") {
-    val out = Curation.q110SourceSimilarity.run(spark, dir).cache()
+  test("q112: all unordered source pairs present, tv bounded, degenerate self-distance zero") {
+    val out = Curation.q112SourceSimilarity.run(spark, dir).cache()
     val sources = graft.sources.Tables(spark, dir, "documents")
       .select(col("source")).distinct().count()
     assert(out.count() == sources * (sources - 1) / 2, "one row per unordered pair")
@@ -203,7 +203,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     out.unpersist()
   }
 
-  test("q110: a fully disjoint-vocabulary source pair still emits its row, tv ≈ 1") {
+  test("q112: a fully disjoint-vocabulary source pair still emits its row, tv ≈ 1") {
     // regression guard: the pair grid is seeded from the source set, not
     // from the common-term inner join — a pair sharing zero terms must
     // appear with sum-of-mins 0 instead of being silently dropped.

@@ -61,4 +61,16 @@ class FuzzVerifySpec extends AnyFunSuite {
       assert(tables.exists(q.oracle.get.contains), s"${q.name} sql references no table")
     }
   }
+
+  test("every template's Spark query analyzes and returns rows at sf0.001") {
+    // one instance per template: the oracle side runs in tools/fuzz_oracle.py,
+    // this pins that each drawn Spark query runs at all
+    val insts = FuzzVerify.instances(42L, FuzzVerify.templates.length)
+    assert(insts.map(_.name.take(4)).distinct.size == FuzzVerify.templates.length)
+    insts.foreach { q =>
+      val df = q.run(TestSpark.spark, TestSpark.sf0001)
+      df.queryExecution.assertAnalyzed()
+      assert(!df.isEmpty, s"${q.name} returned no rows")
+    }
+  }
 }

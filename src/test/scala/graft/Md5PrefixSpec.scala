@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expressions.Md5Prefix
@@ -29,12 +29,8 @@ class Md5PrefixSpec extends AnyFunSuite {
   }
 
   /** Is an `Md5Prefix` projection inside a whole-stage-codegen stage? */
-  private def fused(df: DataFrame): Boolean = TestPlans.nodes(df).exists {
-    case w: WholeStageCodegenExec => w.child.collect {
-      case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[Md5Prefix])) => p
-    }.nonEmpty
-    case _ => false
-  }
+  private def fused(df: DataFrame): Boolean =
+    TestPlans.fusedProject(df)(_.isInstanceOf[Md5Prefix])
 
   test("parity with the conv(substring(md5)) composite at 15, 12, 5, 1 nibbles") {
     val df = sampleDocs(spark).select(

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
@@ -56,27 +58,50 @@ class RangeBucketIdSpec extends AnyFunSuite {
     }
   }
 
-  test("multi-column mixed-direction keys match reference; NULL key → -1") {
-    val bounds = Seq(
-      Seq[Any]("bb", 10L), Seq[Any]("bb", 5L), Seq[Any]("dd", 99L))
-      // driver-sort order: (s asc, v desc) ⇒ ("bb",10) before ("bb",5)
-    val expr = RangeBucketId(
-      Seq(Bridge.expression(col("s")), Bridge.expression(col("v"))),
-      Seq(true, false), bounds.map(_.toArray).toArray)
+  private val mixedBounds = Seq(
+    Seq[Any]("bb", 10L), Seq[Any]("bb", 5L), Seq[Any]("dd", 99L))
+    // driver-sort order: (s asc, v desc) ⇒ ("bb",10) before ("bb",5)
+
+  /** (s, v, pid) over string/descending keys and one NULL key, from an RDD
+    * scan, not a local relation: the optimizer folds a projection over
+    * local rows through `eval`, so generated code would never run. */
+  private def mixedBuckets(s: SparkSession): DataFrame = {
+    import s.implicits._
     val rows = Seq(("aa", 1L), ("bb", 11L), ("bb", 10L), ("bb", 7L),
       ("bb", 5L), ("bb", 1L), ("cc", 50L), ("dd", 99L), ("zz", 0L))
-    val df = rows.toDF("s", "v").select(col("s"), col("v"),
-      Bridge.column(expr).as("pid"))
-    df.collect().foreach { r =>
-      val exp = refBucket(Seq(r.getString(0), r.getLong(1)),
-        Seq(true, false), bounds)
+      .map { case (k, v) => (Option(k), v) } :+ ((None, 2L))
+    s.sparkContext.parallelize(rows, 2).toDF("s", "v").select(col("s"), col("v"),
+      Bridge.column(RangeBucketId(
+        Seq(Bridge.expression(col("s")), Bridge.expression(col("v"))),
+        Seq(true, false), mixedBounds.map(_.toArray).toArray)).as("pid"))
+  }
+
+  /** Every row's bucket is the reference's; the NULL key's is -1. */
+  private def assertMixedBuckets(df: DataFrame): Unit = {
+    val rows = df.collect()
+    assert(rows.length == 10)
+    rows.foreach { r =>
+      val exp = if (r.isNullAt(0)) -1
+        else refBucket(Seq(r.getString(0), r.getLong(1)), Seq(true, false), mixedBounds)
       assert(r.getInt(2) == exp, s"row=$r expected=$exp")
     }
-    val withNull = Seq((Some("aa"), 1L), (None, 2L)).toDF("s", "v")
-      .select(Bridge.column(RangeBucketId(
-        Seq(Bridge.expression(col("s")), Bridge.expression(col("v"))),
-        Seq(true, false), bounds.map(_.toArray).toArray)).as("pid"))
-    assert(withNull.as[Int].collect().sorted.toSeq == Seq(-1, 0))
+  }
+
+  test("multi-column mixed-direction keys match reference; NULL key → -1") {
+    val df = mixedBuckets(spark)
+    assert(TestPlans.fusedProject(df)(_.isInstanceOf[RangeBucketId]),
+      df.queryExecution.executedPlan.toString)
+    assertMixedBuckets(df)
+  }
+
+  test("multi-column keys match reference in the INTERPRETED path too") {
+    // no whole-stage codegen and no generated projections: Expression.eval
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val df = mixedBuckets(s)
+    assert(!TestPlans.nodes(df).exists(_.isInstanceOf[WholeStageCodegenExec]))
+    assertMixedBuckets(df)
   }
 
   test("withGlobalOrder end-to-end at a 256-partition session stays fused") {

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanLike, SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.{FileSourceScanLike, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** The one physical-plan walk the specs share. Under AQE the plan a query
@@ -32,6 +33,16 @@ object TestPlans {
     p +: (children(p) ++ p.subqueries).flatMap(nodes)
 
   def nodes(df: DataFrame): Seq[SparkPlan] = nodes(finalPlan(df))
+
+  /** Does a whole-stage-codegen stage in `df`'s plan hold a Project with an
+    * expression matching `p`? Only then does the generated code run. */
+  def fusedProject(df: DataFrame)(p: Expression => Boolean): Boolean =
+    nodes(df).exists {
+      case w: WholeStageCodegenExec => w.child.collect {
+        case pr: ProjectExec if pr.projectList.exists(_.exists(p)) => pr
+      }.nonEmpty
+      case _ => false
+    }
 
   /** Does a file scan in `df`'s plan carry a partition filter on `column`?
     * A filter applied after the scan prunes nothing. */

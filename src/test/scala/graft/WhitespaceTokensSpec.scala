@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expressions.WhitespaceTokens
@@ -30,12 +30,8 @@ class WhitespaceTokensSpec extends AnyFunSuite {
   }
 
   /** Is a `WhitespaceTokens` projection inside a whole-stage-codegen stage? */
-  private def fused(df: DataFrame): Boolean = TestPlans.nodes(df).exists {
-    case w: WholeStageCodegenExec => w.child.collect {
-      case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[WhitespaceTokens])) => p
-    }.nonEmpty
-    case _ => false
-  }
+  private def fused(df: DataFrame): Boolean =
+    TestPlans.fusedProject(df)(_.isInstanceOf[WhitespaceTokens])
 
   test("parity with split(s, '\\\\s+') on edge samples, codegen path") {
     val df = sampleDocs(spark).select(

@@ -1,13 +1,15 @@
 #!/usr/bin/env python3
 """Seeded oracle fuzz harness (VERDICT r14 item 5).
 
-Drives graft.tools.FuzzVerify — N seeded instances of 12 parameterizable
-query templates, each rendering its DataFrame plan AND its DuckDB SQL from
-the same drawn parameters, dumped through graft.Verify's dump — then
-hash-compares every instance with the driver-format selfcheck. On top of the per-instance verdicts it enforces a
-NON-TRIVIALITY floor: a fuzz run where many instances return zero rows
-proves nothing (the old q74 empty-result trap), so >25% empty results fail
-the run even if every compare "passed".
+Drives graft.tools.FuzzVerify — N seeded instances of 12 query templates,
+dumped through graft.Verify's dump. Nine templates draw parameters for a
+registry query's own Spark builder and oracle-SQL generator, so each seed
+checks the code the registry runs at a point off its pinned values; three
+(nation_window, qual_gate, qty_hist) build their own query. Every instance
+is then hash-compared with the driver-format selfcheck. On top of the
+per-instance verdicts it enforces NON-TRIVIALITY: an empty result
+vacuously hash-matches (the old q74 empty-result trap), so any instance
+that returns zero rows fails the run even if every compare "passed".
 
 Usage: python3 tools/fuzz_oracle.py [sfDir] [n] [seed0] [outDir]
 Reproduce one instance: same seed0/n land on the same (template, params).
