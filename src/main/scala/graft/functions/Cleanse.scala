@@ -56,8 +56,14 @@ object Cleanse {
 
   /** Exact-sum-of-doubles helper: per-row IEEE arithmetic (deterministic and
     * engine-identical) → exact decimal cast → order-independent SUM. Callers
-    * report the result back as double via `moneyReport`. */
-  def moneySum(perRow: Column): Column = sum(money(perRow))
+    * report the result back as double via `moneyReport`.
+    *
+    * Value, type (DECIMAL(28,6)) and overflow error are `sum(money(x))`'s;
+    * `expressions.ExactSum` computes them on two 64-bit limbs with one
+    * allocation-free `long` per row, where Spark's `sum` builds a
+    * `BigDecimal` for the cast and for every add. One `long` (Spark's own
+    * `DecimalAggregates` trick) would hold only 9.2e12 money at scale 6. */
+  def moneySum(perRow: Column): Column = graft.expressions.ExactSum.of(money(perRow))
 
   /** Final money REPORT: round the exact decimal sum to CENTS, then cast to
     * double. A direct DECIMAL(·,6)→DOUBLE cast is engine-portable only

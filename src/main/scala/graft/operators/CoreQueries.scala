@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Q
+import graft.expressions.ExactSum
 import graft.functions.Cleanse._
 import graft.sources.Tables
 
@@ -211,6 +212,8 @@ object CoreQueries {
       row_number().over(w).cast("long").as("order_seq"),
       lag(col("o_totalprice"), 1).over(w).as("prev_totalprice"),
       lead(col("o_orderdate"), 1).over(w).as("next_order_ts"),
+      // a running-window sum stays Spark's `sum`: `moneySum` is for
+      // grouped aggregates
       sum(money(col("o_totalprice")))
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         .cast("double").as("running_spend"),
@@ -914,20 +917,22 @@ object CoreQueries {
       .groupBy(col("l_returnflag"))
       .agg(
         count(lit(1)).as("n"),
-        sum(col("l_quantity").cast("decimal(18,6)")).cast("double").as("sx"),
-        sum(col("l_discount").cast("decimal(18,6)")).cast("double").as("sy"),
+        ExactSum.of(col("l_quantity").cast("decimal(18,6)")).cast("double").as("sx"),
+        ExactSum.of(col("l_discount").cast("decimal(18,6)")).cast("double").as("sy"),
         // Factors cast to decimal(18,2) (exact for these 2dp doubles) and
-        // multiplied in decimal: sums are exact end-to-end. Two pitfalls
+        // multiplied exactly: sums are exact end-to-end. Each `ExactSum` is
+        // `sum(a * b)` over decimal(37,4) products, result decimal(38,4),
+        // on 128-bit limbs instead of a BigDecimal per row. Two pitfalls
         // pinned here: casting the double PRODUCT at any scale is
         // probabilistically engine-divergent, and the final DECIMAL→DOUBLE
         // cast itself diverges when |unscaled| > 2^53 (DuckDB divides
         // rounded doubles, Spark rounds exactly via BigDecimal) — hence
         // correlating with the small-magnitude discount column.
-        sum(col("l_quantity").cast("decimal(18,2)") * col("l_discount").cast("decimal(18,2)"))
+        ExactSum.of(col("l_quantity").cast("decimal(18,2)"), col("l_discount").cast("decimal(18,2)"))
           .cast("double").as("sxy"),
-        sum(col("l_quantity").cast("decimal(18,2)") * col("l_quantity").cast("decimal(18,2)"))
+        ExactSum.of(col("l_quantity").cast("decimal(18,2)"), col("l_quantity").cast("decimal(18,2)"))
           .cast("double").as("sxx"),
-        sum(col("l_discount").cast("decimal(18,2)") * col("l_discount").cast("decimal(18,2)"))
+        ExactSum.of(col("l_discount").cast("decimal(18,2)"), col("l_discount").cast("decimal(18,2)"))
           .cast("double").as("syy"))
       .select(col("l_returnflag"), col("n"),
         ((col("sxy") - col("sx") * col("sy") / col("n")) / col("n")).as("covar_pop"),

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.Cleanse.money
+import graft.functions.Cleanse.moneySum
 
 /** Incremental aggregate maintenance — the materialized-view refresh path a
   * 100 TB lake needs: a dashboard aggregate over the full corpus is never
@@ -22,7 +22,7 @@ object Incremental {
       distinctCol: String): DataFrame =
     raw.groupBy(col(key)).agg(
       count(lit(1)).as("cnt"),
-      sum(money(col(valueCol))).as("sum_v"),
+      moneySum(col(valueCol)).as("sum_v"),
       min(col(valueCol)).as("min_v"),
       max(col(valueCol)).as("max_v"),
       hll_sketch_agg(col(distinctCol)).as("distinct_sk"))

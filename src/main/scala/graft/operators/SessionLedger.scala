@@ -29,9 +29,9 @@ import org.apache.spark.storage.StorageLevel
   * `release` frees the memo and checkpoint blocks and keeps the table
   * plans: they hold no blocks, and dropping them would add file listing
   * and footer reads to the next query. Everything every session of a
-  * context owns, plans included, goes when its application ends. A
-  * session dropped while the application lives keeps its plans until
-  * then.
+  * context owns, plans included, goes when its application ends, or
+  * earlier with `forget` for a session dropped while the application
+  * lives.
   *
   * Keys hold the session itself, not an identity hash that a later session
   * could reuse. Unpersisting a checkpoint makes it unrecomputable: `drop`
@@ -145,6 +145,15 @@ object SessionLedger {
   private[operators] def release(spark: SparkSession): Unit =
     entries.foreach {
       case (k, e @ (_: Memo | _: Block)) if (k._1 eq spark) && entries.remove(k, e) => free(e)
+      case _ => ()
+    }
+
+  /** Drop everything `spark` holds: free its memo and checkpoint blocks and
+    * forget its table plans, for a session discarded while its context
+    * lives. Other sessions and the context's hook stay. */
+  private[graft] def forget(spark: SparkSession): Unit =
+    entries.foreach {
+      case (k, e) if (k._1 eq spark) && entries.remove(k, e) => free(e)
       case _ => ()
     }
 

@@ -270,7 +270,7 @@ object Events {
         count(lit(1)).as("n"),
         min(col("value")).as("bin_min"),
         max(col("value")).as("bin_max"),
-        (sum(col("value").cast("decimal(18,6)")).cast("double") / count(lit(1))).as("bin_avg")),
+        (moneySum(col("value")).cast("double") / count(lit(1))).as("bin_avg")),
     Some("""SELECT CAST(floor(value / 50) AS BIGINT) AS bin,
       |  COUNT(*) AS n, MIN(value) AS bin_min, MAX(value) AS bin_max,
       |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS bin_avg

@@ -247,10 +247,13 @@ object FuzzVerify {
     tJaccardThresh, tLshThresh)
 
   /** Deterministic instance list: instance i uses template i%12 and RNG
-    * seed seed0+i — (seed0, n) fully reproduce a run. */
+    * seed splitmix(seed0+i) — (seed0, n) fully reproduce a run. The mix
+    * matters: `java.util.Random` seeds that differ only in low bits give
+    * nearly the same first draw, so `seed0 + i` alone let `brand_topk`
+    * draw only k = 6 or 7 of 1–8. */
   def instances(seed0: Long, n: Int): Seq[Q] =
     (0 until n).map { i =>
-      val q = templates(i % templates.length)(new Random(seed0 + i))
+      val q = templates(i % templates.length)(new Random(graft.functions.Mix.splitmix(seed0 + i)))
       q.copy(name = f"fz${i % templates.length}%02d_${q.name}_s${seed0 + i}")
     }
 

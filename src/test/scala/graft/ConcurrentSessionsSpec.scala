@@ -71,6 +71,7 @@ class ConcurrentSessionsSpec extends AnyFunSuite {
     sessions.foreach(s =>
       assert(!SessionLedger.view(s).exists(_.startsWith("memo:")),
         "memo keys must not outlive release"))
+    sessions.foreach(SessionLedger.forget)
     // releaseCaches unpersists async (blocking=false): poll briefly before
     // declaring a leak
     val deadline = System.nanoTime() + 30.seconds.toNanos

@@ -54,6 +54,19 @@ class FuzzVerifySpec extends AnyFunSuite {
     }
   }
 
+  test("first draws spread over their whole grid (mixed per-instance seeds)") {
+    val insts = FuzzVerify.instances(42L, 600)
+    val lshT = "b\\.nrm\\) >= (0\\.[0-9]+)".r
+    val thresholds = insts.filter(_.name.contains("lsh_thresh"))
+      .flatMap(q => lshT.findFirstMatchIn(q.oracle.get).map(t => math.round(t.group(1).toDouble * 20)))
+      .toSet
+    assert(thresholds == Set(5L, 6L, 7L, 8L), thresholds) // 0.25, 0.30, 0.35, 0.40
+    val topK = "brand_rank <= ([0-9]+)".r
+    val ks = insts.filter(_.name.contains("brand_topk"))
+      .flatMap(q => topK.findFirstMatchIn(q.oracle.get).map(_.group(1).toInt)).toSet
+    assert(ks == (1 to 8).toSet, ks)
+  }
+
   test("every template emits SQL that names at least one base table") {
     val tables = Seq("lineitem", "orders", "part", "customer", "documents",
       "embeddings")

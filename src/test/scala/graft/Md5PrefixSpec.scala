@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expressions.Md5Prefix
+import graft.operators.SessionLedger
 
 /** Value-parity of the native md5-prefix long against the
   * `conv(substring(md5(x), 1, n), 16, 10)` composite it replaces — the
@@ -67,6 +68,7 @@ class Md5PrefixSpec extends AnyFunSuite {
     val rows = df.collect()
     assert(rows.length == samples.length)
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))
+    SessionLedger.forget(s)
   }
 
   test("NULL in, NULL out; codegen projection stays fused") {

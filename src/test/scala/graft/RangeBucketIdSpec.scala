@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expressions.RangeBucketId
-import graft.operators.Ranks
+import graft.operators.{Ranks, SessionLedger}
 
 /** The constant-code-size bucket search behind Ranks.withGlobalOrder.
   * The load-bearing property is the sf100 find: bucket COUNT must never
@@ -102,6 +102,7 @@ class RangeBucketIdSpec extends AnyFunSuite {
     val df = mixedBuckets(s)
     assert(!TestPlans.nodes(df).exists(_.isInstanceOf[WholeStageCodegenExec]))
     assertMixedBuckets(df)
+    SessionLedger.forget(s)
   }
 
   test("withGlobalOrder end-to-end at a 256-partition session stays fused") {
@@ -127,5 +128,6 @@ class RangeBucketIdSpec extends AnyFunSuite {
     val expected = got.map(t => (t._1, t._2)).sorted.zipWithIndex
       .map { case ((k, id), i) => (k, id, i + 1L) }
     assert(got.sortBy(_._3).sameElements(expected))
+    SessionLedger.forget(s2)
   }
 }

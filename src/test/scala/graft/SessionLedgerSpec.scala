@@ -56,7 +56,7 @@ class SessionLedgerSpec extends AnyFunSuite {
 
       assert(rows(Dedup.q32MinHashLsh.run(s, dir)) == q32)
       assert(SessionLedger.view(s).exists(_.startsWith("memo:")), "q32 must re-memoize")
-    } finally Dedup.releaseCaches(s)
+    } finally SessionLedger.forget(s)
   }
 
   test("20 child sessions reading a table add at most one listener to the context") {
@@ -67,6 +67,15 @@ class SessionLedgerSpec extends AnyFunSuite {
     assert(ListenerBusProbe.listeners(sc).size <= before + 1)
     assert(hooks.size == 1)
     children.foreach(c => assert(SessionLedger.view(c) == Set(s"table:$dir/documents")))
+
+    // discarding the children drops their plans; the parent's and the hook stay
+    Tables(TestSpark.spark, dir, "documents")
+    val parent = SessionLedger.view(TestSpark.spark)
+    children.foreach(SessionLedger.forget)
+    children.foreach(c => assert(SessionLedger.view(c).isEmpty))
+    assert(SessionLedger.view(TestSpark.spark) == parent)
+    assert(parent.contains(s"table:$dir/documents"))
+    assert(hooks.size == 1)
   }
 
   test("application end frees and forgets the entries of every session on the context") {

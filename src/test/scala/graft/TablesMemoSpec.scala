@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.SessionLedger
 import graft.sources.Tables
 
 /** `Tables(spark, dir, name)` memoizes the table DataFrame per
@@ -27,5 +28,6 @@ class TablesMemoSpec extends AnyFunSuite {
     assert(a ne Tables(spark, TestSpark.sf0001, "orders"))
     assert(a.sparkSession eq other)
     assert(Tables(other, TestSpark.sf0001, "orders") eq a)
+    SessionLedger.forget(other)
   }
 }

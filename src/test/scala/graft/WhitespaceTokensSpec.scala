@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expressions.WhitespaceTokens
+import graft.operators.SessionLedger
 
 /** Value-parity of the native byte-scan tokenizer against the
   * `split(s, "\\s+")` built-in it replaces under TextAnalysis.words —
@@ -59,6 +60,7 @@ class WhitespaceTokensSpec extends AnyFunSuite {
     val rows = df.collect()
     assert(rows.length == samples.length)
     rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
+    SessionLedger.forget(s)
   }
 
   test("JVM-level parity with String.split on the same samples") {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.expressions.Winnowing
-import graft.operators.TextAnalysis
+import graft.operators.{SessionLedger, TextAnalysis}
 import graft.sources.Tables
 
 /** `graft_winnowing` against the relational plan q39 ran before it: explode
@@ -102,6 +102,7 @@ class WinnowingSpec extends AnyFunSuite {
     val got = winnowed(edgeDocs(s))
     assert(!TestPlans.nodes(got).exists(_.isInstanceOf[WholeStageCodegenExec]))
     assert(rows(got) == rows(reference(edgeDocs(spark))))
+    SessionLedger.forget(s)
   }
 
   test("NULL text gives NULL; fewer than k code points give (0, NULL, NULL)") {
