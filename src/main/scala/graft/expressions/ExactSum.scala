@@ -64,10 +64,9 @@ case class ExactSum(children: Seq[Expression], ansi: Boolean = SQLConf.get.ansiE
   override lazy val aggBufferAttributes: Seq[AttributeReference] = Seq(hi, lo, n)
   override lazy val initialValues: Seq[Expression] = Seq.fill(3)(Literal(0L))
   override lazy val updateExpressions: Seq[Expression] =
-    (0 until 3).map(AddLimbs(_, merge = false, aggBufferAttributes ++ children.map(UnscaledTerm)))
+    (0 until 3).map(AddLimbs(_, aggBufferAttributes ++ children.map(UnscaledTerm)))
   override lazy val mergeExpressions: Seq[Expression] =
-    (0 until 3).map(AddLimbs(_, merge = true,
-      Seq(hi.left, lo.left, n.left, hi.right, lo.right, n.right)))
+    (0 until 3).map(AddLimbs(_, Seq(hi.left, lo.left, n.left, hi.right, lo.right, n.right)))
   override lazy val evaluateExpression: Expression =
     If(EqualTo(n, Literal(0L)), Literal(null, dataType),
       CheckOverflowInSum(LimbsValue(hi, lo, n, dataType), dataType, !ansi,
@@ -191,9 +190,10 @@ case class UnscaledTerm(child: Expression) extends UnaryExpression {
 
 /** Limb `limb` (0 = hi, 1 = lo, 2 = n) of buffer + addend. `children` are
   * the buffer's (hi, lo, n), then the addend: another buffer's (hi, lo, n)
-  * when `merge`, else one row's terms, one or two nullable unscaled longs
-  * whose product is added; a NULL term leaves the buffer as it is. */
-case class AddLimbs(limb: Int, merge: Boolean, children: Seq[Expression]) extends Expression {
+  * (merge, six children), else one row's terms, one or two nullable
+  * unscaled longs whose product is added; a NULL term leaves the buffer as
+  * it is. */
+case class AddLimbs(limb: Int, children: Seq[Expression]) extends Expression {
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
   override def prettyName: String = "add_limbs"
@@ -202,7 +202,7 @@ case class AddLimbs(limb: Int, merge: Boolean, children: Seq[Expression]) extend
     def at(i: Int): Any = children(i).eval(input)
     val (aHi, aLo, aN) = (at(0).asInstanceOf[Long], at(1).asInstanceOf[Long], at(2).asInstanceOf[Long])
     val (bHi, bLo, bN) =
-      if (merge) (at(3).asInstanceOf[Long], at(4).asInstanceOf[Long], at(5).asInstanceOf[Long])
+      if (children.size == 6) (at(3).asInstanceOf[Long], at(4).asInstanceOf[Long], at(5).asInstanceOf[Long])
       else children.drop(3).map(_.eval(input)) match {
         case Seq(t: Long) => (t >> 63, t, 1L)
         case Seq(a: Long, b: Long) => (Math.multiplyHigh(a, b), a * b, 1L)
@@ -219,7 +219,7 @@ case class AddLimbs(limb: Int, merge: Boolean, children: Seq[Expression]) extend
     val in = children.map(_.genCode(ctx))
     val Seq(aHi, aLo, aN) = in.take(3).map(_.value.toString)
     val (skip, bHi, bLo, bN) = in.drop(3) match {
-      case Seq(h, l, c) if merge => ("false", h.value.toString, l.value.toString, c.value.toString)
+      case Seq(h, l, c) => ("false", h.value.toString, l.value.toString, c.value.toString)
       case Seq(t) => (t.isNull.toString, s"(${t.value} >> 63)", t.value.toString, "1L")
       case Seq(a, b) => (s"${a.isNull} || ${b.isNull}", s"Math.multiplyHigh(${a.value}, ${b.value})",
         s"(${a.value} * ${b.value})", "1L")

@@ -143,17 +143,17 @@ object SessionLedger {
   /** Unpersist every memo and checkpoint block of `spark`; its table plans
     * stay. */
   private[operators] def release(spark: SparkSession): Unit =
-    entries.foreach {
-      case (k, e @ (_: Memo | _: Block)) if (k._1 eq spark) && entries.remove(k, e) => free(e)
-      case _ => ()
-    }
+    dropWhere(spark, { case _: Memo | _: Block => true; case _ => false })
 
   /** Drop everything `spark` holds: free its memo and checkpoint blocks and
     * forget its table plans, for a session discarded while its context
     * lives. Other sessions and the context's hook stay. */
-  private[graft] def forget(spark: SparkSession): Unit =
+  private[graft] def forget(spark: SparkSession): Unit = dropWhere(spark, _ => true)
+
+  /** Remove `spark`'s entries that `pick` selects, freeing their blocks. */
+  private def dropWhere(spark: SparkSession, pick: Entry => Boolean): Unit =
     entries.foreach {
-      case (k, e) if (k._1 eq spark) && entries.remove(k, e) => free(e)
+      case (k, e) if (k._1 eq spark) && pick(e) && entries.remove(k, e) => free(e)
       case _ => ()
     }
 

@@ -71,7 +71,6 @@ class ConcurrentSessionsSpec extends AnyFunSuite {
     sessions.foreach(s =>
       assert(!SessionLedger.view(s).exists(_.startsWith("memo:")),
         "memo keys must not outlive release"))
-    sessions.foreach(SessionLedger.forget)
     // releaseCaches unpersists async (blocking=false): poll briefly before
     // declaring a leak
     val deadline = System.nanoTime() + 30.seconds.toNanos
@@ -82,5 +81,6 @@ class ConcurrentSessionsSpec extends AnyFunSuite {
     }
     assert(leaked.isEmpty,
       s"persisted blocks leaked past releaseCaches: ids=$leaked")
+    sessions.foreach(SessionLedger.forget)
   }
 }
